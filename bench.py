@@ -8,7 +8,7 @@ $SPARK_GRAFT_SF_DIR.
 
 Env:
   SPARK_GRAFT_SF_DIR   parquet dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     local[N] cores (default 32)
+  SPARK_GRAFT_CPUS     local[N] cores (default: the CPUs this process may use)
   BENCH_CORPUS_DOCS    synthetic corpus size (default 500_000)
 
 Two-parallelism scaling evidence (BASELINE.md protocol): run this script
@@ -31,7 +31,7 @@ from edgesearch_spark.build import IndexConfig, build_index  # noqa: E402
 from edgesearch_spark.corpus import generate_corpus  # noqa: E402
 from edgesearch_spark.engine import SearchEngine  # noqa: E402
 from edgesearch_spark.oracle import Query  # noqa: E402
-from edgesearch_spark.session import get_spark  # noqa: E402
+from edgesearch_spark.session import get_spark, host_cores  # noqa: E402
 
 QUERY_BATCH = [
     ("bool_require_hot", Query.make(require=["import", "return"])),
@@ -142,7 +142,7 @@ def _prev_round_control(corpus_path: str, n_corpus: int, cpus: int) -> dict | No
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cores())
     n_corpus = int(os.environ.get("BENCH_CORPUS_DOCS", "500000"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark(app_name="edgesearch-bench", cores=cpus, shuffle_partitions=cpus)

@@ -12,7 +12,7 @@ numbers can be attributed to one change at a time:
   explain <name>              print a contract query's formatted plan
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
-(default 32), BENCH_CORPUS_DOCS (default 500_000).
+(default: the CPUs this process may use), BENCH_CORPUS_DOCS (default 500_000).
 """
 
 from __future__ import annotations
@@ -27,10 +27,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from edgesearch_spark.build import IndexConfig, build_index  # noqa: E402
 from edgesearch_spark.corpus import generate_corpus  # noqa: E402
-from edgesearch_spark.session import get_spark  # noqa: E402
+from edgesearch_spark.session import get_spark, host_cores  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cores())
 N_CORPUS = int(os.environ.get("BENCH_CORPUS_DOCS", "500000"))
 
 

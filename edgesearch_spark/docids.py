@@ -29,6 +29,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .session import local_frame
+
 
 def assign_doc_ids(
     df: DataFrame,
@@ -62,7 +64,7 @@ def assign_doc_ids(
         offsets.append((pid, acc))
         acc += counts[pid]
     spark = df.sparkSession
-    off_df = spark.createDataFrame(offsets or [(0, 0)], "__pid int, __base long")
+    off_df = local_frame(spark, offsets or [(0, 0)], "__pid int, __base long")
     # Pass 2: partition-local rank + broadcast-joined base offset. The rank
     # is the row's POSITION within its (sorted, cached) partition — read
     # straight off monotonically_increasing_id's low 33 bits instead of a

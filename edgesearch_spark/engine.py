@@ -16,7 +16,7 @@ Mirrors the reference's query lifecycle (SURVEY.md §3.2) Spark-style:
   missing-term rules / default results         ← script/src/main.ts:368-389
   boolean kernel AND/OR/ANDNOT                 ← wasm/index.c:76-104
   rank-select pagination                       ← wasm/index.c:115-128
-  doc fetch join                               ← script/src/main.ts:408-416
+  doc fetch (doc_id IN pushed into the scan)   ← script/src/main.ts:408-416
 
 The kernel is numpy over decoded posting blocks. Intersections decode ONLY
 the blocks whose [min,max] docID range can contain a candidate (the
@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from .build import idf_value, load_stats
 from .codec import PostingBlocks, concat_blocks, decode_all, decode_block
 from .oracle import Query, QueryTooLarge, SearchResult
+from .session import local_frame
 
 # Stored block/shard max weights are float32 while exact scores are float64:
 # round-to-nearest can put the stored bound up to 0.5 ulp BELOW the true
@@ -1201,10 +1202,11 @@ class SearchEngine:
         the per-term constant idf·(k1+1) is computed driver-side in Python
         (column ``c``), knorm associates as k1·((1−b) + (b·dl)/avgdl),
         w = tf/(tf+knorm) — and the per-doc sum folds the partials in
-        CALLER TERM ORDER via a sorted-struct aggregate, not F.sum (whose
+        CALLER TERM ORDER via per-ord conditional sums, not one F.sum (whose
         partition-dependent add order reorders float sums). A doc missing a
-        contain term contributes no struct for it, exactly the kernel's
-        tf>0 mask."""
+        contain term contributes 0.0 for it, exactly the kernel's tf>0
+        mask. ``tmeta``, the per-term literal table, is a local relation
+        (``local_frame``): the plan holds no Python-RDD scan."""
         require = list(dict.fromkeys(q.require))
         contain = [t for t in dict.fromkeys(q.contain) if tp[t] is not None]
         exclude = [t for t in dict.fromkeys(q.exclude) if tp[t] is not None]
@@ -1213,7 +1215,8 @@ class SearchEngine:
         # order _score_docs sums in (fetch_terms preserves input order)
         score_order = {t: i for i, t in enumerate(dict.fromkeys(list(q.require) + list(q.contain)))}
         rset, cset, eset = set(require), set(contain), set(exclude)
-        tmeta = self.spark.createDataFrame(
+        tmeta = local_frame(
+            self.spark,
             [
                 (t, float(self.idf(tp[t].df)) * (self.k1 + 1),
                  score_order.get(t, -1), t in rset, t in cset, t in eset,
@@ -1550,8 +1553,14 @@ class SearchEngine:
 
     # ---- doc fetch (reference Q15: join result IDs to the docs store) ----
     def fetch_docs(self, doc_ids: list[int]) -> DataFrame:
-        ids_df = self.spark.createDataFrame([(int(d),) for d in doc_ids] or [(None,)], "doc_id long")
-        return self._docs_df.join(F.broadcast(ids_df.filter(F.col("doc_id").isNotNull())), "doc_id")
+        """The stored rows of a page's docIDs, each once and in no set
+        order, as a ``doc_id IN (…)`` filter on the docs store. The store
+        is docID-range-sorted parquet, so the predicate is pushed into the
+        scan and row-group min/max stats skip everything outside the page:
+        one JVM-only Spark job with no ids frame and no join. An empty list
+        plans to an empty relation and runs no job. For ID sets too large
+        to inline in a plan, use ``fetch_docs_df``."""
+        return self._docs_df.filter(F.col("doc_id").isin([int(d) for d in doc_ids]))
 
     def fetch_docs_df(self, ids_df: DataFrame, prune_range: bool = False) -> DataFrame:
         """Join a docID DataFrame (e.g. search_df output) to the docs store

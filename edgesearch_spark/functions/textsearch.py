@@ -24,6 +24,7 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..tokenizer import _tokens_col
 
 _WORD = re.compile(r"[a-zA-Z0-9]+")
@@ -295,7 +296,7 @@ def index_regex_search(engine, pattern: str, content_col: str = "content",
         cands = ol_df
     elif tri_pt is None:
         mapping = [(t, gi) for gi, (_, ts) in enumerate(groups) for t in ts]
-        map_df = spark.createDataFrame(mapping, "term string, lit long")
+        map_df = local_frame(spark, mapping, "term string, lit long")
         all_terms = sorted({t for t, _ in mapping})
         cands = (
             engine._decoded_for(all_terms).select("term", "doc_id")
@@ -313,7 +314,7 @@ def index_regex_search(engine, pattern: str, content_col: str = "content",
         parts = []
         dict_map = [(t, gi) for gi, (_, ts) in enumerate(groups) for t in ts]
         if dict_map:
-            map_df = spark.createDataFrame(dict_map, "term string, lit long")
+            map_df = local_frame(spark, dict_map, "term string, lit long")
             all_terms = sorted({t for t, _ in dict_map})
             parts.append(
                 engine._decoded_for(all_terms).select("term", "doc_id")
@@ -324,8 +325,8 @@ def index_regex_search(engine, pattern: str, content_col: str = "content",
             tris = sorted({lit.lower()[i:i + 3] for i in range(len(lit) - 2)})
             tri_map.extend((t, gi) for t in tris)
             tri_need.append((gi, len(tris)))
-        tmap_df = spark.createDataFrame(tri_map, "term string, lit long")
-        need_df = spark.createDataFrame(tri_need, "lit long, need long")
+        tmap_df = local_frame(spark, tri_map, "term string, lit long")
+        need_df = local_frame(spark, tri_need, "lit long, need long")
         all_tris = sorted({t for t, _ in tri_map})
         parts.append(
             engine._decoded_for(all_tris, postings_df=tri_pt)

@@ -19,6 +19,8 @@ path is exercised by the `idx_*` entries and by the pytest goldens
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -34,6 +36,16 @@ TOKEN_RE_SQL = "[^a-z0-9]+"
 
 
 # ---------- shared building blocks (Spark side) ----------
+
+def token_count_col(text: F.Column, term: str) -> F.Column:
+    """Occurrences of ``term`` as a whole token of lower(``text``). The
+    lookarounds reproduce the tokenizer's split boundaries (and keep a
+    longer alphanumeric run from matching); ``\\Q…\\E`` quotes the term,
+    so a regex metacharacter in it matches only itself."""
+    quoted = "\\Q" + term.replace("\\E", "\\E\\\\E\\Q") + "\\E"
+    return F.regexp_count(
+        F.lower(text), F.lit(f"(?<![a-zA-Z0-9]){quoted}(?![a-zA-Z0-9])")).cast("long")
+
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The documents table, spread to full parallelism when undersplit.
@@ -289,16 +301,15 @@ def q_bm25_topk(spark, sf_dir):
     exactly at sf0.1 and sf1.0)."""
     from ..tokenizer import doc_length_col
 
+    bad = [t for t in BM25_TERMS if not re.fullmatch("[a-z0-9]+", t)]
+    if bad:
+        # the oracle SQL inlines the terms as string literals, and a term
+        # the tokenizer cannot emit would make the two sides disagree
+        raise ValueError(f"BM25_TERMS must be lowercase alphanumeric tokens: {bad}")
     docs = _docs(spark, sf_dir)
-
-    def tf_col(t: str) -> F.Column:
-        return F.regexp_count(
-            F.lower(F.col("text")),
-            F.lit(f"(?<![a-zA-Z0-9]){t}(?![a-zA-Z0-9])")).cast("long")
-
     stat = docs.select(
         doc_length_col("text").alias("dl"),
-        *[tf_col(t).alias(f"tf{i}") for i, t in enumerate(BM25_TERMS)],
+        *[token_count_col(F.col("text"), t).alias(f"tf{i}") for i, t in enumerate(BM25_TERMS)],
     ).agg(
         F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"),
         *[F.sum((F.col(f"tf{i}") > 0).cast("long")).alias(f"df{i}")
@@ -320,7 +331,7 @@ def q_bm25_topk(spark, sf_dir):
 
     wide = docs.select(
         "doc_id", doc_length_col("text").alias("dl"),
-        *[tf_col(t).alias(f"tf{i}") for i, t in enumerate(BM25_TERMS)],
+        *[token_count_col(F.col("text"), t).alias(f"tf{i}") for i, t in enumerate(BM25_TERMS)],
     )
     score = None
     for i in range(len(BM25_TERMS)):

@@ -11,7 +11,7 @@ import os
 import tempfile
 import zipfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def package_zip() -> str:
@@ -45,13 +45,32 @@ _MALLOC_TUNING = {
 }
 
 
+def host_cores() -> int:
+    """CPUs this process may run on (``nproc``), not the machine's total."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API (macOS)
+        return os.cpu_count() or 1
+
+
+def host_driver_memory() -> str:
+    """Half the host's physical memory, as a ``spark.driver.memory`` value.
+    In local mode the driver heap holds every executor too; the other half
+    is left to the Python workers and the page cache."""
+    total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1 << 20)
+    return f"{max(1024, total_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "edgesearch_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Local session sized to the host unless told otherwise: ``cores``
+    defaults to ``SPARK_GRAFT_CPUS``, else the CPUs this process may use;
+    driver memory to ``SPARK_DRIVER_MEMORY``, else half the host's RAM."""
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS") or host_cores())
     shuffle_partitions = shuffle_partitions or cores
     for k, v in _MALLOC_TUNING.items():
         os.environ.setdefault(k, v)  # local-mode python daemon inherits this
@@ -64,7 +83,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or host_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # 10k-row Arrow batches fragment pandas-UDF work into thousands of
@@ -87,3 +106,21 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     spark.sparkContext.addPyFile(package_zip())
     return spark
+
+
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """A driver-side literal table (``rows`` of tuples in ``ddl`` column
+    order) as a local relation. Built from a ``pyarrow.Table``, it plans as
+    a ``LocalTableScan``: no Spark job and no Python worker, where
+    ``createDataFrame(list)`` plans a pickled Python RDD (``ExistingRDD``)
+    whose broadcast runs a job through a Python worker. Each column is
+    converted to exactly its DDL type, so a ``double`` column carries the
+    driver's float64 values bit for bit."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = to_arrow_schema(StructType.fromDDL(ddl))
+    cols = list(zip(*rows)) or [()] * len(schema)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema))

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def _records_with_position(spark: SparkSession, path: str) -> DataFrame:
     """NUL-delimited records + exact global position, computed scalably
@@ -89,7 +91,7 @@ def read_document_terms_file(spark: SparkSession, path: str) -> DataFrame:
     for pid in sorted(per_part):
         offsets.append((pid, acc))
         acc += per_part[pid]
-    off_df = spark.createDataFrame(offsets or [(0, 0)], "__pid int, __base long")
+    off_df = local_frame(spark, offsets or [(0, 0)], "__pid int, __base long")
     from pyspark.sql import Window
 
     w = Window.partitionBy("__pid").orderBy("pos")

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..build import IndexConfig, build_index
 from ..engine import SearchEngine
+from ..session import local_frame
 
 
 class IncrementalIndexer:
@@ -167,7 +168,7 @@ class IncrementalIndexer:
         if isinstance(doc_ids, DataFrame):
             df = doc_ids.select(F.col("doc_id").cast("long"))
         else:
-            df = self.spark.createDataFrame([(int(d),) for d in doc_ids], "doc_id long")
+            df = local_frame(self.spark, [(int(d),) for d in doc_ids], "doc_id long")
         df.coalesce(1).write.mode("append").parquet(self._tombstone_dir)
 
     def deleted_ids(self) -> list[int]:
@@ -651,8 +652,8 @@ class MultiSegmentEngine(SearchEngine):
         if self._tomb_df is not None:
             return self._tomb_df  # distributed mode: never broadcast-hinted
         # small driver set: broadcast the anti-join side
-        return F.broadcast(self.spark.createDataFrame(
-            [(int(d),) for d in self._deleted], "doc_id long"))
+        return F.broadcast(local_frame(
+            self.spark, [(int(d),) for d in self._deleted], "doc_id long"))
 
     def _matched_docs_df(self, q, tp, scored: bool):
         out = super()._matched_docs_df(q, tp, scored)
@@ -713,8 +714,8 @@ class MultiSegmentEngine(SearchEngine):
                 sh = p._shards_for_docs(self._deleted)
                 est += int(p._sbytes[sh].sum())
         if est > self.union_probe_budget_bytes:
-            dead_df = self.spark.createDataFrame(
-                [(int(d),) for d in self._deleted], "doc_id long")
+            dead_df = local_frame(
+                self.spark, [(int(d),) for d in self._deleted], "doc_id long")
             dead = (self._decoded_for([p.term for p in present])
                     .select("doc_id").distinct()
                     .join(F.broadcast(dead_df), "doc_id", "left_semi").count())

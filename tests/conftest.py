@@ -12,6 +12,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from edgesearch_spark.session import get_spark
 
-    s = get_spark(app_name="edgesearch-tests", cores=8, shuffle_partitions=8)
+    # local[SPARK_GRAFT_CPUS], else local[<CPUs this process may use>]
+    s = get_spark(app_name="edgesearch-tests")
     yield s
     s.stop()

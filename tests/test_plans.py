@@ -6,11 +6,14 @@
 - projections prune columns at the scan
 - the per-term df join in BM25 broadcasts (no shuffle of the big side)
 - the relational hot paths contain no Python eval nodes
+- a page's doc fetch is one pushed-down docs scan (no join, one job)
+- driver-side literal tables are local relations, never Python RDDs
 """
 
 import contextlib
 import io
 import shutil
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -61,6 +64,20 @@ def test_bm25_topk_plan_is_joinless_single_pass(spark):
     assert "HashAggregate" not in plan, plan
 
 
+def test_bm25_topk_term_is_quoted_in_regex(spark, monkeypatch):
+    """A regex metacharacter in a term matches only itself ('a.b' never
+    counts 'axb'), and q_bm25_topk rejects terms the tokenizer cannot
+    emit before it plans anything."""
+    from edgesearch_spark.plans import contract
+
+    df = spark.createDataFrame([("axb a.b A.B xa.b",)], "text string")
+    n = df.select(contract.token_count_col(F.col("text"), "a.b").alias("n")).first()["n"]
+    assert n == 2
+    monkeypatch.setattr(contract, "BM25_TERMS", ["spark", "c++"])
+    with pytest.raises(ValueError, match="c\\+\\+"):
+        contract.q_bm25_topk(spark, "/nonexistent")
+
+
 def test_relational_paths_have_no_python_eval(spark):
     from edgesearch_spark.plans.contract import q_bool_mixed, q_term_df, q_tokenize_pairs
 
@@ -69,12 +86,172 @@ def test_relational_paths_have_no_python_eval(spark):
         assert "EvalPython" not in plan, (q.__name__, plan)
 
 
-def test_doc_fetch_join_broadcasts(spark, index_dir):
+def jobs_run(spark, action):
+    """(action's result, Spark jobs it ran), counted in a fresh job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@contextlib.contextmanager
+def literal_frames(spark):
+    """Collects every frame built from driver-side data (anything but an
+    RDD) through ``createDataFrame`` inside the block."""
+    from pyspark import RDD
+
+    frames = []
+    cls = type(spark)
+    orig = cls.createDataFrame
+
+    def spy(self, data, *a, **kw):
+        df = orig(self, data, *a, **kw)
+        if not isinstance(data, RDD):
+            frames.append(df)
+        return df
+
+    cls.createDataFrame = spy
+    try:
+        yield frames
+    finally:
+        cls.createDataFrame = orig
+
+
+def assert_local_relations(frames):
+    """Each frame plans as a LocalTableScan — no Python-RDD scan, so using
+    it costs no Spark job and no Python worker."""
+    assert frames
+    for df in frames:
+        plan = plan_of(df)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
+def test_doc_fetch_is_one_pushed_down_scan(spark, index_dir):
+    """A page's doc fetch is a doc_id IN filter pushed into the docs scan:
+    no ids frame, no join, no exchange, one Spark job — and none for an
+    empty page."""
     from edgesearch_spark.engine import SearchEngine
 
     eng = SearchEngine(spark, index_dir)
-    plan = plan_of(eng.fetch_docs([1, 2, 3]))
-    assert "BroadcastHashJoin" in plan, plan
+    page = [7, 1, 42, 3]
+    df = eng.fetch_docs(page)
+    rows, jobs = jobs_run(spark, df.collect)
+    assert sorted(r["doc_id"] for r in rows) == sorted(page)
+    assert jobs == 1, jobs
+    plan = plan_of(df)
+    for node in ("Join", "Exchange", "ExistingRDD", "Python"):
+        assert node not in plan, (node, plan)
+    pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
+    assert pushed and "In(doc_id" in pushed[0], plan
+
+    rows, jobs = jobs_run(spark, eng.fetch_docs([]).collect)
+    assert (rows, jobs) == ([], 0)
+    # each stored doc once, however often its id is asked for
+    rows = eng.fetch_docs([3, 3, 1, 3]).collect()
+    assert sorted(r["doc_id"] for r in rows) == [1, 3]
+
+
+def test_distributed_route_has_no_python_rdd(spark, index_dir):
+    """The distributed route's per-term literal table is a local relation:
+    the executed plan holds no Python-RDD scan, and its only Python nodes
+    are the posting decode's MapInPandas."""
+    import re
+
+    from edgesearch_spark.engine import SearchEngine
+    from edgesearch_spark.oracle import Query
+
+    eng = SearchEngine(spark, index_dir)
+    q = Query.make(require=["import"], contain=["return", "def"], k=5)
+    tp = eng.fetch_terms(list(q.require) + list(q.contain))
+    with literal_frames(spark) as frames:
+        df = eng._matched_docs_df(q, tp, scored=True)
+    assert_local_relations(frames)
+    assert df.collect()
+    plan = plan_of(df)  # the executed (final adaptive) plan
+    assert "ExistingRDD" not in plan, plan
+    assert set(re.findall(r"\b\w*Python\w*|\bMapIn\w+", plan)) == {"MapInPandas"}, plan
+
+
+def test_driver_literal_tables_are_local_relations(spark, tmp_path):
+    """The build's partition-offset tables (docID ranks, NUL-stream term
+    docIDs) are local relations, not Python RDDs."""
+    from edgesearch_spark.docids import assign_doc_ids
+    from edgesearch_spark.sources.nul_stream import read_document_terms_file
+
+    with literal_frames(spark) as frames:
+        out = assign_doc_ids(generate_corpus(spark, 50, seed=3), ("repo", "path", "commit"))
+    assert sorted(r["doc_id"] for r in out.select("doc_id").collect()) == list(range(50))
+    out._docid_cache.unpersist()
+    assert_local_relations(frames)
+
+    path = str(tmp_path / "document-terms")
+    with open(path, "wb") as f:
+        f.write(b"a\x00b\x00\x00c\x00\x00")
+    with literal_frames(spark) as frames:
+        terms = read_document_terms_file(spark, path)
+    assert sorted((r["doc_id"], r["term"]) for r in terms.collect()) == [(0, "a"), (0, "b"), (1, "c")]
+    assert_local_relations(frames)
+
+
+def test_regex_literal_maps_are_local_relations(spark, index_dir, tmp_path):
+    """index_regex_search's literal maps — the dictionary map alone, and
+    the dictionary + trigram maps of an index with overlong runs — are
+    local relations."""
+    from edgesearch_spark.engine import SearchEngine
+    from edgesearch_spark.functions.textsearch import index_regex_search, regex_search
+
+    eng = SearchEngine(spark, index_dir)
+    assert eng.oltrigrams_df() is None
+    with literal_frames(spark) as frames:
+        got = index_regex_search(eng, r"impor[a-z]+ ").select("doc_id")
+    assert_local_relations(frames)
+    assert [f.columns for f in frames] == [["term", "lit"]]
+    want = regex_search(eng._docs_df, r"impor[a-z]+ ").select("doc_id")
+    assert sorted(got.collect()) == sorted(want.collect())
+
+    rows = [(0, "x" * 280 + "needle" + "y" * 280), (1, "a needle here"), (2, "plain")]
+    df = spark.createDataFrame(rows, "doc_id long, content string")
+    out = str(tmp_path / "ol")
+    build_index(spark, df, out, IndexConfig(block_size=8, salt_shift=4),
+                doc_id_col="doc_id", content_col="content")
+    ol = SearchEngine(spark, out)
+    assert ol.oltrigrams_df() is not None
+    with literal_frames(spark) as frames:
+        got = index_regex_search(ol, r"needle").select("doc_id")
+    assert_local_relations(frames)
+    assert sorted(f.columns for f in frames) == [["lit", "need"], ["term", "lit"], ["term", "lit"]]
+    assert sorted(r["doc_id"] for r in got.collect()) == [0, 1]
+
+
+def test_tombstone_frames_are_local_relations(spark, tmp_path):
+    """The delete list, the anti-join tombstone set and the distributed
+    |union ∩ tombstones| probe's set are local relations."""
+    from edgesearch_spark.oracle import Query
+    from edgesearch_spark.streaming.incremental import IncrementalIndexer
+
+    idx = IncrementalIndexer(spark, str(tmp_path / "inc"), IndexConfig(block_size=16, salt_shift=7),
+                             order_cols=("path",), content_col="content")
+    rows = [(f"d{i:03d}", f"score word{i % 7}") for i in range(60)]
+    idx.ingest_batch(spark.createDataFrame(rows, "path string, content string"), 0)
+    dead = [0, 3, 6]
+    with literal_frames(spark) as frames:
+        idx.delete_docs(dead)
+    assert_local_relations(frames)
+
+    eng = idx.engine()
+    eng.union_probe_budget_bytes = -1  # count the dead union members on the cluster
+    live = [d for d in range(60) if d not in dead]
+    with literal_frames(spark) as frames:
+        got = sorted(r["doc_id"] for r in eng.search_df(Query.make(contain=["score"])).collect())
+        res = eng.search_bm25_wand(Query.make(contain=["score"], k=5))
+    assert got == live and res.total == len(live)
+    assert_local_relations(frames)
+    # tmeta, the anti-join tombstones, the probe's dead set
+    assert sorted(f.columns for f in frames).count(["doc_id"]) == 2, [f.columns for f in frames]
 
 
 def test_lazy_metadata_scan_prunes_payload_column(spark, index_dir):

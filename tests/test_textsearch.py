@@ -92,11 +92,18 @@ def test_search_df_never_materializes_candidates(spark, docs, tmp_path_factory):
                 doc_id_col="doc_id", content_col="content")
     eng = SearchEngine(spark, out)
 
+    import pandas as pd
+    import pyarrow as pa
+
     sizes = []
     orig = type(spark).createDataFrame
 
     def spy(self, data, *a, **kw):
-        if isinstance(data, list):
+        # every driver-side input form: Python rows, and the Arrow tables
+        # (local_frame) and pandas frames that plan as local relations
+        if isinstance(data, pa.Table):
+            sizes.append(data.num_rows)
+        elif isinstance(data, (list, pd.DataFrame)):
             sizes.append(len(data))
         return orig(self, data, *a, **kw)
 
@@ -112,7 +119,7 @@ def test_search_df_never_materializes_candidates(spark, docs, tmp_path_factory):
         type(spark).createDataFrame = orig
     assert got  # the query does match docs
     # only the tiny per-term metadata frame (≤ n_query_terms rows) is built
-    assert all(s <= 2 for s in sizes), sizes
+    assert sizes and all(s <= 2 for s in sizes), sizes
 
     # search_df membership == paging search() to exhaustion, all 3 shapes
     for q in (Query.make(require=["spark"]), Query.make(contain=["sql", "stream"]),

@@ -33,7 +33,7 @@ def main():
     import __spark_entry__ as entrymod
     from edgesearch_spark.session import get_spark
 
-    spark = get_spark(app_name="check-contract", cores=8, shuffle_partitions=8)
+    spark = get_spark(app_name="check-contract")
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
