@@ -4,7 +4,7 @@ NOT the official bench — bench.py stays frozen for the driver. This file
 isolates the operators the round-8 optimization targets so before/after
 numbers can be attributed to one change at a time:
 
-  positions <impl> [trials]   time ONLY the positions stage (build stages
+  positions [trials]          time ONLY the positions stage (build stages
                               1-5 prebuilt once and reused via resume)
   queries <name...>           time contract queries (count action, labeled)
   hot [trials]                the bench HOT_BATCH (distributed-route paths)
@@ -46,7 +46,7 @@ def _corpus(spark):
     return spark.read.parquet(path)
 
 
-def cmd_positions(impl: str, trials: int = 2) -> None:
+def cmd_positions(trials: int = 2) -> None:
     """Time the positions stage alone: base stages built once (resume), the
     positions stage re-run per trial by dropping its manifest + output."""
     spark = _spark()
@@ -54,7 +54,7 @@ def cmd_positions(impl: str, trials: int = 2) -> None:
     base = f"/tmp/bx_posbase_{CPUS}_{N_CORPUS}"
     build_index(spark, corpus, base, IndexConfig(),
                 order_cols=("repo", "path", "commit"), resume=True)
-    cfg = IndexConfig(positions=True, positions_impl=impl)
+    cfg = IndexConfig(positions=True)
     times = []
     for t in range(trials):
         shutil.rmtree(os.path.join(base, "positions"), ignore_errors=True)
@@ -63,7 +63,7 @@ def cmd_positions(impl: str, trials: int = 2) -> None:
                 os.remove(os.path.join(base, "_manifest", f))
             except OSError:
                 pass
-        spark.sparkContext.setJobDescription(f"positions stage [{impl}] trial {t}")
+        spark.sparkContext.setJobDescription(f"positions stage trial {t}")
         t0 = time.monotonic()
         build_index(spark, corpus, base, cfg,
                     order_cols=("repo", "path", "commit"), resume=True)
@@ -71,7 +71,7 @@ def cmd_positions(impl: str, trials: int = 2) -> None:
         spark.sparkContext.setJobDescription(None)
     with open(os.path.join(base, "_manifest", "positions.json")) as f:
         m = json.load(f)
-    print(json.dumps({"impl": impl, "stage_seconds": times,
+    print(json.dumps({"stage_seconds": times,
                       "rows": m["rows"], "payload_bytes": m["extra"]["payload_bytes"]}))
 
 
@@ -167,7 +167,7 @@ def cmd_explain(name: str) -> None:
 if __name__ == "__main__":
     cmd = sys.argv[1]
     if cmd == "positions":
-        cmd_positions(sys.argv[2], int(sys.argv[3]) if len(sys.argv) > 3 else 2)
+        cmd_positions(int(sys.argv[2]) if len(sys.argv) > 2 else 2)
     elif cmd == "queries":
         cmd_queries(sys.argv[2:])
     elif cmd == "hot":

@@ -1,21 +1,22 @@
-"""Arrow-native postings pipeline (mapInArrow) — the zero-PyObject hot path.
+"""Arrow-native build pipeline (mapInArrow) — the zero-PyObject hot path.
 
-The pandas-UDF pipeline materializes every term as a Python string twice
+A pandas-UDF pipeline materializes every term as a Python string twice
 (Arrow→pandas on the tokenizer output and again on the encoder input):
 ~10^8 PyObject allocations per 10^6 docs, which saturates memory bandwidth
-long before the CPU (measured: the postings stage plateaus at ~13 effective
-cores). ``mapInArrow`` hands us ``pyarrow.RecordBatch``es instead:
+long before the CPU. ``mapInArrow`` hands us ``pyarrow.RecordBatch``es
+instead:
 
-  * tokenizer: content strings are the only per-doc PyObjects (regex needs
-    them); emitted terms are a pyarrow DictionaryArray built from the
-    factorize codes — the 55M-row string column is materialized once in
-    C++, never as PyObjects;
-  * encoder: group change-points come from ``pyarrow.compute`` adjacent
-    comparisons (C++), numerics are zero-copy numpy views, and only the
-    ~n_groups head terms ever become Python strings.
+  * tokenizers (``_tokenize_batch``, ``_tokenize_positions_batch``):
+    content strings are the only per-doc PyObjects (regex needs them);
+    ASCII rows tokenize entirely in C++ and terms stay dictionary codes;
+  * encoders: numerics are zero-copy numpy views and only the ~n_groups
+    head terms ever become Python strings.
 
-Both stages produce output identical to the pandas path (tested
-byte-for-byte via the postings fingerprint).
+The postings and positions stages use the blob-shuffle ('pack') tokenizer
+and encoder pairs below; the bigram and overlong-trigram sidecars feed a
+flat, sorted posting stream to ``make_stream_encoder_arrow``. Every posting
+table row comes out of ``_emit_arrays``. Output is pinned against the JVM
+tokenizer (``tokenizer.norm_tokens_col``) by tests/index_reference.py.
 """
 
 from __future__ import annotations
@@ -29,7 +30,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
 from .codec import encode_postings_batch
-from .tokenizer import MAX_TERM_BYTES, PAIRS_SCHEMA
+from .tokenizer import MAX_TERM_BYTES
 
 _TOKEN_PAT = re.compile(r"[a-zA-Z0-9]+")
 
@@ -51,46 +52,11 @@ POSTINGS_ARROW_SCHEMA = pa.schema(
 )
 
 
-def tokenize_pairs_arrow(
-    df: DataFrame,
-    doc_id_col: str = "doc_id",
-    content_col: str = "content",
-    word_map: dict[str, str] | None = None,
-    field_prefix: str | None = None,
-) -> DataFrame:
-    """(doc_id, content) → (doc_id, term, tf, dl) via mapInArrow.
-
-    ``word_map``/``field_prefix`` are the demo-convention normalization hooks
-    (reference demo/work-at-microsoft/data/build.ts:14-29,50) — applied at the
-    UNIQUE level then re-factorized, so terms merged by the map combine their
-    counts exactly like ``tokenize_pairs_pandas`` (byte-identical postings,
-    parity-tested)."""
-    wmap = dict(word_map or {})
-    prefix = f"{field_prefix}_" if field_prefix else ""
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            got = _tokenize_batch(batch, doc_id_col, content_col, wmap, prefix)
-            if got is None:
-                continue
-            doc_out, code_out, tf, dl, uniques = got
-            # term column as DictionaryArray → string cast happens in C++
-            term_arr = pa.DictionaryArray.from_arrays(
-                pa.array(code_out), pa.array(uniques, type=pa.string())
-            ).cast(pa.string())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(doc_out), term_arr, pa.array(tf.astype(np.int64)), pa.array(dl.astype(np.int64))],
-                names=["doc_id", "term", "tf", "dl"],
-            )
-
-    return df.select(doc_id_col, content_col).mapInArrow(run, schema=PAIRS_SCHEMA)
-
-
 def _tokenize_batch(batch: pa.RecordBatch, doc_id_col: str, content_col: str,
                     wmap: dict, prefix: str):
     """One batch of (doc_id, content) → (doc_out, code_out, tf, dl, uniques)
-    — the shared tokenize core of the 'arrow' and 'pack' postings paths.
-    Returns None for an all-empty batch.
+    — the tokenize core of the postings path. Returns None for an all-empty
+    batch.
 
     ASCII rows (the overwhelming case for source code) take a fully C++
     path: utf8_lower → split_pattern_regex("[^a-z0-9]+") → list_flatten →
@@ -98,8 +64,8 @@ def _tokenize_batch(batch: pa.RecordBatch, doc_id_col: str, content_col: str,
     or null rows fall back to the original Python path (re.findall over
     str.lower), whose semantics the C++ path matches EXACTLY on ASCII
     (same character classes after lowering; UTF-8 length == byte length ⇔
-    pure ASCII), so output is byte-identical to the pandas tokenizer either
-    way (parity-tested incl. a mixed ascii/unicode corpus)."""
+    pure ASCII), so output is identical to the JVM tokenizer either way
+    (tested against norm_tokens_col on a mixed ascii/unicode/null batch)."""
     import pandas as pd
 
     doc_ids = batch.column(batch.schema.get_field_index(doc_id_col)).to_numpy(zero_copy_only=False).astype(np.int64)
@@ -178,7 +144,7 @@ def _tokenize_batch(batch: pa.RecordBatch, doc_id_col: str, content_col: str,
 def _emit_arrays(term_heads: pa.Array, docs_list, tfs_list, ws_list,
                  block_size: int, salt_shift: int) -> pa.RecordBatch:
     """Posting groups → one POSTINGS_ARROW_SCHEMA batch (shared by the
-    'arrow' stream encoder and the 'pack' encoder)."""
+    flat-stream encoder and the pack encoder)."""
     pbs = encode_postings_batch(docs_list, tfs_list, ws_list, block_size=block_size)
     n_groups = len(pbs)
     salts = np.fromiter((int(d[0]) >> salt_shift for d in docs_list), np.int64, count=n_groups)
@@ -209,13 +175,13 @@ def _emit_arrays(term_heads: pa.Array, docs_list, tfs_list, ws_list,
 
 
 def make_stream_encoder_arrow(block_size: int, salt_shift: int = 16):
-    """mapInArrow over the (term, doc-range)-partitioned, (term, doc_id)-
-    sorted posting stream. The salt column never travels through the
-    shuffle — it is a pure function of doc_id (salt = doc_id >> salt_shift,
-    monotone in doc_id, so sorting by (term, doc_id) already yields
-    (term, salt, doc_id) order) and is recomputed here in numpy. Measured
-    ~14% off the shuffle+transfer wall time at 55M rows. Cross-batch carry
-    is an Arrow Table slice (no PyObjects)."""
+    """mapInArrow over a (term, doc-range)-partitioned, (term, doc_id)-
+    sorted flat posting stream of (term, doc_id, tf, w) rows — the encoder
+    of the bigram and overlong-trigram sidecars. The salt column never
+    travels through the shuffle — it is a pure function of doc_id (salt =
+    doc_id >> salt_shift, monotone in doc_id, so sorting by (term, doc_id)
+    already yields (term, salt, doc_id) order) and is recomputed here in
+    numpy. Cross-batch carry is an Arrow Table slice (no PyObjects)."""
 
     def _emit(tbl: pa.Table, bounds: np.ndarray) -> pa.RecordBatch:
         docs = tbl.column("doc_id").to_numpy().astype(np.int64, copy=False)
@@ -262,8 +228,7 @@ def make_stream_encoder_arrow(block_size: int, salt_shift: int = 16):
 # ---------------------------------------------------------------------------
 # 'pack' postings path: binary-blob shuffle (round-3 crossing optimization)
 # ---------------------------------------------------------------------------
-# Profiling (BENCH/BASELINE.md, tools/profile_postings.py) showed the
-# postings stage floor is the JVM→Python Arrow INPUT serialization of the
+# Profiling (BENCH/BASELINE.md) showed the postings stage floor is the JVM→Python Arrow INPUT serialization of the
 # post-shuffle rows (~8 µs/row of JVM CPU — 55% of the stage), not shuffle
 # bytes and not encode compute. This path removes that per-row conversion:
 # the tokenizer PRE-PACKS each (bucket = hash(term, salt) % n_buckets)
@@ -271,8 +236,8 @@ def make_stream_encoder_arrow(block_size: int, salt_shift: int = 16):
 # dictionary), the shuffle moves (bucket int, blob binary) rows — thousands
 # of rows instead of tens of millions — and the encoder parses blobs with
 # np.frombuffer, groups via a C++ dictionary_encode + numpy lexsort, and
-# emits the SAME posting groups byte-for-byte (4-way equivalence tested in
-# tests/test_postings_impls.py). The JVM never row-converts posting rows,
+# emits the posting groups (decoded and checked against the JVM tokenizer in
+# tests/index_reference.py). The JVM never row-converts posting rows,
 # and the JVM sort disappears (the encoder sorts each partition in numpy).
 #
 # Blob layout (little-endian):
@@ -299,8 +264,8 @@ def tokenize_pack_arrow(
 ) -> DataFrame:
     """(doc_id, content) → (bucket, blob): tokenize + tf-weight + pack.
 
-    The BM25 tf-weight is computed here in numpy with the exact operation
-    order of build.tf_weight_col (same IEEE ops → bit-identical float32).
+    The BM25 tf-weight w = tf / (tf + k1·((1−b) + (b·dl)/avgdl)) is
+    computed here in numpy in float64 and stored as float32.
     Bucket = mix(crc32(term), salt) % n_buckets keeps every (term, salt)
     shard in one bucket (encoder correctness) while a hot term's salts
     spread across buckets (skew stays capped at 2^salt_shift postings)."""
@@ -319,7 +284,6 @@ def tokenize_pack_arrow(
                 raise ValueError("tf exceeds int32 — pack blob layout assumes tf < 2^31")
             tf64 = tf.astype(np.float64)
             dl64 = dl.astype(np.float64)
-            # EXACT tf_weight_col arithmetic (build.py:121-125)
             w = (tf64 / (tf64 + k1 * ((1.0 - b) + (b * dl64) / avgdl))).astype(np.float32)
             enc = [u.encode("utf-8") for u in uniques]
             uh = np.fromiter((zlib.crc32(e) for e in enc), np.uint64, count=len(enc))
@@ -369,9 +333,9 @@ def tokenize_pack_arrow(
 # discipline: the tokenizer emits each (bucket = mix(crc32(term), salt))
 # group of a batch as ONE binary blob, the shuffle moves (bucket, blob)
 # rows, and the encoder parses with np.frombuffer, builds a global term
-# dictionary in C++, lexsorts (term, doc, pos) in numpy and emits the SAME
-# per-(term, salt) position payloads byte-for-byte
-# (tests/test_positions.py::test_positions_pack_impl_byte_identical).
+# dictionary in C++, lexsorts (term, doc, pos) in numpy and emits one
+# position payload per (term, salt) (decoded and checked against the JVM
+# posexplode stream in tests/test_positions.py).
 #
 # Blob layout (little-endian):
 #   int64 n, k, dict_bytes_len
@@ -383,9 +347,9 @@ def _tokenize_positions_batch(batch: pa.RecordBatch, doc_id_col: str,
                               content_col: str, wmap: dict, prefix: str):
     """One batch of (doc_id, content) → (doc_rep, pos, codes, uniques): one
     row per KEPT token occurrence in stream order, ``pos`` its 0-based index
-    into the doc's drop-filtered token stream — exactly the
-    tokenizer.norm_tokens_col stream the posexplode path indexes. Returns
-    None for an all-empty batch.
+    into the doc's drop-filtered token stream — exactly
+    posexplode(tokenizer.norm_tokens_col). Returns None for an all-empty
+    batch.
 
     Same ASCII C++ fast path / Python fallback split as _tokenize_batch;
     the fallback applies the BYTE-length cap (octet_length — the JVM
@@ -553,8 +517,7 @@ def make_pos_pack_encoder(salt_shift: int = 16, groups_per_batch: int = 65536):
     (np.frombuffer, zero-copy), ONE global term dictionary via C++
     dictionary_encode, lexsort (term code, doc_id, pos), split groups on
     (code, salt) change, encode each group's positional payload with the
-    standard codec (encode_positions_groups) — byte-identical output to the
-    posexplode/mapInPandas path."""
+    standard codec (encode_positions_groups)."""
     from .codec import encode_positions_groups
 
     def encode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -615,8 +578,8 @@ def make_pack_encoder(block_size: int, salt_shift: int = 16, groups_per_batch: i
     dictionary_encode, lexsort (doc_id within term code), split groups on
     (code, salt) change, and emit the standard postings batches.
 
-    Holds one partition's posting rows in memory (~24 B/posting) — partition
-    count bounds that exactly like the sort buffer did for the 'arrow' path."""
+    Holds one partition's posting rows in memory (~24 B/posting); the
+    partition count bounds that."""
 
     def encode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         docs_l: list[np.ndarray] = []

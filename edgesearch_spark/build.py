@@ -3,18 +3,22 @@ single-process builder (reference: src/build/mod.rs:43-137).
 
 Reference flow (all in one process): stream (doc, terms) → dict-encode →
 invert into Roaring bitmaps → sort terms → serialize → pack 25 MiB BST
-chunks. Our flow, as declarative Spark stages (three shuffles total):
+chunks. Our flow, as declarative Spark stages, one build path each:
 
   docs      corpus → deterministic docID (range-sort, docids.py) → sha256
-            invariant → parquet sorted by doc_id            [shuffle: range]
-  stats     tokenize (JVM split/explode) → N, avgdl, totals [reduce only]
-  terms     groupBy(term) → df, cf, max BM25 tf-weight      [shuffle: term]
-            (the reference computes df and drops it — src/build/mod.rs:62,88;
-            we keep it: it is the BM25 idf input)
+            invariant → parquet sorted by doc_id
+  stats     per-doc token count (JVM regexp_count) → doclens parquet;
+            N, avgdl, totals ride the write                 [no shuffle]
   postings  tokenize+pack (bucket = hash(term,salt) blobs) → repartition
             (bucket) → numpy sort + adaptive block encode (mapInArrow)
-            → parquet range-sorted by (term, salt)          [shuffle: term+salt]
-  blooms    absent-term bloom sidecar (bloom.py)            [reduce only]
+            → parquet range-sorted by (term, salt)   [shuffle: bucket, range]
+  terms     groupBy(term) over the postings table → df, cf, max BM25
+            tf-weight                                 [shuffle: term, range]
+            (the reference computes df and drops it — src/build/mod.rs:62,88;
+            we keep it: it is the BM25 idf input)
+  blooms    absent-term bloom sidecar (bloom.py)
+  optional  positions (the same blob shuffle), hot bigrams and overlong-run
+            trigrams (flat posting stream → make_stream_encoder_arrow)
 
 Skew: a plain groupBy(term) would put a hot term's entire posting list in
 one task (the `import`-class problem at 10^12 files). The salt — a docID
@@ -36,16 +40,14 @@ import json
 import math
 import os
 import time
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 from dataclasses import asdict, dataclass, field
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .docids import assign_doc_ids
-from .tokenizer import tokenize_pairs
 
 STAGES = ("docs", "stats", "postings", "terms")
 
@@ -57,58 +59,6 @@ POSTINGS_SCHEMA = (
 )
 
 POSITIONS_SCHEMA = "term string, salt long, df long, payload binary"
-
-
-def make_positions_encoder(salt_shift: int = 16):
-    """mapInPandas over a (term, doc-range)-hash-partitioned,
-    (term, doc_id, pos)-sorted position stream: (term, salt) group
-    boundaries found vectorized, carry buffer stitches groups spanning
-    Arrow batches (make_stream_encoder's shape, positional payload)."""
-    from .codec import encode_positions_groups
-
-    def _emit(terms, salts, docs, poss, gstarts) -> pd.DataFrame:
-        payloads, nd = encode_positions_groups(docs, poss, gstarts)
-        return pd.DataFrame(
-            {
-                "term": terms[gstarts],
-                "salt": salts[gstarts],
-                "df": nd,
-                "payload": payloads,
-            }
-        )
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                continue
-            terms = pdf["term"].to_numpy()
-            salts = pdf["doc_id"].to_numpy(np.int64) >> salt_shift
-            chg = np.flatnonzero((terms[1:] != terms[:-1]) | (salts[1:] != salts[:-1])) + 1
-            if chg.size == 0:
-                carry = pdf
-                continue
-            last_head = chg[-1]
-            carry = pdf.iloc[last_head:]
-            head = pdf.iloc[:last_head]
-            yield _emit(
-                terms[:last_head], salts[:last_head],
-                head["doc_id"].to_numpy(np.int64), head["pos"].to_numpy(np.int64),
-                np.concatenate([[0], chg[:-1]]).astype(np.int64),
-            )
-        if carry is not None and len(carry):
-            terms = carry["term"].to_numpy()
-            salts = carry["doc_id"].to_numpy(np.int64) >> salt_shift
-            chg = np.flatnonzero((terms[1:] != terms[:-1]) | (salts[1:] != salts[:-1])) + 1
-            yield _emit(
-                terms, salts,
-                carry["doc_id"].to_numpy(np.int64), carry["pos"].to_numpy(np.int64),
-                np.concatenate([[0], chg]).astype(np.int64),
-            )
-
-    return encode
 
 
 @dataclass
@@ -127,11 +77,9 @@ class IndexConfig:
     max_query_terms: int = 50  # reference default, src/main.rs:16
     max_results: int = 50  # reference default, src/main.rs:15
     idf: str = "lucene"  # ln(1 + (N-df+0.5)/(df+0.5)) — non-negative variant
-    postings_impl: str = "pack"  # 'pack' (blob shuffle, fastest) | 'arrow' | 'sortstream' | 'collect'
     # demo-convention normalization (build.ts:14-29,50): term remapping
-    # (ms→microsoft style) and `{field}_` term prefixing. Honored by the
-    # 'arrow' and 'sortstream' tokenizers (parity-tested byte-identical);
-    # the JVM 'collect' tokenizer has no normalization hook → build refuses.
+    # (ms→microsoft style) and `{field}_` term prefixing, applied by the
+    # postings and positions tokenizers (arrow_pipeline.py).
     word_map: dict | None = None
     field_prefix: str | None = None
     # source-code mode: insert identifier-boundary markers (camelCase /
@@ -165,13 +113,6 @@ class IndexConfig:
     # field_prefix / split_identifiers): positions live in the NORMALIZED
     # stream, the same stream the postings index.
     positions: bool = False
-    # 'pack' (binary-blob shuffle — the postings 'pack' discipline applied
-    # to the positions stage, byte-identical output) | 'sortstream' (the
-    # historical posexplode → row shuffle → mapInPandas path). The row path
-    # ships every token occurrence through the JVM→Python Arrow crossing —
-    # the conversion floor the postings stage removed in round 3 (VERDICT
-    # r7 #1: positions stage 104-148 s vs postings 13-30 s on one corpus).
-    positions_impl: str = "pack"
 
 
 @dataclass
@@ -209,121 +150,6 @@ def idf_value(n_docs: int, df: np.ndarray | int, variant: str = "lucene") -> np.
     if variant != "lucene":
         raise ValueError(f"unknown idf variant {variant}")
     return np.log(1.0 + (n_docs - np.asarray(df, dtype=np.float64) + 0.5) / (np.asarray(df, dtype=np.float64) + 0.5)) if not np.isscalar(df) else math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-
-
-def tf_weight_col(k1: float, b: float, avgdl: float) -> F.Column:
-    """Per-posting BM25 tf-weight w = tf / (tf + k1*(1 - b + b*dl/avgdl)).
-    Score contribution = idf * (k1+1) * w. Pure JVM column expression."""
-    denom = F.col("tf") + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
-    return (F.col("tf").cast("double") / denom).cast("float")
-
-
-def make_encoder(block_size: int):
-    """Return a mapInPandas function encoding (term, salt, doc_ids[], tfs[],
-    ws[]) rows into posting-block rows. The arrays arrive as primitive Arrow
-    lists (field extraction happened JVM-side), so each cell is already a
-    numpy array — the Python side only runs the vectorized codec, never
-    iterating per posting."""
-
-    from .codec import encode_postings_batch
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            docs_list = [np.asarray(d, dtype=np.int64) for d in pdf["doc_ids"]]
-            tfs_list = [np.asarray(t, dtype=np.int64) for t in pdf["tfs"]]
-            ws_list = [np.asarray(w, dtype=np.float32) for w in pdf["ws"]]
-            pbs = encode_postings_batch(docs_list, tfs_list, ws_list, block_size=block_size)
-            yield pd.DataFrame(
-                {
-                    "term": pdf["term"].to_numpy(),
-                    "salt": pdf["salt"].to_numpy(),
-                    "df": np.fromiter((d.size for d in docs_list), dtype=np.int64, count=len(docs_list)),
-                    "cf": np.fromiter((int(t.sum()) for t in tfs_list), dtype=np.int64, count=len(tfs_list)),
-                    "block_first_doc": [pb.first_doc for pb in pbs],
-                    "block_max_doc": [pb.max_doc for pb in pbs],
-                    "block_count": [pb.counts for pb in pbs],
-                    "block_offset": [pb.offsets for pb in pbs],
-                    "block_max_weight": [pb.max_weight for pb in pbs],
-                    "block_kind": [pb.kinds.astype(np.int32) for pb in pbs],
-                    "block_max_tf": [pb.max_tf for pb in pbs],
-                    "payload": [pb.payload for pb in pbs],
-                }
-            )
-
-    return encode
-
-
-def make_stream_encoder(block_size: int, salt_shift: int = 16):
-    """mapInPandas over a (term, doc-range)-hash-partitioned, (term, doc_id)-
-    sorted flat posting stream: group boundaries are found vectorized
-    (np.split on change points) and a carry buffer stitches groups that span
-    Arrow batch boundaries. One shuffle total — no collect_list buffers, no
-    per-group JVM aggregation state; the salt column never travels (it is
-    doc_id >> salt_shift, recomputed here). This is SURVEY.md B9's planned
-    shape (repartition → sortWithinPartitions → vectorized encode)."""
-    from .codec import encode_postings_batch
-
-    def _emit(terms, salts, docs, tfs, ws, bounds) -> pd.DataFrame:
-        docs_list = np.split(docs, bounds)
-        tfs_list = np.split(tfs, bounds)
-        ws_list = np.split(ws, bounds)
-        heads = np.concatenate([[0], bounds])
-        pbs = encode_postings_batch(docs_list, tfs_list, ws_list, block_size=block_size)
-        return pd.DataFrame(
-            {
-                "term": terms[heads],
-                "salt": salts[heads],
-                "df": np.fromiter((d.size for d in docs_list), np.int64, count=len(docs_list)),
-                "cf": np.fromiter((int(t.sum()) for t in tfs_list), np.int64, count=len(tfs_list)),
-                "block_first_doc": [pb.first_doc for pb in pbs],
-                "block_max_doc": [pb.max_doc for pb in pbs],
-                "block_count": [pb.counts for pb in pbs],
-                "block_offset": [pb.offsets for pb in pbs],
-                "block_max_weight": [pb.max_weight for pb in pbs],
-                "block_kind": [pb.kinds.astype(np.int32) for pb in pbs],
-                "block_max_tf": [pb.max_tf for pb in pbs],
-                "payload": [pb.payload for pb in pbs],
-            }
-        )
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                continue
-            terms = pdf["term"].to_numpy()
-            salts = pdf["doc_id"].to_numpy(np.int64) >> salt_shift
-            # change points where (term, salt) differs from previous row
-            chg = np.flatnonzero((terms[1:] != terms[:-1]) | (salts[1:] != salts[:-1])) + 1
-            if chg.size == 0:
-                carry = pdf  # whole batch is one (possibly continuing) group
-                continue
-            last_head = chg[-1]
-            carry = pdf.iloc[last_head:]
-            head = pdf.iloc[:last_head]
-            yield _emit(
-                terms[:last_head],
-                salts[:last_head],
-                head["doc_id"].to_numpy(np.int64),
-                head["tf"].to_numpy(np.int64),
-                head["w"].to_numpy(np.float32),
-                chg[:-1],
-            )
-        if carry is not None and len(carry):
-            terms = carry["term"].to_numpy()
-            salts = carry["doc_id"].to_numpy(np.int64) >> salt_shift
-            chg = np.flatnonzero((terms[1:] != terms[:-1]) | (salts[1:] != salts[:-1])) + 1
-            yield _emit(
-                terms, salts,
-                carry["doc_id"].to_numpy(np.int64),
-                carry["tf"].to_numpy(np.int64),
-                carry["w"].to_numpy(np.float32),
-                chg,
-            )
-
-    return encode
 
 
 def _tune_split_size(spark: SparkSession, path: str, n_part: int) -> None:
@@ -365,8 +191,6 @@ def build_index(
     cfg = config or IndexConfig()
     if (doc_id_col is None) == (order_cols is None):
         raise ValueError("exactly one of doc_id_col / order_cols required")
-    if (cfg.word_map or cfg.field_prefix) and cfg.postings_impl == "collect":
-        raise ValueError("word_map/field_prefix require postings_impl 'pack', 'arrow' or 'sortstream'")
     if cfg.bigram_min_df is not None and (
             cfg.word_map or cfg.field_prefix or cfg.split_identifiers):
         # fail BEFORE any stage runs: stage-6-only validation would let an
@@ -456,7 +280,6 @@ def build_index(
         from .functions.code import identifier_marked_col
 
         docs_df = docs_df.withColumn(content_col, identifier_marked_col(content_col))
-    pairs = tokenize_pairs(docs_df, "doc_id", content_col)
 
     # ---- stage 2: corpus stats (N, avgdl) + doc-length norms ----
     # dl per doc is the BM25 length norm (Lucene-norms analogue). Stored as
@@ -539,92 +362,31 @@ def build_index(
 
     stats = load_stats(out_dir)
     avgdl = stats["avgdl"] or 1.0
-    w_col = tf_weight_col(cfg.k1, cfg.b, avgdl)
 
     # ---- stage 3: salted posting blocks ----
     if not stage("postings"):
         t0 = time.monotonic()
         from pyspark import StorageLevel
 
-        if cfg.postings_impl == "pack":
-            # binary-blob shuffle: the tokenizer pre-packs each
-            # (hash(term), salt)-bucket of a batch into one blob, so the
-            # shuffle and BOTH Arrow crossings move thousands of binary rows
-            # instead of tens of millions of posting rows — removing the
-            # JVM→Python row-conversion floor the profiler identified
-            # (BENCH/BASELINE.md round-3 substage table). The encoder sorts
-            # each partition in numpy, so the JVM sort disappears too.
-            from .arrow_pipeline import make_pack_encoder, tokenize_pack_arrow
+        # binary-blob shuffle: the tokenizer pre-packs each
+        # (hash(term), salt)-bucket of a batch into one blob, so the
+        # shuffle and BOTH Arrow crossings move thousands of binary rows
+        # instead of tens of millions of posting rows — removing the
+        # JVM→Python row-conversion floor the profiler identified
+        # (BENCH/BASELINE.md round-3 substage table). The encoder sorts
+        # each partition in numpy, so the JVM sort disappears too.
+        from .arrow_pipeline import make_pack_encoder, tokenize_pack_arrow
 
-            packed = tokenize_pack_arrow(
-                docs_df, doc_id_col="doc_id", content_col=content_col,
-                n_buckets=16 * n_part, salt_shift=cfg.salt_shift,
-                k1=cfg.k1, b=cfg.b, avgdl=avgdl,
-                word_map=cfg.word_map, field_prefix=cfg.field_prefix,
-            )
-            stream = packed.repartition(4 * n_part, "bucket")
-            encoded = stream.mapInArrow(
-                make_pack_encoder(cfg.block_size, cfg.salt_shift), schema=POSTINGS_SCHEMA
-            )
-        elif cfg.postings_impl == "arrow":
-            # zero-PyObject hot path: Arrow-native tokenizer + encoder
-            # (arrow_pipeline.py) around the same single (term, salt) shuffle
-            from .arrow_pipeline import make_stream_encoder_arrow, tokenize_pairs_arrow
-
-            p = tokenize_pairs_arrow(
-                docs_df, "doc_id", content_col,
-                word_map=cfg.word_map, field_prefix=cfg.field_prefix,
-            )
-            slim = p.withColumn("w", w_col).select("term", "doc_id", "tf", "w")
-            # The salt never travels: it hashes as a partitioning EXPRESSION
-            # (doc_id >> shift) and, being monotone in doc_id, sorting by
-            # (term, doc_id) already yields (term, salt, doc_id) order — the
-            # encoder recomputes it in numpy. 8 fewer bytes per shuffled row
-            # and one fewer sort key (~14% off shuffle+transfer at 55M rows).
-            # 4 encode tasks per core: smaller sorts, tighter task-memory
-            # bound, better stragglers — measured ~10% on the 1M corpus and
-            # the safe shape at 100× (task size is corpus-independent).
-            stream = slim.repartition(
-                4 * n_part, "term", F.shiftright(F.col("doc_id"), cfg.salt_shift)
-            ).sortWithinPartitions("term", "doc_id")
-            encoded = stream.mapInArrow(
-                make_stream_encoder_arrow(cfg.block_size, cfg.salt_shift), schema=POSTINGS_SCHEMA
-            )
-        elif cfg.postings_impl == "sortstream":
-            # one-shuffle path: tf computed inside the Arrow tokenizer (no
-            # explode+agg shuffle), then a single hash repartition on
-            # (term, salt) + in-partition sort feeds the streaming encoder
-            from .tokenizer import tokenize_pairs_pandas
-
-            p = tokenize_pairs_pandas(
-                docs_df, "doc_id", content_col,
-                word_map=cfg.word_map, field_prefix=cfg.field_prefix,
-            )
-            slim = p.withColumn("w", w_col).select("term", "doc_id", "tf", "w")
-            stream = slim.repartition(
-                4 * n_part, "term", F.shiftright(F.col("doc_id"), cfg.salt_shift)
-            ).sortWithinPartitions("term", "doc_id")
-            encoded = stream.mapInPandas(
-                make_stream_encoder(cfg.block_size, cfg.salt_shift), schema=POSTINGS_SCHEMA
-            )
-        else:
-            salted = (
-                pairs.withColumn("w", w_col)
-                .withColumn("salt", F.shiftright(F.col("doc_id"), cfg.salt_shift).cast("long"))
-            )
-            grouped = (
-                salted.groupBy("term", "salt")
-                .agg(F.sort_array(F.collect_list(F.struct("doc_id", "tf", "w"))).alias("ps"))
-                .select(
-                    "term",
-                    "salt",
-                    # unzip JVM-side so Arrow ships primitive arrays, not structs
-                    F.transform("ps", lambda x: x["doc_id"]).alias("doc_ids"),
-                    F.transform("ps", lambda x: x["tf"]).alias("tfs"),
-                    F.transform("ps", lambda x: x["w"]).alias("ws"),
-                )
-            )
-            encoded = grouped.mapInPandas(make_encoder(cfg.block_size), schema=POSTINGS_SCHEMA)
+        packed = tokenize_pack_arrow(
+            docs_df, doc_id_col="doc_id", content_col=content_col,
+            n_buckets=16 * n_part, salt_shift=cfg.salt_shift,
+            k1=cfg.k1, b=cfg.b, avgdl=avgdl,
+            word_map=cfg.word_map, field_prefix=cfg.field_prefix,
+        )
+        stream = packed.repartition(4 * n_part, "bucket")
+        encoded = stream.mapInArrow(
+            make_pack_encoder(cfg.block_size, cfg.salt_shift), schema=POSTINGS_SCHEMA
+        )
         # persist before the range write: repartitionByRange's boundary-
         # sampling pass would otherwise re-run the whole tokenize→shuffle→
         # encode pipeline a second time
@@ -718,8 +480,8 @@ def build_index(
     # DERIVED from position blobs instead of a third corpus tokenize)
     # Per-(term, salt) delta-varint position blobs (codec.
     # encode_positions_groups). Positions are 0-based indexes into the
-    # drop-filtered, NORMALIZED token stream — posexplode over the same
-    # token expression the tokenizers index — so position adjacency is
+    # drop-filtered, NORMALIZED token stream (tokenizer.norm_tokens_col,
+    # the stream the postings index) — so position adjacency is
     # exactly phrase adjacency and the sidecar is sound on word_map /
     # field_prefix / split_identifiers builds (where the bigram sidecar
     # must refuse). Same salt scheme as postings: shard merge stays pure
@@ -732,35 +494,20 @@ def build_index(
             from .functions.code import identifier_marked_col
 
             pdocs = pdocs.withColumn(content_col, identifier_marked_col(content_col))
-        if cfg.positions_impl == "pack":
-            # binary-blob shuffle (the postings 'pack' discipline): the
-            # tokenizer pre-packs each (hash(term), salt)-bucket of a batch
-            # into one blob, the shuffle and both Arrow crossings move
-            # thousands of binary rows instead of one row per token
-            # occurrence, and the encoder sorts in numpy — the JVM never
-            # row-converts the position stream (VERDICT r7 #1; byte-
-            # identical output, tests/test_positions.py)
-            from .arrow_pipeline import make_pos_pack_encoder, tokenize_pos_pack_arrow
+        # binary-blob shuffle (the postings discipline): the tokenizer
+        # pre-packs each (hash(term), salt)-bucket of a batch into one blob,
+        # the shuffle and both Arrow crossings move thousands of binary rows
+        # instead of one row per token occurrence, and the encoder sorts in
+        # numpy — the JVM never row-converts the position stream
+        from .arrow_pipeline import make_pos_pack_encoder, tokenize_pos_pack_arrow
 
-            packed = tokenize_pos_pack_arrow(
-                pdocs, doc_id_col="doc_id", content_col=content_col,
-                n_buckets=16 * n_part, salt_shift=cfg.salt_shift,
-                word_map=cfg.word_map, field_prefix=cfg.field_prefix,
-            )
-            enc = packed.repartition(4 * n_part, "bucket").mapInArrow(
-                make_pos_pack_encoder(cfg.salt_shift), schema=POSITIONS_SCHEMA)
-        else:
-            from .tokenizer import norm_tokens_col
-
-            ts = norm_tokens_col(content_col, cfg.word_map, cfg.field_prefix)
-            pos_rows = pdocs.select(
-                "doc_id", F.posexplode(ts).alias("pos", "term")
-            ).select("term", "doc_id", F.col("pos").cast("long").alias("pos"))
-            stream = pos_rows.repartition(
-                4 * n_part, "term", F.shiftright(F.col("doc_id"), cfg.salt_shift)
-            ).sortWithinPartitions("term", "doc_id", "pos")
-            enc = stream.mapInPandas(make_positions_encoder(cfg.salt_shift),
-                                     schema=POSITIONS_SCHEMA)
+        packed = tokenize_pos_pack_arrow(
+            pdocs, doc_id_col="doc_id", content_col=content_col,
+            n_buckets=16 * n_part, salt_shift=cfg.salt_shift,
+            word_map=cfg.word_map, field_prefix=cfg.field_prefix,
+        )
+        enc = packed.repartition(4 * n_part, "bucket").mapInArrow(
+            make_pos_pack_encoder(cfg.salt_shift), schema=POSITIONS_SCHEMA)
         positions_path = os.path.join(out_dir, "positions")
         # persist before the range write: repartitionByRange's boundary-
         # sampling pass re-executes the whole tokenize→shuffle→encode
@@ -806,6 +553,8 @@ def build_index(
     # builds (word_map / field_prefix / split_identifiers rewrite tokens
     # relative to stored content) refuse the sidecar.
     if cfg.bigram_min_df is not None and not stage("bigrams"):
+        from .arrow_pipeline import make_stream_encoder_arrow
+
         t0 = time.monotonic()
         hot_df = (
             spark.read.parquet(terms_path)
@@ -870,8 +619,8 @@ def build_index(
             n_part, "term", F.shiftright(F.col("doc_id"), cfg.salt_shift)
         ).sortWithinPartitions("term", "doc_id")
         bigram_path = os.path.join(out_dir, "bigram_postings")
-        (stream.mapInPandas(make_stream_encoder(cfg.block_size, cfg.salt_shift),
-                            schema=POSTINGS_SCHEMA)
+        (stream.mapInArrow(make_stream_encoder_arrow(cfg.block_size, cfg.salt_shift),
+                           schema=POSTINGS_SCHEMA)
                .repartitionByRange(n_part, "term", "salt").sortWithinPartitions("term", "salt")
                .write.mode("overwrite")
                .option("parquet.block.size", cfg.target_rowgroup_bytes)
@@ -906,6 +655,7 @@ def build_index(
     # unchanged. A corpus with no flagged docs commits the stage with no
     # table (trivially covered — stats records rows=0).
     if cfg.overlong_trigrams and not stage("oltrigrams"):
+        from .arrow_pipeline import make_stream_encoder_arrow
         from .tokenizer import MAX_TERM_BYTES
 
         t0 = time.monotonic()
@@ -940,8 +690,8 @@ def build_index(
                 n_part, "term", F.shiftright(F.col("doc_id"), cfg.salt_shift)
             ).sortWithinPartitions("term", "doc_id")
             oltri_path = os.path.join(out_dir, "overlong_trigrams")
-            enc = stream.mapInPandas(make_stream_encoder(cfg.block_size, cfg.salt_shift),
-                                     schema=POSTINGS_SCHEMA)
+            enc = stream.mapInArrow(make_stream_encoder_arrow(cfg.block_size, cfg.salt_shift),
+                                    schema=POSTINGS_SCHEMA)
             (enc.repartitionByRange(n_part, "term", "salt")
                 .sortWithinPartitions("term", "salt")
                 .write.mode("overwrite")

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from .build import idf_value, load_stats
 from .codec import PostingBlocks, concat_blocks, decode_all, decode_block
 from .oracle import Query, QueryTooLarge, SearchResult
+from .plans.fold import bm25_fold
 from .session import local_frame
 
 # Stored block/shard max weights are float32 while exact scores are float64:
@@ -1197,15 +1198,11 @@ class SearchEngine:
         exclude-only quirk (union becomes the result) is the final branch.
 
         Scores are BIT-IDENTICAL to _score_docs (VERDICT r6 #5 — this is
-        what lets _bm25_distributed skip the driver rescore): each term's
-        partial replicates the kernel's exact float64 operation order —
-        the per-term constant idf·(k1+1) is computed driver-side in Python
-        (column ``c``), knorm associates as k1·((1−b) + (b·dl)/avgdl),
-        w = tf/(tf+knorm) — and the per-doc sum folds the partials in
-        CALLER TERM ORDER via per-ord conditional sums, not one F.sum (whose
-        partition-dependent add order reorders float sums). A doc missing a
-        contain term contributes 0.0 for it, exactly the kernel's tf>0
-        mask. ``tmeta``, the per-term literal table, is a local relation
+        what lets _bm25_distributed skip the driver rescore): the shared
+        caller-order fold (plans/fold.py) replays the kernel's float64
+        operation order, with the per-term constant c = idf·(k1+1)
+        computed driver-side in Python exactly as the kernel does.
+        ``tmeta``, the per-term literal table, is a local relation
         (``local_frame``): the plan holds no Python-RDD scan."""
         require = list(dict.fromkeys(q.require))
         contain = [t for t in dict.fromkeys(q.contain) if tp[t] is not None]
@@ -1215,68 +1212,38 @@ class SearchEngine:
         # order _score_docs sums in (fetch_terms preserves input order)
         score_order = {t: i for i, t in enumerate(dict.fromkeys(list(q.require) + list(q.contain)))}
         rset, cset, eset = set(require), set(contain), set(exclude)
+        c = {t: float(self.idf(tp[t].df)) * (self.k1 + 1) for t in terms}
         tmeta = local_frame(
             self.spark,
-            [
-                (t, float(self.idf(tp[t].df)) * (self.k1 + 1),
-                 score_order.get(t, -1), t in rset, t in cset, t in eset,
-                 t in score_order and tp[t] is not None)
-                for t in terms
-            ],
-            "term string, c double, ord int, is_r boolean, is_c boolean, is_e boolean, is_s boolean",
+            [(t, c[t], score_order.get(t, -1), t in rset, t in cset, t in eset)
+             for t in terms],
+            "term string, c double, ord int, is_r boolean, is_c boolean, is_e boolean",
         )
         hits = self._decoded_for(terms).join(F.broadcast(tmeta), "term")
-        # Caller-term-order fold as NESTED CONDITIONAL SUMS: each
-        # (doc, ord) has at most ONE row (decoded rows unique per
-        # (term, doc), ord unique per term), so sum(when(ord==i, tf)) is
-        # order-independent, and chaining the per-ord results
-        # ((0+p0)+p1)+… replays _score_docs' float64 operation order
-        # exactly — a missing term contributes literal 0.0, and
-        # x + 0.0 == x bitwise for the non-negative partials, so the
-        # result is bit-identical to the kernel (tested). This replaces
-        # a collect_list + array_sort + lambda-aggregate fold that cost
-        # ~1 s/query on a df≈N term (ObjectHashAggregate + per-group
-        # array machinery vs plain codegen'd HashAggregate). Only the raw
-        # per-ord tf crosses the aggregation; the doclens join and the
-        # score arithmetic run AFTER the clause filter, on the (smaller)
-        # matched set — c = idf·(k1+1) is a driver float per term, exactly
-        # the kernel's.
-        per_doc = hits.groupBy("doc_id").agg(
-            # decoded rows are unique per (term, doc) — shards are docID-
-            # disjoint and tmeta has one row per term — so the distinct
-            # require count is a plain conditional sum; countDistinct
-            # planned an extra two-phase distinct aggregation pass
-            F.sum(F.col("is_r").cast("int")).alias("req_hit"),
-            F.max(F.col("is_c").cast("int")).alias("con_hit"),
-            F.max(F.col("is_e").cast("int")).alias("exc_hit"),
-            *[F.sum(F.when(F.col("ord") == i, F.col("tf"))).alias(f"__tf{i}")
-              for i in range(len(score_order) if scored else 0)],
-        )
-        if require or contain:
-            cond = (F.col("req_hit") == len(require)) & (F.col("exc_hit") == 0)
-            if contain:
-                cond = cond & (F.col("con_hit") == 1)
-            matched = per_doc.filter(cond)
-        else:
+
+        def keep(per_doc: DataFrame) -> DataFrame:
+            if require or contain:
+                cond = (F.col("req_hit") == len(require)) & (F.col("exc_hit") == 0)
+                if contain:
+                    cond = cond & (F.col("con_hit") == 1)
+                return per_doc.filter(cond)
             # exclude-only quirk: the excluded union IS the result (wasm/index.c:100-104)
-            matched = per_doc.filter(F.col("exc_hit") == 1)
-        if not scored:
-            return matched.select("doc_id", F.lit(0.0).alias("score"))
-        c_of_ord = {score_order[t]: float(self.idf(tp[t].df)) * (self.k1 + 1)
-                    for t in score_order if tp.get(t) is not None}
+            return per_doc.filter(F.col("exc_hit") == 1)
+
+        # a missing contain term has no rows and no contribution
+        c_of_ord = {score_order[t]: c[t] for t in terms if t in score_order}
         knorm = F.lit(self.k1) * (
             F.lit(1 - self.b) + (F.lit(self.b) * F.col("dl")) / F.lit(float(self.avgdl))
         )
-        score = F.lit(0.0)
-        for i in range(len(score_order)):
-            if i not in c_of_ord:
-                continue  # missing term: no rows, no contribution
-            tfi = F.col(f"__tf{i}")
-            score = score + F.coalesce(
-                F.when(tfi.isNotNull(), F.lit(c_of_ord[i]) * (tfi / (tfi + knorm))),
-                F.lit(0.0))
-        return (matched.join(self._doclens_df(), "doc_id")
-                .select("doc_id", score.alias("score")))
+        matched = bm25_fold(
+            hits, ["doc_id"], keep,
+            ords=range(len(score_order)) if scored else None,
+            c_of=lambda i: F.lit(c_of_ord[i]) if i in c_of_ord else None,
+            # reading doclens infers its schema with a job: scored only
+            dl=self._doclens_df() if scored else None, knorm=knorm)
+        if not scored:
+            return matched.select("doc_id", F.lit(0.0).alias("score"))
+        return matched.select("doc_id", "score")
 
     def _single_union_term(self, q: Query, tp: dict):
         """The postings object when the boolean result set is exactly ONE

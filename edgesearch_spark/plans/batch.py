@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..build import load_stats
 from ..sources.postings import decoded_postings, doclens_table, term_stats_table
+from .fold import bm25_fold
 
 QUERIES_SCHEMA = "query_id string, require array<string>, contain array<string>, exclude array<string>"
 
@@ -39,13 +40,15 @@ QUERIES_SCHEMA = "query_id string, require array<string>, contain array<string>,
 # cluster as one giant expression). The bounded probe below collects at most
 # threshold+1 strings to the driver REGARDLESS of query-table size.
 ISIN_MAX_TERMS = 1024
-# Above this many distinct terms the semi-join's F.broadcast hint is dropped
-# (ADVICE r7): a forced broadcast has no size fallback, so a dictionary-scale
-# vocabulary (multi-million terms ≈ 10^2 MB framed) would blow the driver /
-# broadcast limit instead of letting AQE pick a shuffle semi-join. At the
-# default the hinted broadcast stays ≤ ~25 MB. The probe is a bounded
-# limit(N+1).count() — never a collect.
+# Above this many distinct terms, or this many term bytes, the semi-join's
+# F.broadcast hint is dropped (ADVICE r7): a forced broadcast has no size
+# fallback, so a dictionary-scale vocabulary would blow the driver /
+# broadcast limit instead of letting AQE pick a shuffle semi-join. Terms run
+# up to 255 bytes, so the count alone admits ~250 MB; the byte budget keeps
+# the hinted broadcast near ~25 MB. Both ride one bounded limit(N+1)
+# aggregate — never a collect.
 BROADCAST_MAX_TERMS = 1_000_000
+BROADCAST_MAX_BYTES = 25 << 20
 
 
 def _vocab_sample(vocab: DataFrame, threshold: int) -> list | None:
@@ -61,10 +64,14 @@ def _vocab_sample(vocab: DataFrame, threshold: int) -> list | None:
 
 
 def _vocab_fits_broadcast(vocab: DataFrame) -> bool:
-    """Bounded probe: True when the distinct vocabulary is small enough to
-    force-broadcast (≤ BROADCAST_MAX_TERMS). One limit+count job, driver
+    """Bounded probe: True when the distinct ``term`` vocabulary is small
+    enough to force-broadcast (≤ BROADCAST_MAX_TERMS terms and
+    ≤ BROADCAST_MAX_BYTES term bytes). One limit+aggregate job, driver
     memory O(1)."""
-    return vocab.limit(BROADCAST_MAX_TERMS + 1).count() <= BROADCAST_MAX_TERMS
+    got = vocab.limit(BROADCAST_MAX_TERMS + 1).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.octet_length("term")).alias("bytes")).collect()[0]
+    return got["n"] <= BROADCAST_MAX_TERMS and (got["bytes"] or 0) <= BROADCAST_MAX_BYTES
 
 
 def _prune_terms(table: DataFrame, vocab: DataFrame,
@@ -195,69 +202,15 @@ def batch_search(
         posts = decoded_postings(spark, index_dir, terms=sample,
                                  vocab=None if sample is not None else vocab,
                                  broadcast_vocab=bcast)
-    hits = posts.join(qt.select("query_id", "term", "is_r", "is_c", "is_e", "df", "ord"), "term")
+    # c = idf·(k1+1), once per (query, term): it rides the hit rows only
+    # past the fold's column cap, else the query-sized qconsts frame
+    # joined after the clause filter
+    idf = F.log(F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
+    qt = qt.withColumn("c", idf * (k1 + 1))
+    hits = posts.join(qt.select("query_id", "term", "is_r", "is_c", "is_e", "c", "ord"), "term")
 
-    # Per-doc score folds partials in caller term order (the engine's
-    # exact-fold discipline, VERDICT r7 #2): F.sum's partition-dependent
-    # add order can give two docs with IDENTICAL partial multisets
-    # different float sums, breaking ties differently from the
-    # single-query surface. Two implementations of the same fold:
-    #
-    #   bounded ords (the overwhelmingly common case — ord ≤ the largest
-    #   require+contain clause in the TABLE, probed as ONE driver scalar):
-    #   per-ord conditional sums of (tf, df). Each (query, doc, ord) has
-    #   at most one row, so every conditional sum is order-independent,
-    #   and the score assembles POST-aggregation in ord order with 0.0
-    #   identities — bit-identical to the sorted fold (verified over all
-    #   29.6M matched rows of the 1k-query sf1.0 bench: 0 mismatches),
-    #   pure codegen, and the doclens join moves from the hit rows (75M
-    #   there) to the matched per-doc rows (29.6M — ~2.5× fewer);
-    #
-    #   unbounded ords (> _MAX_ORD_COLS scoring terms in some query):
-    #   the sorted-struct collect_list fold, dl joined pre-agg.
-    _MAX_ORD_COLS = 64
-    maxord_row = queries.agg(F.max(F.size(F.array_distinct(F.concat(
-        F.coalesce(F.array_distinct(F.col("require")), F.array().cast("array<string>")),
-        F.coalesce(F.array_distinct(F.col("contain")), F.array().cast("array<string>")),
-    )))).alias("m")).collect()
-    maxord = int(maxord_row[0]["m"] or 0)
-
-    knorm = F.lit(k1) * (1 - b + b * F.col("dl") / F.lit(float(avgdl)))
-    base_aggs = [
-        # hits are unique per (query, term, doc) — posts carry one row per
-        # (term, doc), qt one per (query, term) — so the distinct require
-        # count is a plain conditional sum: countDistinct forced an extra
-        # two-phase aggregation pass for nothing (measured 2× on the agg)
-        F.sum(F.col("is_r").cast("int")).alias("req_hit"),
-        F.max(F.col("is_c").cast("int")).alias("con_hit"),
-        F.max(F.col("is_e").cast("int")).alias("exc_hit"),
-    ]
-    if 0 < maxord <= _MAX_ORD_COLS:
-        # only the per-ord tf is a per-DOC quantity; df is constant per
-        # (query, term), so it rides a query-sized frame joined after the
-        # clause filter instead of fattening the 10^7-row per-doc shuffle
-        per_doc = hits.groupBy("query_id", "doc_id").agg(
-            *base_aggs,
-            *[F.sum(F.when(F.col("ord") == i, F.col("tf"))).alias(f"__tf{i}")
-              for i in range(1, maxord + 1)])
-        qdfs = qt.groupBy("query_id").agg(
-            *[F.sum(F.when(F.col("ord") == i, F.col("df"))).alias(f"__df{i}")
-              for i in range(1, maxord + 1)])
-    else:
-        idf = F.log(F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        w = F.col("tf") * (k1 + 1) / (F.col("tf") + knorm)
-        hits = hits.join(dl, "doc_id").withColumn(
-            "partial",
-            F.when(F.col("is_r") | F.col("is_c"), F.struct(F.col("ord"), (idf * w).alias("p"))))
-        per_doc = hits.groupBy("query_id", "doc_id").agg(
-            *base_aggs,
-            F.aggregate(F.array_sort(F.collect_list("partial")),
-                        F.lit(0.0), lambda acc, x: acc + x["p"]).alias("score"),
-        )
-
-    matched = (
-        per_doc.join(clause, "query_id")
-        .filter(
+    def keep(per_doc: DataFrame) -> DataFrame:
+        matched = per_doc.join(clause, "query_id").filter(
             (
                 # normal path: all requires hit, a contain hit if any exist, no exclude hit
                 (F.col("req_hit") == F.col("n_req"))
@@ -270,25 +223,25 @@ def batch_search(
                 (F.col("n_req") == 0) & (F.col("n_con") == 0) & (F.col("exc_hit") == 1)
             )
         )
-    )
-    if eng is not None:
         # live-docs BEFORE ranking: a tombstoned doc must not consume a rank
-        matched = eng._live_filter_df(matched)
-    if 0 < maxord <= _MAX_ORD_COLS:
-        # assemble the score on the MATCHED rows: same per-term expression
-        # as the fold path (idf from the summed-singleton df, w from the
-        # summed-singleton tf), added in ord order with 0.0 identities —
-        # a term absent from a doc leaves its __tf null and contributes
-        # literal 0.0, exactly like the fold skipping it
-        matched = matched.join(qdfs, "query_id").join(dl, "doc_id")
-        score = F.lit(0.0)
-        for i in range(1, maxord + 1):
-            dfi, tfi = F.col(f"__df{i}"), F.col(f"__tf{i}")
-            idf_i = F.log(F.lit(1.0) + (F.lit(float(n_docs)) - dfi + 0.5) / (dfi + 0.5))
-            w_i = tfi * (k1 + 1) / (tfi + knorm)
-            score = score + F.coalesce(
-                F.when(tfi.isNotNull() & dfi.isNotNull(), idf_i * w_i), F.lit(0.0))
-        matched = matched.withColumn("score", score)
+        return matched if eng is None else eng._live_filter_df(matched)
+
+    # scoring positions: 1..the largest require+contain clause in the TABLE,
+    # probed as ONE driver scalar (ord 0 marks exclude-only terms)
+    maxord_row = queries.agg(F.max(F.size(F.array_distinct(F.concat(
+        F.coalesce(F.array_distinct(F.col("require")), F.array().cast("array<string>")),
+        F.coalesce(F.array_distinct(F.col("contain")), F.array().cast("array<string>")),
+    )))).alias("m")).collect()
+    ords = range(1, int(maxord_row[0]["m"] or 0) + 1)
+    qconsts = None
+    if ords:
+        qconsts = (qt.groupBy("query_id").agg(
+            *[F.sum(F.when(F.col("ord") == i, F.col("c"))).alias(f"__c{i}") for i in ords]),
+            "query_id")
+    knorm = F.lit(k1) * (1 - b + b * F.col("dl") / F.lit(float(avgdl)))
+    matched = bm25_fold(hits, ["query_id", "doc_id"], keep, ords,
+                        c_of=lambda i: F.col(f"__c{i}"), dl=dl, knorm=knorm,
+                        consts=qconsts)
 
     order = (F.col("score").desc(), F.col("doc_id").asc()) if scored else (F.col("doc_id").asc(),)
     # partition-local top-k BEFORE the rank window (VERDICT r7 #4): the

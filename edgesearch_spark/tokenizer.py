@@ -8,32 +8,23 @@ demo/wiki/data/processor/src/main.rs:23,63): split on non-alphanumerics,
 drop empties, lowercase, optional `{field}_` prefix, optional word-map
 normalization, per-doc dedupe.
 
-Two implementations:
-
-* ``tokenize_pairs`` — pure Spark built-ins (split/explode/groupBy): stays
-  inside WholeStageCodegen on the JVM, zero Python in the hot path. This is
-  the default build path.
-* ``tokenize_pairs_pandas`` — Arrow-vectorized pandas UDF (mapInPandas):
-  same output, demonstrates the vectorized-UDF path and hosts the word-map
-  normalization. Used when a custom normalizer is supplied.
-
-Both emit one row per (doc_id, term) with the in-doc term frequency ``tf``
-and the document length ``dl`` (total token count) — tf/dl feed BM25; the
-reference's boolean semantics only need the distinct terms.
+This module holds the JVM definition of the token stream: pure Spark
+built-ins (split/filter/transform) that stay inside the JVM.
+``norm_tokens_col`` is the normalized stream, ``tokenize_pairs`` the
+(doc_id, term, tf, dl) forward index over it, ``doc_length_col`` the BM25
+dl. The index build tokenizes with the Arrow tokenizers in
+``arrow_pipeline`` (same stream, no JVM row conversion); the JVM stream is
+the reference those are tested against, and the scan-side operators and
+contract queries use it directly.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 TOKEN_SPLIT_RE = r"[^a-zA-Z0-9]+"  # demo convention (get-data.js:28, main.rs:23)
 MAX_TERM_BYTES = 255  # reference serializes term length as u8 (src/build/chunks/mod.rs:50)
-
-PAIRS_SCHEMA = "doc_id long, term string, tf long, dl long"
 
 
 def _tokens_col(content_col) -> F.Column:
@@ -48,10 +39,10 @@ def norm_tokens_col(
     field_prefix: str | None = None,
 ) -> F.Column:
     """The token array WITH the demo-convention normalizations applied —
-    pure JVM (create_map lookup + transform), so position-aware consumers
-    (the positional sidecar) see the same normalized stream the pandas /
-    Arrow tokenizers index, in kept-token order. word_map rewrites happen
-    per token (position-preserving); field_prefix prepends `{field}_`."""
+    pure JVM (create_map lookup + transform), in kept-token order: the
+    stream the Arrow build tokenizers index, rebuilt here for scan-side
+    positional fallbacks. word_map rewrites happen per token
+    (position-preserving); field_prefix prepends `{field}_`."""
     ts = _tokens_col(content_col)
     if word_map:
         m = F.create_map(*[F.lit(x) for kv in word_map.items() for x in kv])
@@ -92,67 +83,3 @@ def doc_terms(df: DataFrame, doc_id_col: str = "doc_id", content_col: str = "con
         F.array_distinct(_tokens_col(content_col)).alias("terms"),
     )
 
-
-def tokenize_pairs_pandas(
-    df: DataFrame,
-    doc_id_col: str = "doc_id",
-    content_col: str = "content",
-    word_map: dict[str, str] | None = None,
-    field_prefix: str | None = None,
-) -> DataFrame:
-    """Arrow-vectorized variant with demo-convention normalization hooks:
-    word_map (build.ts:14-29 `ms→microsoft` style) and `{field}_` term
-    prefixing (build.ts:50). No per-row Python — pandas str ops + explode."""
-    import re
-
-    pat = re.compile(r"[a-zA-Z0-9]+")  # findall of runs ≡ split-and-drop-empties
-    wmap = dict(word_map or {})
-    prefix = f"{field_prefix}_" if field_prefix else ""
-
-    import numpy as np
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # All C-path ops (north rule: no per-row python). A string
-            # groupby over millions of exploded tokens dominated profiles;
-            # factorize → composite int key → np.unique is ~5-10× cheaper.
-            # fillna: a null content cell tokenizes to zero terms (matches
-            # the arrow path's `if c else []`), instead of poisoning str.len
-            toks = pdf[content_col].fillna("").str.lower().str.findall(pat)
-            lens = toks.str.len().to_numpy(np.int64)
-            doc_rep = np.repeat(pdf[doc_id_col].to_numpy(np.int64), lens)
-            if doc_rep.size == 0:
-                continue
-            flat = np.concatenate([np.asarray(x, dtype=object) for x in toks.to_numpy()])
-            codes, uniques = pd.factorize(flat, sort=False)
-            # drop overlong terms by unique-level mask (rare; avoids per-token len())
-            ulen = uniques.str.len().to_numpy() if hasattr(uniques, "str") else np.fromiter((len(u) for u in uniques), np.int64, count=len(uniques))
-            bad = np.flatnonzero(ulen > MAX_TERM_BYTES)
-            if bad.size:
-                keep = ~np.isin(codes, bad)
-                codes, doc_rep = codes[keep], doc_rep[keep]
-            uarr = np.asarray(uniques, dtype=object)
-            if wmap or prefix:
-                # normalize at the UNIQUE level, then re-factorize so terms
-                # merged by the word map (ms→microsoft + literal microsoft)
-                # combine their counts like a post-normalization groupby would
-                s = pd.Series(uarr)
-                if wmap:
-                    s = s.map(lambda t: wmap.get(t, t))
-                if prefix:
-                    s = prefix + s
-                recodes, uniques2 = pd.factorize(s, sort=False)
-                codes = recodes[codes]
-                uarr = np.asarray(uniques2, dtype=object)
-            n_u = len(uarr)
-            key = doc_rep * np.int64(n_u) + codes
-            ukey, tf = np.unique(key, return_counts=True)
-            doc_out = ukey // n_u
-            term_out = uarr[ukey % n_u]
-            # dl = Σ tf per doc; ukey is doc-sorted → segment-sum via reduceat
-            heads = np.flatnonzero(np.concatenate([[True], doc_out[1:] != doc_out[:-1]]))
-            dl_per_doc = np.add.reduceat(tf, heads)
-            dl = np.repeat(dl_per_doc, np.diff(np.concatenate([heads, [doc_out.size]])))
-            yield pd.DataFrame({"doc_id": doc_out, "term": term_out, "tf": tf, "dl": dl})
-
-    return df.select(doc_id_col, content_col).mapInPandas(run, schema=PAIRS_SCHEMA)

@@ -70,6 +70,75 @@ def test_batch_boolean_mode(spark, index_dir, oracle):
     assert got == want.doc_ids
 
 
+
+def test_batch_fold_past_ord_cap(spark, index_dir, oracle, monkeypatch):
+    """A table holding a query with more scoring terms than the fold's
+    per-ord column cap (plans/fold.py) folds every query through the
+    sorted-struct shape — wide and narrow queries alike still match the
+    oracle."""
+    from edgesearch_spark.plans.fold import _MAX_ORD_COLS
+
+    terms = sorted(r["term"] for r in
+                   spark.read.parquet(f"{index_dir}/term_stats").select("term").collect())
+    wide = terms[:_MAX_ORD_COLS + 6]
+    monkeypatch.setattr(oracle, "max_query_terms", 80)
+    specs = {
+        "wide": dict(contain=wide),
+        "wide_mix": dict(require=["import"], contain=wide[:_MAX_ORD_COLS + 1] + ["zzz_nope"],
+                         exclude=["test"]),
+        "narrow": dict(require=["import", "return"]),
+    }
+    qdf = spark.createDataFrame(
+        [(qid, list(s.get("require", [])), list(s.get("contain", [])), list(s.get("exclude", [])))
+         for qid, s in specs.items()],
+        "query_id string, require array<string>, contain array<string>, exclude array<string>")
+    out = batch_search(spark, index_dir, qdf, k=20, scored=True)
+    assert "collect_list" in out._jdf.queryExecution().optimizedPlan().toString()
+    by_q: dict[str, list] = {}
+    for r in sorted(out.collect(), key=lambda r: (r["query_id"], r["rank"])):
+        by_q.setdefault(r["query_id"], []).append(r)
+    for qid, spec in specs.items():
+        want = oracle.search_bm25(Query.make(k=20, **spec))
+        assert want.doc_ids, qid
+        assert [r["doc_id"] for r in by_q.get(qid, [])] == want.doc_ids, qid
+        got_scores = [r["score"] for r in by_q.get(qid, [])]
+        assert np.allclose(got_scores, [round(s, 6) for s in want.scores], atol=1e-6), qid
+
+
+def test_batch_vocab_broadcast_gated_on_bytes(spark, index_dir, oracle, monkeypatch):
+    """The forced vocabulary broadcast is dropped past a BYTE budget too,
+    not only past a term count (ADVICE: 255-byte terms put a
+    count-admitted vocabulary far above the budget). With auto-broadcast
+    off, only the hint could plan a BroadcastExchange."""
+    from pyspark.sql import functions as F
+
+    from edgesearch_spark.plans import batch
+
+    monkeypatch.setattr(batch, "BROADCAST_MAX_BYTES", 1024)
+    synth = spark.range(batch.ISIN_MAX_TERMS + 100).select(
+        F.concat(F.lit("vq"), F.col("id").cast("string")).alias("t"))
+    qdf = synth.select(
+        F.concat(F.lit("s"), F.col("t")).alias("query_id"),
+        F.array(F.col("t")).alias("require"),
+        F.array().cast("array<string>").alias("contain"),
+        F.array().cast("array<string>").alias("exclude"),
+    ).unionByName(spark.createDataFrame(
+        [("real1", ["import", "return"], [], [])],
+        "query_id string, require array<string>, contain array<string>, exclude array<string>"))
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        out = batch_search(spark, index_dir, qdf, k=20, scored=True)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        rows = out.collect()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert "LeftSemi" in plan
+    assert "BroadcastExchange" not in plan
+    got = [r["doc_id"] for r in sorted(rows, key=lambda r: r["rank"]) if r["query_id"] == "real1"]
+    assert got == oracle.search_bm25(Query.make(k=20, require=["import", "return"])).doc_ids
+
+
 @pytest.fixture(scope="module")
 def pos_index_dir(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("batchposidx"))

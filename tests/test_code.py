@@ -64,8 +64,9 @@ def test_split_identifiers_index_option(spark, code_docs, tmp_path_factory):
     """IndexConfig(split_identifiers=True): the INDEX carries subtoken
     terms (query 'user' finds `getUserName`) while the docs store keeps
     the original content (sha256 invariant untouched); doclens counts
-    subtokens. All postings impls accept the option (the marker transform
-    runs JVM-side before any tokenizer)."""
+    subtokens, and the postings match the JVM token stream over the
+    marked content (the marker transform runs JVM-side before the
+    tokenizer)."""
     from pyspark.sql import functions as F
 
     from edgesearch_spark.build import IndexConfig, build_index, load_stats
@@ -88,15 +89,10 @@ def test_split_identifiers_index_option(spark, code_docs, tmp_path_factory):
     dl = {r["doc_id"]: r["dl"] for r in spark.read.parquet(f"{out}/doclens").collect()}
     assert dl[0] == 9
 
-    # a second impl builds byte-identical postings with the option on
-    out2 = str(tmp_path_factory.mktemp("splitids2"))
-    build_index(spark, code_docs, out2,
-                IndexConfig(block_size=8, salt_shift=4, split_identifiers=True,
-                            postings_impl="sortstream"),
-                doc_id_col="doc_id", content_col="content")
-    a = spark.read.parquet(f"{out}/postings").orderBy("term", "salt").collect()
-    b = spark.read.parquet(f"{out2}/postings").orderBy("term", "salt").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
+    # the postings decode to the JVM token stream over the marked content
+    from index_reference import assert_postings_match_reference
+
+    assert assert_postings_match_reference(spark, out) > 0
 
 
 def test_facets_and_suggestions(spark, code_docs, tmp_path_factory):

@@ -346,3 +346,36 @@ def test_bm25_distributed_no_rescore_jobs(spark, engines):
     # +1 slack: one metadata-scale job (doclens/term routing) may ride the
     # full query; the removed rescore stage used to add ≥2 shard-fetch jobs
     assert whole_query <= fused_alone + 1, (whole_query, fused_alone)
+
+
+def test_bm25_distributed_fold_past_ord_cap(spark, tmp_path_factory):
+    """A query with more scoring terms than the fold's per-ord column cap
+    (plans/fold.py) takes the sorted-struct fold: the routed plan carries no
+    per-ord __tf columns, and the page and scores stay bit-identical to the
+    kernel's (ADVICE: the engine fold had no cap and emitted one aggregate
+    column per term)."""
+    from edgesearch_spark.plans.fold import _MAX_ORD_COLS
+
+    rng = np.random.default_rng(5)
+    vocab = [f"w{i}" for i in range(_MAX_ORD_COLS + 6)]
+    rows = [(0, " ".join(["hot"] + vocab))]  # every term exists
+    for d in range(1, 80):
+        picks = rng.choice(len(vocab), size=int(rng.integers(3, 20)), replace=False)
+        words = ["hot"] + [vocab[i] for i in picks for _ in range(int(rng.integers(1, 4)))]
+        rows.append((d, " ".join(words)))
+    out = str(tmp_path_factory.mktemp("wideidx"))
+    build_index(spark, spark.createDataFrame(rows, "doc_id long, content string"), out,
+                IndexConfig(block_size=16, salt_shift=7, max_query_terms=80),
+                doc_id_col="doc_id", content_col="content")
+    kernel = SearchEngine(spark, out)
+    routed = SearchEngine(spark, out, lazy_min_df=10, hot_route_df=10)
+    q = Query.make(contain=vocab + ["hot"], k=10)
+    plan = routed._matched_docs_df(q, routed.fetch_terms(list(q.contain)), scored=True)
+    opt = plan._jdf.queryExecution().optimizedPlan().toString()
+    assert "__tf" not in opt and "collect_list" in opt
+    a = kernel.search_bm25(q)
+    b = routed.search_bm25(q)
+    assert kernel.last_route == "kernel" and routed.last_route == "distributed"
+    assert a.total == b.total == 80
+    assert list(a.doc_ids) == list(b.doc_ids)
+    assert list(a.scores) == list(b.scores)

@@ -1,53 +1,65 @@
-"""The two postings-build paths (sortstream: one-shuffle streaming encode;
-collect: agg+collect_list) must produce logically byte-identical postings,
-and the two tokenizers must agree."""
+"""The postings build path (Arrow tokenize → blob shuffle → encode) against
+an independent reference: the decoded table must equal the JVM token
+stream's (term, doc_id, tf) counts, and the Arrow tokenizer must agree with
+the JVM tokenizer row for row."""
 
-import pytest
+import pyarrow as pa
+from index_reference import assert_postings_match_reference
 from pyspark.sql import functions as F
 
+from edgesearch_spark.arrow_pipeline import _tokenize_batch
 from edgesearch_spark.build import IndexConfig, build_index
 from edgesearch_spark.corpus import generate_corpus
-from edgesearch_spark.tokenizer import tokenize_pairs, tokenize_pairs_pandas
+from edgesearch_spark.tokenizer import norm_tokens_col, tokenize_pairs
 
 N = 700
 
 
-def _fingerprint(spark, out):
-    rows = (
-        spark.read.parquet(f"{out}/postings")
-        .select("term", "salt", "df", "cf", F.sha2(F.col("payload"), 256).alias("ph"),
-                F.col("block_max_doc").cast("string").alias("bmd"))
-        .orderBy("term", "salt")
-        .collect()
-    )
-    return [tuple(r) for r in rows]
+def _arrow_pairs(rows, word_map=None, field_prefix=None):
+    """The build's Arrow tokenizer on driver rows → sorted (doc_id, term,
+    tf, dl) tuples, no Spark job."""
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([r[0] for r in rows], pa.int64()), pa.array([r[1] for r in rows], pa.string())],
+        names=["doc_id", "content"])
+    prefix = f"{field_prefix}_" if field_prefix else ""
+    got = _tokenize_batch(batch, "doc_id", "content", dict(word_map or {}), prefix)
+    if got is None:
+        return []
+    doc_out, code_out, tf, dl, uniques = got
+    return sorted(zip(doc_out.tolist(), [uniques[c] for c in code_out], tf.tolist(), dl.tolist()))
 
 
-def test_sortstream_equals_collect(spark, tmp_path_factory):
-    corpus = generate_corpus(spark, N, seed=8)
-    outs = {}
-    for impl in ("sortstream", "collect", "arrow", "pack"):
-        out = str(tmp_path_factory.mktemp(impl))
-        build_index(spark, corpus, out,
-                    IndexConfig(block_size=16, salt_shift=6, postings_impl=impl),
-                    order_cols=("repo", "path", "commit"))
-        outs[impl] = out
-    fp = {impl: _fingerprint(spark, out) for impl, out in outs.items()}
-    assert fp["sortstream"] == fp["collect"] == fp["arrow"]
+def test_pack_postings_match_reference(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("pack"))
+    build_index(spark, generate_corpus(spark, N, seed=8), out,
+                IndexConfig(block_size=16, salt_shift=6),
+                order_cols=("repo", "path", "commit"))
+    assert assert_postings_match_reference(spark, out) > 1000
+
+
+def test_pack_postings_match_reference_word_map_field_prefix(spark, tmp_path_factory):
+    """word_map/field_prefix builds match the reference, with mapped terms
+    merging their counts (util1→helper + literal helper combine)."""
+    out = str(tmp_path_factory.mktemp("wm_pack"))
+    wmap = {"util1": "helper", "import": "include"}
+    build_index(spark, generate_corpus(spark, 300, seed=12), out,
+                IndexConfig(word_map=wmap, field_prefix="body"),
+                order_cols=("repo", "path", "commit"))
+    assert assert_postings_match_reference(spark, out) > 0
+    names = {r["term"] for r in spark.read.parquet(f"{out}/term_stats").select("term").collect()}
+    assert "body_helper" in names and "body_include" in names
+    assert "body_util1" not in names and "body_import" not in names
+    assert all(t.startswith("body_") for t in names)
 
 
 def test_tokenizers_agree(spark):
     docs = generate_corpus(spark, 200, seed=4).withColumn("doc_id", F.monotonically_increasing_id())
-    a = tokenize_pairs(docs, "doc_id", "content").orderBy("doc_id", "term").collect()
-    b = tokenize_pairs_pandas(docs, "doc_id", "content").orderBy("doc_id", "term").collect()
-    assert [(r["doc_id"], r["term"], r["tf"], r["dl"]) for r in a] == [
-        (r["doc_id"], r["term"], r["tf"], r["dl"]) for r in b
-    ]
+    jvm = sorted(tuple(r) for r in tokenize_pairs(docs, "doc_id", "content").collect())
+    rows = [(r["doc_id"], r["content"]) for r in docs.select("doc_id", "content").collect()]
+    assert jvm == _arrow_pairs(rows)
 
 
 def test_doc_length_col_matches_tokenizer(spark):
-    from pyspark.sql import functions as F
-
     from edgesearch_spark.tokenizer import _tokens_col, doc_length_col
 
     rows = [
@@ -63,58 +75,21 @@ def test_doc_length_col_matches_tokenizer(spark):
     assert got == want == {0: 4, 1: 0, 2: 0, 3: 2, 4: 4}
 
 
-def test_pandas_tokenizer_wordmap_merges_counts(spark):
-    rows = [(0, "ms loves Microsoft ms"), (1, "plain text")]
-    df = spark.createDataFrame(rows, "doc_id long, content string")
-    out = tokenize_pairs_pandas(df, "doc_id", "content", word_map={"ms": "microsoft"}).collect()
-    got = {(r["doc_id"], r["term"]): (r["tf"], r["dl"]) for r in out}
+def test_pandas_tokenizer_wordmap_merges_counts():
+    """The build tokenizer's pandas normalization step (factorize + map at
+    the unique level) merges the counts of terms mapped together."""
+    got = {(d, t): (tf, dl) for d, t, tf, dl in _arrow_pairs(
+        [(0, "ms loves Microsoft ms"), (1, "plain text")], word_map={"ms": "microsoft"})}
     assert got[(0, "microsoft")] == (3, 4)  # 2×ms + 1×Microsoft merged
     assert got[(0, "loves")] == (1, 4)
     assert got[(1, "plain")] == (1, 2)
 
 
-def test_pandas_tokenizer_field_prefix(spark):
-    df = spark.createDataFrame([(0, "alpha beta")], "doc_id long, content string")
-    out = tokenize_pairs_pandas(df, "doc_id", "content", field_prefix="title").collect()
-    assert sorted(r["term"] for r in out) == ["title_alpha", "title_beta"]
-
-
-def test_word_map_field_prefix_parity_arrow_vs_pandas(spark, tmp_path_factory):
-    """IndexConfig word_map/field_prefix must produce byte-identical postings
-    on the arrow (default) and sortstream tokenizers, with mapped terms
-    merging their counts (ms→microsoft + literal microsoft combine)."""
-    from edgesearch_spark.build import IndexConfig, build_index
-
-    corpus = generate_corpus(spark, 300, seed=12)
-    wmap = {"util1": "helper", "import": "include"}
-    outs, dirs = {}, {}
-    for impl in ("arrow", "sortstream", "pack"):
-        out = str(tmp_path_factory.mktemp(f"wm_{impl}"))
-        build_index(
-            spark, corpus, out,
-            IndexConfig(postings_impl=impl, word_map=wmap, field_prefix="body"),
-            order_cols=("repo", "path", "commit"),
-        )
-        outs[impl] = _fingerprint(spark, out)
-        dirs[impl] = out
-    assert outs["arrow"] == outs["sortstream"]
-    tdf = spark.read.parquet(f"{dirs['arrow']}/term_stats")
-    names = {r["term"] for r in tdf.select("term").collect()}
-    assert "body_helper" in names and "body_include" in names
-    assert "body_util1" not in names and "body_import" not in names
-    assert all(t.startswith("body_") for t in names)
-
-
-def test_collect_impl_refuses_word_map(spark, tmp_path_factory):
-    from edgesearch_spark.build import IndexConfig, build_index
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        build_index(
-            spark, generate_corpus(spark, 10, seed=1), str(tmp_path_factory.mktemp("wm_bad")),
-            IndexConfig(postings_impl="collect", word_map={"a": "b"}),
-            order_cols=("repo", "path", "commit"),
-        )
+def test_pandas_tokenizer_field_prefix():
+    """The build tokenizer's pandas normalization step prefixes every
+    term with `{field}_`."""
+    got = _arrow_pairs([(0, "alpha beta")], field_prefix="title")
+    assert sorted(t for _, t, _, _ in got) == ["title_alpha", "title_beta"]
 
 
 def test_postings_file_size_budget(spark, tmp_path_factory):
@@ -122,8 +97,6 @@ def test_postings_file_size_budget(spark, tmp_path_factory):
     files near the configured byte target even when one range partition holds
     far more rows."""
     import os
-
-    from edgesearch_spark.build import IndexConfig, build_index
 
     out = str(tmp_path_factory.mktemp("sized"))
     build_index(
@@ -142,12 +115,10 @@ def test_postings_file_size_budget(spark, tmp_path_factory):
 
 
 def test_tokenizer_unicode_null_parity(spark):
-    """The arrow tokenizer's C++ ASCII fast path + Python fallback must be
-    row-for-row identical to the pandas tokenizer on unicode, null, empty,
-    over-long-token, and emoji content (and under word_map/prefix)."""
-    from edgesearch_spark.arrow_pipeline import tokenize_pairs_arrow
-    from edgesearch_spark.tokenizer import tokenize_pairs_pandas
-
+    """The Arrow tokenizer's C++ ASCII fast path + Python fallback must be
+    row-for-row identical to the JVM token stream (norm_tokens_col explode
+    + count) on unicode, null, empty, over-long-token, emoji, Kelvin-sign,
+    ligature and final-sigma content, with and without word_map/prefix."""
     rows = [
         (0, "Hello WORLD foo123 bar"),
         (1, "café résumé naïve"),
@@ -158,10 +129,18 @@ def test_tokenizer_unicode_null_parity(spark):
         (6, "x" * 600 + " short ok"),
         (7, "emoji 🎉 party42"),
         (8, "plain ascii only line two three"),
+        (9, "Kelvin 5\u212a run"),  # Kelvin sign lowercases to ASCII k
+        (10, "\ufb01le of\ufb03ce"),  # fi / ffi ligatures
+        (11, "ΟΔΟΣ σοφός text"),  # final sigma
     ]
     df = spark.createDataFrame(rows, "doc_id long, content string")
     for kw in ({}, dict(word_map={"abc42": "merged", "text": "merged"}, field_prefix="f")):
-        a = sorted(map(tuple, tokenize_pairs_arrow(df, "doc_id", "content", **kw).collect()))
-        p = sorted(map(tuple, tokenize_pairs_pandas(df, "doc_id", "content", **kw).collect()))
-        assert a == p, kw
-    assert len(a) > 0
+        toks = df.select("doc_id", norm_tokens_col("content", **kw).alias("toks"))
+        dl = toks.select("doc_id", F.size("toks").alias("dl"))
+        want = sorted(
+            (r["doc_id"], r["term"], r["tf"], r["dl"])
+            for r in toks.select("doc_id", F.explode("toks").alias("term"))
+            .groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
+            .join(dl, "doc_id").collect())
+        assert _arrow_pairs(rows, **kw) == want, kw
+        assert len(want) > 0

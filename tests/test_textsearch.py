@@ -245,7 +245,7 @@ def test_index_regex_unsound_index_routes_to_scan(spark, tmp_path_factory):
 
     out2 = str(tmp_path_factory.mktemp("wmapidx"))
     build_index(spark, docs, out2,
-                IndexConfig(word_map={"msdn": "microsoft"}, postings_impl="pack"),
+                IndexConfig(word_map={"msdn": "microsoft"}),
                 doc_id_col="doc_id", content_col="content")
     eng2 = SearchEngine(spark, out2)
     # stats now record the MAP ITSELF (r8: scan-side positional fallbacks

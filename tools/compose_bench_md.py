@@ -97,7 +97,7 @@ def main() -> None:
         "|---|---|---|",
         "| initial (collect_list, 128MB splits, 8g heap) | 362 | 20k |",
         "| + derive term_stats from postings, split tuning | 2,081 | 100k |",
-        "| + one-shuffle sortstream postings encoder | 3,906 | 100k |",
+        "| + one-shuffle streaming postings encoder | 3,906 | 100k |",
         "| + regexp_count doclens (codegen), factorize tokenizer | 8,726 | 300k |",
         f"| final (quiet-host window, 1M docs) | {r32['value']:,.0f} | 1M |",
     ]
