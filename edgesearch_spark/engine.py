@@ -36,7 +36,7 @@ import os
 from collections import OrderedDict
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .build import idf_value, load_stats
@@ -1263,49 +1263,34 @@ class SearchEngine:
     @staticmethod
     def _fused_topk_count(df: DataFrame, limit: int, by_score: bool):
         """ONE Spark action returning (top-``limit`` (doc_id, score) rows
-        under the given order, exact row count) for a (doc_id, score) frame.
+        under the given order, exact row count) for a (doc_id, score) frame
+        (only doc_id is read when not ``by_score``).
 
         The distributed route's latency floor was Spark job SCHEDULING, not
-        work: count + TakeOrdered ran as two actions (VERDICT r5 #4). Here a
-        partition-local top-k (vectorized pandas, incremental
-        concat+sort+head per Arrow batch) bounds what crosses to the driver
-        at (n_partitions+1)·limit rows REGARDLESS of the matched-set size —
-        the scale posture of TakeOrdered — while the partition row count
-        rides the same pass as a sentinel row (doc_id = −1, impossible for
-        real docs; score carries the count exactly up to 2^53). The driver
-        merges ≤ n_partitions tails. Top-limit set and tie order
-        (score desc, doc_id asc / doc_id asc) are identical to the
-        orderBy().limit() they replace."""
-        import pandas as pd
+        work: count + TakeOrdered ran as two actions (VERDICT r5 #4). The
+        count is an Observation over the frame the TakeOrdered consumes
+        (CollectMetrics below TakeOrderedAndProject), so both ride one
+        action. TakeOrdered keeps ≤ ``limit`` rows per partition, so what
+        reaches the driver is bounded REGARDLESS of the matched-set size.
+        Ties break as score desc, doc_id asc (scored) / doc_id asc.
 
-        keys = ["score", "doc_id"] if by_score else ["doc_id"]
-        asc = [False, True] if by_score else [True]
-
-        def fuse(it):
-            n = 0
-            best = None
-            for pdf in it:
-                n += len(pdf)
-                cur = pdf if best is None else pd.concat((best, pdf))
-                best = cur.sort_values(keys, ascending=asc).head(limit)
-            out = [] if best is None else [best]
-            out.append(pd.DataFrame({"doc_id": [-1], "score": [float(n)]}))
-            yield pd.concat(out)
-
-        rows = df.mapInPandas(fuse, schema="doc_id long, score double").collect()
-        total = int(sum(r["score"] for r in rows if r["doc_id"] == -1))
-        tops = [r for r in rows if r["doc_id"] != -1]
-        if by_score:
-            tops.sort(key=lambda r: (-r["score"], r["doc_id"]))
-        else:
-            tops.sort(key=lambda r: r["doc_id"])
-        return tops[:limit], total
+        TakeOrdered reads only ``limit`` rows per partition when its input
+        already has the requested order (a range scan, a sort-merge join on
+        doc_id), which would stop the count early. doc_id is never null, so
+        ordering it NULLS LAST changes no result but is an order no scan,
+        join or aggregate produces: every row is read."""
+        obs = Observation()
+        doc = F.col("doc_id").asc_nulls_last()
+        order = (F.col("score").desc(), doc) if by_score else (doc,)
+        rows = (df.observe(obs, F.count(F.lit(1)).alias("n"))
+                .orderBy(*order).limit(limit).collect())
+        return rows, obs.get["n"]
 
     def _search_distributed(self, q: Query, tp: dict) -> SearchResult:
         """Boolean page + exact total without driver materialization: ONE
-        fused cluster-side action (partition-local top-k + count — see
-        _fused_topk_count) hands the driver ≤ continuation+k docIDs per
-        partition and the exact total.
+        Spark action (TakeOrdered + an observed count — see
+        _fused_topk_count) hands the driver the first continuation+k
+        docIDs and the exact total.
 
         Single-term unions skip the cluster entirely: total = df (exact,
         from shard summaries) and the docID-ordered page decodes only the
@@ -1336,7 +1321,7 @@ class SearchEngine:
         plan's scores are already BIT-IDENTICAL to the kernel's
         (_matched_docs_df replicates _score_docs' float64 operation order
         and folds partials in caller term order — see its docstring), so
-        the partition-local top-k + exact count of _fused_topk_count IS the
+        the TakeOrdered page + observed count of _fused_topk_count IS the
         final page. No driver rescore, no verification margin, no retry
         loop, and no lazy candidate-shard fetches (VERDICT r6 #5 — the
         rescore stage was the route's remaining per-query job floor; its

@@ -605,10 +605,10 @@ class MultiSegmentEngine(SearchEngine):
             live = self.spark.range(self.n_docs).select(
                 F.col("id").alias("doc_id")
             ).join(self._tomb_df, "doc_id", "left_anti")
-            total = live.count()
+            rows, total = self._fused_topk_count(
+                live, q.continuation + q.k, by_score=False)
             if q.continuation >= total:
                 return SearchResult(total, None, [], [])
-            rows = live.orderBy("doc_id").limit(q.continuation + q.k).collect()
             page = [int(r["doc_id"]) for r in rows][q.continuation :]
             after = q.continuation + len(page)
             return SearchResult(total, after if total > after else None,

@@ -107,12 +107,22 @@ def test_exclude_only_hot_quirk_routes(engines):
 
 def test_all_hot_require_routes(engines):
     eager, _, routed = engines
-    q = Query.make(require=["hot", "third"], k=25)
-    _same(eager.search(q), routed.search(q))
-    assert routed.last_route == "distributed"
-    # BM25 over the same shape: distributed rescore is bit-identical
-    a, b = eager.search_bm25(q), routed.search_bm25(q)
-    _same(a, b)
+    n_third = len(range(0, N, 3))
+    for q in (
+        Query.make(require=["hot", "third"], k=25),
+        # a page starting at the total: the observed count still answers
+        Query.make(require=["hot", "third"], continuation=n_third, k=25),
+        # every 'third' doc holds 'hot': the matched set is empty
+        Query.make(require=["third"], exclude=["hot"], k=25),
+    ):
+        # boolean, then BM25 over the same shape: bit-identical pages
+        for mode in ("search", "search_bm25"):
+            a, b = getattr(eager, mode)(q), getattr(routed, mode)(q)
+            assert routed.last_route == "distributed"
+            _same(a, b)
+            if q.continuation or q.exclude:
+                assert (b.total, b.continuation, list(b.doc_ids)) == (
+                    0 if q.exclude else n_third, None, [])
 
 
 def test_rare_require_stays_kernel(engines):
@@ -291,6 +301,21 @@ def test_routed_query_fused_action_cuts_jobs(spark, engines):
     assert bool_jobs <= fused, (bool_jobs, fused)
     # scored mode adds the doclens scan + join (two more AQE stage jobs)
     assert bm25_jobs <= fused + 2, (bm25_jobs, fused)
+
+
+def test_fused_topk_count_reads_presorted_input_whole(spark):
+    """A frame already in page order (a range scan is doc_id-sorted per
+    partition) still yields the exact count: the page action must not stop
+    at ``limit`` rows per partition before the observed count has seen
+    every row."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(0, 1000, numPartitions=4).select(
+        F.col("id").alias("doc_id"), (F.col("id") % 7).cast("double").alias("score"))
+    rows, n = SearchEngine._fused_topk_count(df, 10, by_score=False)
+    assert n == 1000 and [r["doc_id"] for r in rows] == list(range(10))
+    rows, n = SearchEngine._fused_topk_count(df, 10, by_score=True)
+    assert n == 1000 and [r["doc_id"] for r in rows] == list(range(6, 76, 7))
 
 
 def test_decode_spread_gated_on_hotness(spark, index_dir):

@@ -12,6 +12,7 @@
 
 import contextlib
 import io
+import re
 import shutil
 import uuid
 
@@ -27,6 +28,20 @@ def plan_of(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def python_nodes(plan: str) -> set:
+    """Names of the Python-crossing operators in a formatted plan."""
+    return set(re.findall(r"\b\w*Python\w*|\bMapIn\w+", plan))
+
+
+def decode_only_python(plan: str) -> bool:
+    """True iff every Python node of ``plan`` is a posting decode's
+    MapInPandas (its formatted details name the decode function)."""
+    nodes = re.findall(r"\(\d+\) MapInPandas\n", plan)
+    funcs = re.findall(r"MapInPandas\nInput \[\d+\]: [^\n]*\nArguments: (\w+)", plan)
+    return (python_nodes(plan) == {"MapInPandas"} and len(funcs) == len(nodes) > 0
+            and set(funcs) == {"_decode_rows"})
 
 
 @pytest.fixture(scope="module")
@@ -159,8 +174,6 @@ def test_distributed_route_has_no_python_rdd(spark, index_dir):
     """The distributed route's per-term literal table is a local relation:
     the executed plan holds no Python-RDD scan, and its only Python nodes
     are the posting decode's MapInPandas."""
-    import re
-
     from edgesearch_spark.engine import SearchEngine
     from edgesearch_spark.oracle import Query
 
@@ -173,7 +186,59 @@ def test_distributed_route_has_no_python_rdd(spark, index_dir):
     assert df.collect()
     plan = plan_of(df)  # the executed (final adaptive) plan
     assert "ExistingRDD" not in plan, plan
-    assert set(re.findall(r"\b\w*Python\w*|\bMapIn\w+", plan)) == {"MapInPandas"}, plan
+    assert decode_only_python(plan), plan
+
+
+@pytest.mark.parametrize("scored", [False, True])
+def test_routed_page_action_is_take_ordered_over_observed_count(
+        spark, index_dir, monkeypatch, scored):
+    """A routed page and its exact total are ONE JVM action: the executed
+    plan is TakeOrderedAndProject over CollectMetrics (the observed count),
+    and its only Python node is the posting decode's MapInPandas."""
+    from edgesearch_spark.engine import SearchEngine
+    from edgesearch_spark.oracle import Query
+
+    DataFrame = type(spark.range(1))  # the session's concrete class
+    eng = SearchEngine(spark, index_dir, hot_route_df=0)
+    kernel = SearchEngine(spark, index_dir)
+    q = Query.make(require=["import"], contain=["return", "def"], k=5)
+    collected = []
+    orig = DataFrame.collect
+
+    def spy(self):
+        rows = orig(self)
+        collected.append(self)
+        return rows
+
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    got = eng.search_bm25(q) if scored else eng.search(q)
+    monkeypatch.setattr(DataFrame, "collect", orig)
+    assert eng.last_route == "distributed"
+    want = kernel.search_bm25(q) if scored else kernel.search(q)
+    assert (got.total, got.continuation, got.doc_ids) == (
+        want.total, want.continuation, want.doc_ids)
+    plan = plan_of(collected[-1])  # the page action, as executed
+    assert "TakeOrderedAndProject" in plan and "CollectMetrics" in plan, plan
+    assert decode_only_python(plan), plan
+
+
+def test_batch_rank_is_window_group_limit(spark, index_dir):
+    """batch_search ranks with a row_number() <= k filter that Spark plans
+    as a per-query WindowGroupLimit on both sides of the rank shuffle; the
+    only Python nodes left are the posting decode's MapInPandas."""
+    from edgesearch_spark.plans.batch import QUERIES_SCHEMA, batch_search
+    from edgesearch_spark.session import local_frame
+
+    qdf = local_frame(spark, [("a", ["import"], ["return", "def"], []),
+                              ("b", [], ["value"], ["test"])], QUERIES_SCHEMA)
+    df = batch_search(spark, index_dir, qdf, k=5, scored=True)
+    rows = df.collect()
+    assert rows and max(r["rank"] for r in rows) == 4
+    plan = plan_of(df)
+    # a partial limit below the query_id Exchange, the final one above it
+    for mode in ("Partial", "Final"):
+        assert f"row_number(), 5, {mode}" in plan, plan
+    assert decode_only_python(plan), plan
 
 
 def test_driver_literal_tables_are_local_relations(spark, tmp_path):
