@@ -173,8 +173,12 @@ def main() -> None:
         t0 = time.monotonic()
         build_index(spark, corpus, out, IndexConfig(), order_cols=("repo", "path", "commit"), resume=False)
         # best-of-N: the sandbox host carries external load spikes; min is
-        # the steady-state number a dedicated cluster would see
-        build_sec = min(build_sec, time.monotonic() - t0)
+        # the steady-state number a dedicated cluster would see. The stage
+        # table is snapshotted from that same build: the next build
+        # overwrites the manifests.
+        dt = time.monotonic() - t0
+        if dt < build_sec:
+            build_sec, build_stats = dt, _postings_stats(out)
     docs_per_sec = n_corpus / build_sec
     queries["index_build"] = round(build_sec, 3)
 
@@ -231,6 +235,8 @@ def main() -> None:
             build_index(spark, corpus, out, IndexConfig(),
                         order_cols=("repo", "path", "commit"), resume=False)
             rebuild_sec = time.monotonic() - t0
+            if rebuild_sec < build_sec:
+                build_stats = _postings_stats(out)
             prev_ctl["current_rebuild_sec"] = round(rebuild_sec, 3)
             # bracket stability: if the two current-code builds disagree
             # >25%, the window moved mid-bracket and the ratio is suspect
@@ -256,7 +262,7 @@ def main() -> None:
     def record(name: str, dt: float) -> None:
         samples.setdefault(name, []).append(dt)
 
-    eng = SearchEngine(spark, out).warm()  # serving posture: postings cached + norms loaded
+    eng = SearchEngine(spark, out).warm()  # serving posture: postings cached + term dict on the driver
     hot_df = max(1000, n_corpus // 20)
     eng_hot = SearchEngine(spark, out, lazy_min_df=hot_df, hot_route_df=hot_df)
     eng_kernel = SearchEngine(spark, out, lazy_min_df=hot_df, hot_route_df=10**12)
@@ -372,7 +378,7 @@ def main() -> None:
             docs_per_sec / prev_ctl["docs_per_sec"], 3)
     full = dict(summary)
     full["detail"] = {**summary["detail"], "query_spread": spread,
-                      **_postings_stats(out)}
+                      **build_stats}
     try:
         os.makedirs(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH"),
                     exist_ok=True)

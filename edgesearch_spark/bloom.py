@@ -12,12 +12,11 @@ This sidecar makes absent-term checks driver-local at any dictionary size:
   * terms are hash-partitioned into ranges of ~2^16 terms; each range gets
     one bloom filter row (12 bits/term, k=7 → ~0.4% false-positive rate);
   * the sidecar is O(n_terms · 12 bits) TOTAL but loaded per row — a driver
-    holds all rows for dictionaries up to ``max_eager_rows`` ranges eagerly
-    and, beyond that, fetches rows per range on demand into a bounded LRU
-    (rows are independent; a probe needs exactly ONE row). The per-range
-    fetch is a driver-local pyarrow read with a range_id predicate — the
+    fetches a range's row on the first probe of that range into a bounded
+    LRU (rows are independent; a probe needs exactly ONE row). The fetch
+    is a driver-local key-range read (``localread.LocalTable``) — the
     sidecar is written range_id-sorted so parquet row-group stats prune it
-    — and costs zero Spark jobs either way;
+    — and costs zero Spark jobs;
   * probe says "definitely absent" (skip the lookup job entirely — the
     overwhelmingly common case for typo/OOV terms) or "maybe present"
     (fall through to the normal term_stats pushdown scan). No false
@@ -115,26 +114,18 @@ def build_term_bloom(spark: SparkSession, term_stats: DataFrame, out_path: str,
 class TermBloom:
     """Driver-side probe over one index's sidecar rows.
 
-    Eager mode (``loader=None``): all rows live in ``_bits``; a range with
-    no row holds no terms at all ⇒ definitely absent.
+    ``loader(range_id) -> bytes | None`` fetches a range's row on the first
+    probe of that range (None: no terms hashed to it ⇒ definitely absent);
+    ``max_cached_rows`` bounds the LRU (96 KiB/row), so a 10^9-term
+    dictionary (~15k ranges, 1.4 GB) costs the driver only the hot ranges.
+    ``rows_fetched`` counts loader calls (test-asserted: ≤1 per novel
+    range, 0 on re-probe of a cached range)."""
 
-    Lazy mode: ``loader(range_id) -> bytes | None`` fetches a row on first
-    probe of its range; ``max_cached_rows`` bounds the LRU (96 KiB/row), so
-    a 10^9-term dictionary (~15k ranges, 1.4 GB) costs the driver only the
-    hot ranges. ``rows_fetched`` counts loader calls (test-asserted: ≤1 per
-    novel range, 0 on re-probe of a cached range)."""
-
-    def __init__(self, rows, loader=None, n_ranges: int | None = None,
-                 max_cached_rows: int | None = None):
+    def __init__(self, n_ranges: int, loader, max_cached_rows: int | None = None):
         from collections import OrderedDict
 
-        rows = list(rows)
-        self.n_ranges = int(n_ranges if n_ranges is not None
-                            else (rows[0]["n_ranges"] if rows else 1))
-        self._bits: "OrderedDict[int, np.ndarray | None]" = OrderedDict(
-            (int(r["range_id"]), np.frombuffer(bytes(r["bits"]), dtype=np.uint8))
-            for r in rows
-        )
+        self.n_ranges = int(n_ranges)
+        self._bits: "OrderedDict[int, np.ndarray | None]" = OrderedDict()
         self._loader = loader
         self._max = max_cached_rows
         self.rows_fetched = 0
@@ -143,8 +134,6 @@ class TermBloom:
         if rid in self._bits:
             self._bits.move_to_end(rid)
             return self._bits[rid]
-        if self._loader is None:
-            return None  # eager mode: no row ⇒ empty range
         raw = self._loader(rid)
         self.rows_fetched += 1
         bits = None if raw is None else np.frombuffer(raw, dtype=np.uint8)
@@ -162,103 +151,32 @@ class TermBloom:
         return not bool(np.all(bits[pos >> np.uint64(3)] & (1 << (pos & np.uint64(7))).astype(np.uint8)))
 
 
-def _open_sidecar(path: str):
-    """pyarrow dataset over a local OR remote (hdfs://, s3a://, ...) sidecar
-    dir; None when absent/empty or pyarrow has no driver for the scheme."""
-    import glob as _glob
-
-    import pyarrow.dataset as ds
-
-    if "://" not in path or path.startswith("file://"):
-        local = path[len("file://"):] if path.startswith("file://") else path
-        if not os.path.exists(local):
-            return None
-        files = sorted(_glob.glob(os.path.join(local, "*.parquet")))
-        return ds.dataset(files, format="parquet") if files else None
-    try:
-        from pyarrow import fs as pafs
-
-        # pyarrow speaks s3://, not Hadoop's s3a:// alias
-        uri = "s3://" + path[len("s3a://"):] if path.startswith("s3a://") else path
-        filesystem, rel = pafs.FileSystem.from_uri(uri)
-        infos = filesystem.get_file_info(pafs.FileSelector(rel, recursive=False))
-        files = sorted(i.path for i in infos
-                       if i.type == pafs.FileType.File and i.path.endswith(".parquet"))
-        if not files:
-            return None
-        return ds.dataset(files, format="parquet", filesystem=filesystem)
-    except Exception:
-        return None
-
-
-def _load_via_spark(spark, path: str, max_eager_rows: int,
-                    max_cached_rows: int) -> TermBloom | None:
-    """Sidecar via Spark's Hadoop filesystem — the fallback for remote dirs
-    pyarrow can't open. Costs Spark jobs (schema infer + collect), so the
-    local/pyarrow path stays the fast default."""
-    from pyspark.errors import AnalysisException
-    from pyspark.sql import functions as F
-
-    try:
-        sdf = spark.read.parquet(path)
-        n_rows = sdf.count()
-    except AnalysisException:
-        return None
-    except Exception:
-        # the bloom is an optional accelerator: any reachability failure
-        # (permissions, transient fs) degrades to the term_stats fallback
-        # instead of failing the query
-        return None
-    if n_rows == 0:
-        return None
-    if n_rows <= max_eager_rows:
-        return TermBloom([r.asDict() for r in sdf.collect()])
-    n_ranges = sdf.select("n_ranges").head()["n_ranges"]
-
-    def loader(rid: int):
-        rows = sdf.filter(F.col("range_id") == rid).select("bits").collect()
-        return bytes(rows[0]["bits"]) if rows else None
-
-    return TermBloom([], loader=loader, n_ranges=int(n_ranges),
-                     max_cached_rows=max_cached_rows)
-
-
 def load_term_bloom(spark: SparkSession, index_dir: str,
-                    max_eager_rows: int = 4096,
                     max_cached_rows: int = 1024) -> TermBloom | None:
-    """Open the sidecar with ZERO Spark jobs (driver-local pyarrow read —
-    the probe is a control-plane structure, same posture as the reference
-    worker reading its own chunk metadata). ≤ ``max_eager_rows`` ranges
-    (~384 MB of bits) load whole; bigger dictionaries get the per-range
-    lazy LRU. None when the sidecar is absent (pre-bloom index) — callers
-    fall back to the term_stats scan."""
-    import pyarrow.dataset as ds
+    """Open the sidecar with ZERO Spark jobs (driver-local reads — the
+    probe is a control-plane structure, same posture as the reference
+    worker reading its own chunk metadata). Rows load per range on first
+    probe into an LRU of ``max_cached_rows``. None when the sidecar is
+    absent (pre-bloom index) or unreachable — callers fall back to the
+    term_stats scan."""
+    from pyspark.errors import PySparkException
+
+    from .localread import LocalTable
 
     path = os.path.join(index_dir, "term_bloom") if "://" not in index_dir \
         else index_dir.rstrip("/") + "/term_bloom"
-    dset = _open_sidecar(path)
-    if dset is None:
-        if "://" not in path or path.startswith("file://"):
-            # LOCAL and absent = pre-bloom index, definitively: no point
-            # paying a Spark analysis round-trip that cannot succeed
-            return None
-        # non-local dir pyarrow can't reach (e.g. hdfs:// without libhdfs):
-        # keep the sidecar alive through Spark's own filesystem rather than
-        # silently dropping it and paying a term_stats scan per OOV term
-        return _load_via_spark(spark, path, max_eager_rows, max_cached_rows)
-    n_rows = dset.count_rows()
-    if n_rows <= max_eager_rows:
-        tbl = dset.to_table()
-        rows = [{"range_id": rid, "n_ranges": nr, "bits": bits}
-                for rid, nr, bits in zip(tbl["range_id"].to_pylist(),
-                                         tbl["n_ranges"].to_pylist(),
-                                         tbl["bits"].to_pylist())]
-        return TermBloom(rows)
-    n_ranges = dset.head(1)["n_ranges"][0].as_py()
+    try:
+        table = LocalTable([path], spark)
+        n_ranges = table.first("n_ranges")
+    except (OSError, PySparkException):
+        # the bloom is an optional accelerator: an unreachable store
+        # degrades to the term_stats fallback instead of failing the query
+        return None
+    if n_ranges is None:
+        return None
 
     def loader(rid: int):
-        t = dset.to_table(filter=ds.field("range_id") == rid, columns=["bits"])
+        t = table.read(["bits"], "range_id", rid, rid + 1)
         return t["bits"][0].as_py() if t.num_rows else None
 
-    return TermBloom([], loader=loader, n_ranges=int(n_ranges),
-                     max_cached_rows=max_cached_rows)
+    return TermBloom(n_ranges, loader, max_cached_rows)

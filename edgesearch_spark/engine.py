@@ -32,7 +32,6 @@ worker). ``postings_for_terms``/``doc_fetch`` expose the distributed pieces.
 
 from __future__ import annotations
 
-import os
 from collections import OrderedDict
 
 import numpy as np
@@ -109,54 +108,25 @@ class NormsCache:
     """docID-range-paged doc-length norms with a bounded LRU — the norms
     twin of the two-level lazy postings fetch (VERDICT r4 #4).
 
-    The eager norms array is the serving-node ceiling at extreme scale
+    A whole norms array is the serving-node ceiling at extreme scale
     (int32 × n_docs = 4 GB at 10^9 docs); a kernel query only ever norms
     its CANDIDATE docs, which cluster in few docID ranges. Pages load on
-    demand via driver-local pyarrow (zero Spark jobs — the doclens parquet
-    is docID-ordered, so range filters prune row groups), and the LRU
-    bounds residency at max_pages × page_docs × 4 bytes.
+    demand through a driver-local key-range read (``LocalTable``: zero
+    Spark jobs — the doclens parquet is docID-ordered, so range filters
+    prune row groups), and the LRU bounds residency at max_pages ×
+    page_docs × 4 bytes. A corpus of up to page_docs docs is one page: the
+    whole array, read once.
 
     Supports exactly the kernel's access pattern: ``norms[np.ndarray]``
     fancy indexing, returning int32 (score arithmetic promotes to float64
-    identically to the eager array). ``pages_fetched`` is test-asserted."""
+    identically from int32 or int64). ``pages_fetched`` is test-asserted."""
 
     def __init__(self, doclens_dirs: list[str], n_docs: int,
-                 page_docs: int = 1 << 22, max_pages: int = 64):
-        import glob as _glob
+                 page_docs: int = 1 << 22, max_pages: int = 64,
+                 spark: SparkSession | None = None):
+        from .localread import LocalTable
 
-        import pyarrow.dataset as ds
-
-        # one child dataset PER DIR, each bound to its own filesystem
-        # (ADVICE r5: a shared `fs` from the last remote dir would resolve
-        # local / other-scheme segment paths against the wrong filesystem
-        # in a mixed multi-segment engine); union-ed below.
-        dsets = []
-        for d in doclens_dirs:
-            if "://" not in d or d.startswith("file://"):
-                local = d[len("file://"):] if d.startswith("file://") else d
-                files = sorted(_glob.glob(os.path.join(local, "*.parquet")))
-                if files:
-                    dsets.append(ds.dataset(files, format="parquet"))
-            else:
-                # remote (hdfs://, s3a://) index dir: glob sees nothing —
-                # list through pyarrow's filesystem (bloom-sidecar posture)
-                from pyarrow import fs as pafs
-
-                uri = "s3://" + d[len("s3a://"):] if d.startswith("s3a://") else d
-                fs, rel = pafs.FileSystem.from_uri(uri)
-                infos = fs.get_file_info(pafs.FileSelector(rel, recursive=False))
-                files = sorted(i.path for i in infos
-                               if i.type == pafs.FileType.File
-                               and i.path.endswith(".parquet"))
-                if files:
-                    dsets.append(ds.dataset(files, format="parquet", filesystem=fs))
-        if not dsets and n_docs:
-            # an empty dataset would fail only at first query with an opaque
-            # ArrowInvalid — fail construction loudly instead
-            raise FileNotFoundError(f"no doclens parquet under {doclens_dirs}")
-        self._dset = (None if not dsets
-                      else dsets[0] if len(dsets) == 1 else ds.dataset(dsets))
-        self._ds = ds
+        self._table = LocalTable(doclens_dirs, spark)
         self.n_docs = int(n_docs)
         self.page_docs = int(page_docs)
         self.max_pages = max(1, int(max_pages))
@@ -170,13 +140,7 @@ class NormsCache:
             return pages[pid]
         lo = pid * self.page_docs
         hi = min(lo + self.page_docs, self.n_docs)
-        if self._dset is None:  # only reachable when n_docs == 0
-            page = np.zeros(max(hi - lo, 0), dtype=np.int32)
-            pages[pid] = page
-            return page
-        tbl = self._dset.to_table(
-            columns=["doc_id", "dl"],
-            filter=(self._ds.field("doc_id") >= lo) & (self._ds.field("doc_id") < hi))
+        tbl = self._table.read(["doc_id", "dl"], "doc_id", lo, hi)
         page = np.zeros(hi - lo, dtype=np.int32)
         if tbl.num_rows:
             ids = tbl["doc_id"].to_numpy(zero_copy_only=False)
@@ -566,10 +530,8 @@ class SearchEngine:
     # terms allowed to hold a live decode memo at once (LRU; ≤16 MB each ⇒
     # ~1 GB decoded ceiling). Class attr so MultiSegmentEngine inherits.
     max_decoded_terms: int = 64
-    # norms posture: corpora up to this many docs load the full int32 array
-    # (64 MB at the default); bigger ones page norms by docID range with an
-    # LRU (NormsCache) — max_pages × page_docs × 4 B resident (1 GB default)
-    norms_eager_max_docs: int = 1 << 24
+    # norms page by docID range with an LRU (NormsCache):
+    # max_pages × page_docs × 4 B resident (1 GB default)
     norms_page_docs: int = 1 << 22
     norms_max_pages: int = 64
     last_route: str = "kernel"  # diagnostics: "kernel" | "distributed"
@@ -608,14 +570,14 @@ class SearchEngine:
         self._dec_lru: "OrderedDict[str, TermPostings]" = OrderedDict()
         self._df_cache: dict[str, int | None] = {}
         self._dict_complete = False  # warm() may load the whole term dict
-        self._doclens: np.ndarray | None = None
+        self._doclens: NormsCache | None = None
         self._blooms: list | bool = False  # False = not loaded yet
 
     def warm(self, max_dict_terms: int = 2_000_000) -> "SearchEngine":
-        """Pin the postings table in executor memory (Spark cache), load the
-        norms, and (when the dictionary fits) pull the whole term→df map to
-        the driver so query routing never runs a term_stats job — the serving
-        posture for repeated queries. At 10^12-doc scale one caches the hot
+        """Pin the postings table in executor memory (Spark cache), open the
+        norms (driver-local, no Spark job), and (when the dictionary fits)
+        pull the whole term→df map to the driver so query routing never runs
+        a term_stats job — the serving posture for repeated queries. At 10^12-doc scale one caches the hot
         term range, not the whole table; the filter pushdown path is
         identical either way."""
         self._postings_df = self._postings_df.cache()
@@ -647,24 +609,16 @@ class SearchEngine:
         return [f"{self.index_dir}/doclens"]
 
     @property
-    def doclens(self) -> "np.ndarray | NormsCache":
-        """int32 norms, indexable by a docID array. Small corpora load the
-        whole array once (int32 halves it vs int64; score arithmetic
-        promotes to float64 identically from either width); above
-        norms_eager_max_docs the norms page in by docID range with an LRU
-        (NormsCache) so the kernel's driver footprint is O(hot ranges),
-        not O(n_docs) — the 10^9+-doc serving posture."""
+    def doclens(self) -> NormsCache:
+        """int32 norms, indexable by a docID array. They page in by docID
+        range with an LRU (NormsCache), read on the driver with no Spark
+        job, so the kernel's driver footprint is O(hot ranges), not
+        O(n_docs) — the 10^9+-doc serving posture."""
         if self._doclens is None:
-            if self.n_docs > self.norms_eager_max_docs:
-                self._doclens = NormsCache(
-                    self._doclens_dirs(), self.n_docs,
-                    page_docs=self.norms_page_docs,
-                    max_pages=self.norms_max_pages)
-            else:
-                pdf = self.spark.read.parquet(*self._doclens_dirs()).select("doc_id", "dl").toPandas()
-                arr = np.zeros(self.n_docs, dtype=np.int32)
-                arr[pdf["doc_id"].to_numpy()] = pdf["dl"].to_numpy()
-                self._doclens = arr
+            self._doclens = NormsCache(
+                self._doclens_dirs(), self.n_docs,
+                page_docs=self.norms_page_docs,
+                max_pages=self.norms_max_pages, spark=self.spark)
         return self._doclens
 
     # ---- absent-term bloom sidecar (driver-local, no job per novel term) ----
@@ -673,10 +627,9 @@ class SearchEngine:
 
     def _bloom_absent(self, term: str) -> bool:
         """True ⇒ the term is definitely not indexed (no false negatives).
-        Sidecar access is driver-local pyarrow (zero Spark jobs): small
-        dictionaries load whole, huge ones per-range into a bounded LRU;
-        indexes built before the sidecar existed fall back to the
-        term_stats scan."""
+        Sidecar rows load per range on first probe, driver-local (zero
+        Spark jobs), into a bounded LRU; indexes built before the sidecar
+        existed fall back to the term_stats scan."""
         if self._blooms is False:
             from .bloom import load_term_bloom
 

@@ -562,8 +562,8 @@ class MultiSegmentEngine(SearchEngine):
                 .filter(F.col("ol") == 1).select("doc_id"))
 
     def _doclens_dirs(self):
-        # base-class doclens property (eager array / paged NormsCache by
-        # n_docs) works unchanged over the union of segment doclens dirs
+        # base-class doclens property (paged NormsCache) works unchanged
+        # over the union of segment doclens dirs
         return [f"{s}/doclens" for s in self._segment_dirs]
 
     # fetch_terms: inherited — per-term df/max_weight are derived from the

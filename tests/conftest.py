@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -16,3 +17,20 @@ def spark():
     s = get_spark(app_name="edgesearch-tests")
     yield s
     s.stop()
+
+
+def jobs_run(spark, action):
+    """(action's result, Spark jobs it ran), counted in a fresh job group.
+
+    Counting by group, not by the size of the status store's job list,
+    stays exact in a long session: the list stops growing once it holds
+    ``spark.ui.retainedJobs`` jobs, while the group's own recent jobs stay
+    in it."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -6,6 +6,7 @@ indexed term still resolves through the normal path."""
 import numpy as np
 import pytest
 
+from conftest import jobs_run
 from edgesearch_spark.bloom import TermBloom, load_term_bloom, term_range_id
 from edgesearch_spark.build import IndexConfig, build_index
 from edgesearch_spark.engine import SearchEngine
@@ -19,10 +20,6 @@ def index_dir(spark, tmp_path_factory):
     docs = spark.createDataFrame(rows, "doc_id long, content string")
     build_index(spark, docs, out, IndexConfig(), doc_id_col="doc_id", content_col="content")
     return out
-
-
-def _n_jobs(spark) -> int:
-    return spark.sparkContext._jsc.sc().statusStore().jobsList(None).size()
 
 
 def test_sidecar_written_and_loadable(spark, index_dir):
@@ -61,20 +58,16 @@ def test_jvm_range_id_matches_driver(spark, index_dir):
 
 
 def test_novel_term_queries_cost_at_most_one_job(spark, index_dir):
-    """≤1 Spark job for the FIRST novel-term query (the sidecar load),
-    ZERO for every one after — without warm()."""
+    """ZERO Spark jobs for the FIRST novel-term query (the sidecar opens
+    driver-local) and for every one after — without warm()."""
     eng = SearchEngine(spark, index_dir)  # no warm: dict not on driver
-    j0 = _n_jobs(spark)
-    r = eng.search(Query.make(require=["zz_never_indexed"], k=10))
+    r, jobs = jobs_run(spark, lambda: eng.search(Query.make(require=["zz_never_indexed"], k=10)))
     assert r.total == 0
-    j1 = _n_jobs(spark)
-    # one-time sidecar load: parquet schema-inference job + collect job
-    assert j1 - j0 <= 2, f"first novel-term query cost {j1 - j0} jobs"
+    assert jobs == 0, f"first novel-term query cost {jobs} jobs"
     for i in range(5):
-        r = eng.search(Query.make(require=[f"zz_other_{i}"], k=10))
+        r, jobs = jobs_run(spark, lambda: eng.search(Query.make(require=[f"zz_other_{i}"], k=10)))
         assert r.total == 0
-    j2 = _n_jobs(spark)
-    assert j2 == j1, f"subsequent novel-term queries cost {j2 - j1} jobs"
+        assert jobs == 0, f"subsequent novel-term query cost {jobs} jobs"
 
 
 def test_results_identical_with_and_without_bloom(spark, index_dir):
@@ -94,15 +87,15 @@ def test_results_identical_with_and_without_bloom(spark, index_dir):
 
 
 def test_empty_bloom_row_handling():
-    tb = TermBloom([])
+    tb = TermBloom(1, lambda rid: None)  # no row: no term hashed to the range
     assert tb.definitely_absent("anything")
 
 
 def test_lazy_lru_load_per_range(spark, index_dir, tmp_path_factory):
-    """VERDICT r3 item 5: beyond max_eager_rows the sidecar loads per range
-    on demand — ≤1 row fetched per NOVEL term range, re-probes of a cached
-    range fetch nothing, the LRU stays bounded, and lazy semantics equal
-    eager semantics for present and absent terms alike."""
+    """VERDICT r3 item 5: the sidecar loads per range on demand — ≤1 row
+    fetched per NOVEL term range, re-probes of a cached range fetch
+    nothing, the LRU stays bounded, and probes equal those over the
+    sidecar rows read whole, for present and absent terms alike."""
     from pyspark.sql import functions as F
 
     from edgesearch_spark.bloom import build_term_bloom
@@ -114,14 +107,14 @@ def test_lazy_lru_load_per_range(spark, index_dir, tmp_path_factory):
     assert n_ranges == 5
 
     idx_root = out[: -len("/term_bloom")]
-    eager = load_term_bloom(spark, idx_root, max_eager_rows=4096)
-    lazy = load_term_bloom(spark, idx_root, max_eager_rows=0, max_cached_rows=8)
-    assert lazy._loader is not None and eager._loader is None
+    rows = {r["range_id"]: bytes(r["bits"]) for r in spark.read.parquet(out).collect()}
+    whole = TermBloom(n_ranges, rows.get)
+    lazy = load_term_bloom(spark, idx_root, max_cached_rows=8)
 
     terms = [r["term"] for r in term_stats.collect()]
     probes = terms + [f"zz_nope_{i}" for i in range(10)]
     for t in probes:
-        assert lazy.definitely_absent(t) == eager.definitely_absent(t), t
+        assert lazy.definitely_absent(t) == whole.definitely_absent(t), t
     # every present term must be 'maybe present' in lazy mode too
     assert not any(lazy.definitely_absent(t) for t in terms)
     # cache (8) covers all 5 ranges ⇒ EXACTLY one fetch per novel range
@@ -133,29 +126,35 @@ def test_lazy_lru_load_per_range(spark, index_dir, tmp_path_factory):
     assert lazy.rows_fetched == before
 
     # a TIGHT cache stays bounded (evicts; may re-fetch) and stays correct
-    tight = load_term_bloom(spark, idx_root, max_eager_rows=0, max_cached_rows=1)
+    tight = load_term_bloom(spark, idx_root, max_cached_rows=1)
     for t in probes:
-        assert tight.definitely_absent(t) == eager.definitely_absent(t), t
+        assert tight.definitely_absent(t) == whole.definitely_absent(t), t
         assert len(tight._bits) <= 1
 
 
-def test_spark_fallback_loader_matches_pyarrow(spark, index_dir):
+def test_spark_fallback_loader_matches_pyarrow(spark, index_dir, monkeypatch):
     """ADVICE r4 (low): a remote index dir (hdfs://, s3a://) must keep the
-    sidecar through Spark's filesystem when pyarrow has no driver for the
-    scheme. Exercise _load_via_spark directly on the same sidecar and
-    assert probe-for-probe agreement with the pyarrow path, in both eager
-    and lazy modes."""
-    import os
+    sidecar and the norms through Spark's filesystem when pyarrow has no
+    driver for the scheme. Force the driver-local reader's Spark fallback
+    on the same local index and assert probe-for-probe agreement of the
+    bloom and page-for-page equality of the norms."""
+    from edgesearch_spark import localread
+    from edgesearch_spark.engine import NormsCache
 
-    from edgesearch_spark.bloom import _load_via_spark
-
-    path = os.path.join(index_dir, "term_bloom")
-    fast = load_term_bloom(spark, index_dir)
-    slow = _load_via_spark(spark, path, max_eager_rows=4096, max_cached_rows=8)
-    lazy = _load_via_spark(spark, path, max_eager_rows=0, max_cached_rows=8)
-    assert slow is not None and lazy is not None
+    doclens = f"{index_dir}/doclens"
+    fast = load_term_bloom(spark, index_dir, max_cached_rows=8)
+    fast_norms = NormsCache([doclens], n_docs=400, page_docs=64, spark=spark)
+    monkeypatch.setattr(localread, "_locate", lambda path: None)
+    slow = load_term_bloom(spark, index_dir, max_cached_rows=8)
+    slow_norms = NormsCache([doclens], n_docs=400, page_docs=64, spark=spark)
+    assert slow is not None
     probes = [f"alpha{i}" for i in range(60)] + ["common", "zzz_never", "qq_nope"]
-    for t in probes:
-        assert slow.definitely_absent(t) == fast.definitely_absent(t), t
-        assert lazy.definitely_absent(t) == fast.definitely_absent(t), t
-    assert lazy.rows_fetched > 0  # the lazy loader really went through Spark
+    got, jobs = jobs_run(spark, lambda: [slow.definitely_absent(t) for t in probes])
+    assert jobs > 0  # the fallback really went through Spark
+    assert got == [fast.definitely_absent(t) for t in probes]
+    pids = range(-(-400 // 64))
+    pages, jobs = jobs_run(spark, lambda: [slow_norms._page(p) for p in pids])
+    assert jobs > 0  # the fallback really went through Spark
+    for pid, page in zip(pids, pages):
+        want = fast_norms._page(pid)
+        assert page.dtype == want.dtype and np.array_equal(page, want), pid

@@ -38,3 +38,18 @@ def test_existing_doc_id_passthrough(spark):
 
     df = spark.range(100).select(F.col("id").alias("doc_id"), F.lit("x y z").alias("content"))
     assert df.count() == 100
+
+
+def test_doc_id_follows_order_under_recompute(spark):
+    """ADVICE (medium): the per-partition rank is read off
+    monotonically_increasing_id, which trusts that rows stream in sorted
+    partition order. Drop the cached frame before the action so every
+    partition is recomputed: each doc's doc_id must still be its rank
+    under order_cols, not just dense."""
+    order_cols = ("repo", "path", "commit")
+    corpus = generate_corpus(spark, 3000, seed=5, num_partitions=8)
+    out = assign_doc_ids(corpus, order_cols, num_partitions=16)
+    out._docid_cache.unpersist(blocking=True)
+    rows = out.select("doc_id", *order_cols).collect()
+    ranked = sorted(rows, key=lambda r: tuple(r[c] for c in order_cols))
+    assert [r["doc_id"] for r in ranked] == list(range(3000))

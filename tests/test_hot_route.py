@@ -17,6 +17,7 @@ a full hot posting list on its control plane (script/src/main.ts:191-240).
 import numpy as np
 import pytest
 
+from conftest import jobs_run
 from edgesearch_spark.build import IndexConfig, build_index
 from edgesearch_spark.engine import LazyTermPostings, SearchEngine
 from edgesearch_spark.oracle import Query
@@ -249,18 +250,6 @@ def test_bm25_distributed_margin_widens_on_ties(spark, tmp_path_factory):
     assert list(a.scores) == list(b.scores)
 
 
-def _n_jobs(spark):
-    # highest job ID + 1, NOT jobsList().size(): the UI store evicts past
-    # spark.ui.retainedJobs, so in a long (full-suite) session the list
-    # size stops tracking scheduled jobs and deltas can even go negative;
-    # job IDs are monotonic for the lifetime of the SparkContext
-    jl = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
-    n = jl.size()
-    if n == 0:
-        return 0
-    return max(jl.apply(i).jobId() for i in range(n)) + 1
-
-
 def test_routed_query_fused_action_cuts_jobs(spark, engines):
     """VERDICT r5 #4: candidate selection and the exact total used to run
     as a count + TakeOrdered action PAIR; _fused_topk_count rides both on
@@ -277,13 +266,10 @@ def test_routed_query_fused_action_cuts_jobs(spark, engines):
 
     tp = routed.fetch_terms(["hot", "third"])
     matched = routed._matched_docs_df(q, tp, scored=False)
-    before = _n_jobs(spark)
-    matched.count()
-    matched.orderBy("doc_id").limit(10).collect()
-    unfused = _n_jobs(spark) - before
-    before = _n_jobs(spark)
-    routed._fused_topk_count(matched, 10, by_score=False)
-    fused = _n_jobs(spark) - before
+    _, unfused = jobs_run(spark, lambda: (
+        matched.count(), matched.orderBy("doc_id").limit(10).collect()))
+    _, fused = jobs_run(
+        spark, lambda: routed._fused_topk_count(matched, 10, by_score=False))
     assert fused <= unfused - 2, (fused, unfused)
 
     # warm IMMEDIATELY before each measured run: in a full-suite session,
@@ -291,13 +277,9 @@ def test_routed_query_fused_action_cuts_jobs(spark, engines):
     # warm-up and this point would otherwise charge re-fetch jobs to the
     # measured query and flake the budget assertions
     routed.search(q)
-    before = _n_jobs(spark)
-    routed.search(q)
-    bool_jobs = _n_jobs(spark) - before
+    _, bool_jobs = jobs_run(spark, lambda: routed.search(q))
     routed.search_bm25(q)
-    before = _n_jobs(spark)
-    routed.search_bm25(q)
-    bm25_jobs = _n_jobs(spark) - before
+    _, bm25_jobs = jobs_run(spark, lambda: routed.search_bm25(q))
     assert bool_jobs <= fused, (bool_jobs, fused)
     # scored mode adds the doclens scan + join (two more AQE stage jobs)
     assert bm25_jobs <= fused + 2, (bm25_jobs, fused)
@@ -357,17 +339,14 @@ def test_bm25_distributed_no_rescore_jobs(spark, engines):
     a = eager.search_bm25(q)
     routed.fetch_terms(["hot", "third"])  # dict + postings warm, untimed
 
-    before = _n_jobs(spark)
-    b = routed.search_bm25(q)
-    whole_query = _n_jobs(spark) - before
+    b, whole_query = jobs_run(spark, lambda: routed.search_bm25(q))
     assert routed.last_route == "distributed"
     _same(a, b)
 
     tp = routed.fetch_terms(["hot", "third"])
     matched = routed._matched_docs_df(q, tp, scored=True)
-    before = _n_jobs(spark)
-    routed._fused_topk_count(matched, 10, by_score=True)
-    fused_alone = _n_jobs(spark) - before
+    _, fused_alone = jobs_run(
+        spark, lambda: routed._fused_topk_count(matched, 10, by_score=True))
     # +1 slack: one metadata-scale job (doclens/term routing) may ride the
     # full query; the removed rescore stage used to add ≥2 shard-fetch jobs
     assert whole_query <= fused_alone + 1, (whole_query, fused_alone)

@@ -14,11 +14,11 @@ import contextlib
 import io
 import re
 import shutil
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import jobs_run
 from edgesearch_spark.build import IndexConfig, build_index
 from edgesearch_spark.corpus import generate_corpus
 
@@ -99,18 +99,6 @@ def test_relational_paths_have_no_python_eval(spark):
     for q in (q_tokenize_pairs, q_term_df, q_bool_mixed):
         plan = plan_of(q(spark, "/root/testdata/sf0.001"))
         assert "EvalPython" not in plan, (q.__name__, plan)
-
-
-def jobs_run(spark, action):
-    """(action's result, Spark jobs it ran), counted in a fresh job group."""
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @contextlib.contextmanager

@@ -96,15 +96,15 @@ def project(m: dict, target_docs: int, hot_df: int) -> list[tuple[str, str, str]
                  f"{m['docs_bytes_per_doc']:.0f} B/doc (content-dominated — tracks input size)"))
     rows.append(("doclens table", human(target_docs * m["doclens_bytes_per_doc"]),
                  f"{m['doclens_bytes_per_doc']:.1f} B/doc on disk"))
-    # above norms_eager_max_docs the engine serves norms from NormsCache:
-    # residency is the LRU budget, not n_docs (engine.py NormsCache)
+    # the engine serves norms from NormsCache: residency is capped by the
+    # LRU budget, not n_docs (engine.py NormsCache)
     from edgesearch_spark.engine import SearchEngine as _SE
 
     norms_resident = min(target_docs * 4,
                          _SE.norms_max_pages * _SE.norms_page_docs * 4)
     rows.append(("driver norms cache", human(norms_resident),
                  "int32 × min(n_docs, LRU budget) — paged by docID range "
-                 "(NormsCache) above norms_eager_max_docs"))
+                 "(NormsCache)"))
     # dictionary grows sublinearly; heap-law exponent ~0.5 on synthetic code —
     # project conservatively LINEAR in docs (upper bound)
     rows.append(("term dictionary (≤)", human(m["terms_table_bytes"] * scale),
