@@ -70,7 +70,8 @@ class IndexConfig:
     # write-side size budget (reference packs ≤25 MiB chunks,
     # src/build/chunks/bst.rs:86-105): postings files target this many bytes
     # via maxRecordsPerFile derived from measured bytes/row, and row groups
-    # stay small enough that term-range pruning keeps sub-file granularity.
+    # (of the postings, positions, sidecars and docs) stay small enough that
+    # key-range pruning keeps sub-file granularity.
     target_file_bytes: int = 32 << 20
     target_rowgroup_bytes: int = 8 << 20
     num_partitions: int | None = None
@@ -243,11 +244,16 @@ def build_index(
         else:
             layout = docs.repartitionByRange(n_part, "doc_id").sortWithinPartitions("doc_id")
         obs = Observation("docid_invariants")
+        # row groups on the postings' byte budget: a page's doc fetch
+        # decodes the few row groups whose doc_id range holds a page id
+        # (localread.LocalTable), never a whole file, at any corpus size
         (layout.observe(obs,
                         F.count(F.lit(1)).alias("n"), F.min("doc_id").alias("lo"),
                         F.max("doc_id").alias("hi"),
                         F.approx_count_distinct("doc_id", 0.01).alias("nd"))
-               .write.mode("overwrite").parquet(docs_path))
+               .write.mode("overwrite")
+               .option("parquet.block.size", cfg.target_rowgroup_bytes)
+               .parquet(docs_path))
         if cache is not None:
             cache.unpersist()
         chk = obs.get

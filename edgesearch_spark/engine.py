@@ -4,19 +4,23 @@ Mirrors the reference's query lifecycle (SURVEY.md §3.2) Spark-style:
 
   parse/normalize (Query.make)                 ← client/src/main.ts:10-35
   validate ≤ max_query_terms                   ← script/src/main.ts:358-364
-  batched postings fetch: ONE filtered scan
-  serves all query terms                       ← findAllInChunks batching,
+  batched postings fetch: ONE driver-local
+  read serves all small query terms            ← findAllInChunks batching,
                                                  script/src/main.ts:191-240;
-                                                 Catalyst pushes term ∈ (…)
-                                                 into the parquet scan, so
-                                                 file/row-group min-max stats
-                                                 prune like the reference's
-                                                 chunk first-key binary search
+                                                 the postings are (term, salt)-
+                                                 sorted, so footer row-group
+                                                 min-max stats prune the read
+                                                 like the reference's chunk
+                                                 first-key binary search
                                                  (wasm/chunks.c:56-72)
   missing-term rules / default results         ← script/src/main.ts:368-389
   boolean kernel AND/OR/ANDNOT                 ← wasm/index.c:76-104
   rank-select pagination                       ← wasm/index.c:115-128
-  doc fetch (doc_id IN pushed into the scan)   ← script/src/main.ts:408-416
+  doc fetch (footer-pruned driver-local read)  ← script/src/main.ts:408-416
+
+Those reads, and a hot term's per-shard fetches, run no Spark job
+(``localread.LocalTable``); only a hot term's level-1 shard summary is a
+Spark scan, aggregated executor-side.
 
 The kernel is numpy over decoded posting blocks. Intersections decode ONLY
 the blocks whose [min,max] docID range can contain a candidate (the
@@ -42,7 +46,7 @@ from .build import idf_value, load_stats
 from .codec import PostingBlocks, concat_blocks, decode_all, decode_block
 from .oracle import Query, QueryTooLarge, SearchResult
 from .plans.fold import bm25_fold
-from .session import local_frame
+from .session import arrow_frame, local_frame
 
 # Stored block/shard max weights are float32 while exact scores are float64:
 # round-to-nearest can put the stored bound up to 0.5 ulp BELOW the true
@@ -54,10 +58,8 @@ from .session import local_frame
 F32_BOUND_SLACK = 1.0 + 2.0**-23
 
 
-def _row_to_blocks(row) -> PostingBlocks:
-    mtf = (row["block_max_tf"]
-           if "block_max_tf" in row.__fields__ and row["block_max_tf"] is not None
-           else None)
+def _row_to_blocks(row: dict) -> PostingBlocks:
+    mtf = row.get("block_max_tf")
     return PostingBlocks(
         first_doc=np.array(row["block_first_doc"], dtype=np.int64),
         max_doc=np.array(row["block_max_doc"], dtype=np.int64),
@@ -271,9 +273,12 @@ class LazyTermPostings:
         O(df / 2^salt_shift) driver rows, ~40 B each — at df = 10^11 that is
         ~60 MB of summaries instead of tens of GB of block metadata;
       level 2 — block metadata (33 B / 128-posting block), fetched lazily
-        per candidate shard (payload column still pruned from that scan);
+        per candidate shard (payload column pruned from that read);
       level 3 — payload bytes, fetched per shard only when blocks of that
         shard actually decode.
+
+    Levels 2 and 3 are driver-local reads (``SearchEngine._postings_rows``):
+    zero Spark jobs, row groups pruned by their (term, salt) footer stats.
 
     This is the driver-kernel analogue of the reference worker streaming one
     chunk at a time (script/src/main.ts:191-240) — a require+rare query
@@ -353,19 +358,12 @@ class LazyTermPostings:
         need = [int(s) for s in np.unique(shard_idx) if int(s) not in self._meta]
         if not need:
             return
-        salts = sorted({self._salts[s] for s in need})
-        rows = (
-            self._engine._postings_df.select(*self._engine._meta_cols)
-            .filter((F.col("term") == self.term) & F.col("salt").isin(salts))
-            .collect()
-        )
+        rows = self._engine._postings_rows(
+            self._engine._meta_cols, {"term": [self.term], "salt": [self._salts[s] for s in need]})
         for s, r in self._match_rows(rows, need, "metadata").items():
             n_blk = len(r["block_count"])
             if self._engine._tf_bounds:
-                mtf = (r["block_max_tf"]
-                       if "block_max_tf" in r.__fields__ and r["block_max_tf"] is not None
-                       else None)
-                mw = self._engine._bound_arr(mtf, n_blk)
+                mw = self._engine._bound_arr(r.get("block_max_tf"), n_blk)
             else:
                 mw = np.array(r["block_max_weight"], dtype=np.float32)
             self._meta[s] = {
@@ -382,12 +380,8 @@ class LazyTermPostings:
         need = [int(s) for s in np.unique(shard_idx) if int(s) not in self._payload]
         if not need:
             return
-        salts = sorted({self._salts[s] for s in need})
-        rows = (
-            self._engine._postings_df
-            .filter((F.col("term") == self.term) & F.col("salt").isin(salts))
-            .collect()
-        )
+        rows = self._engine._postings_rows(
+            self._engine._row_cols, {"term": [self.term], "salt": [self._salts[s] for s in need]})
         for s, r in self._match_rows(rows, need, "payload").items():
             pb = _row_to_blocks(r)
             if self._engine._tf_bounds:
@@ -545,6 +539,7 @@ class SearchEngine:
                  hot_route_df: int | None = None):
         self.spark = spark
         self.index_dir = index_dir
+        self._segment_dirs = [index_dir]
         self.stats = load_stats(index_dir)
         self.n_docs: int = self.stats["n_docs"]
         self.k1: float = self.stats["k1"]
@@ -557,10 +552,25 @@ class SearchEngine:
         self.lazy_min_df: int = lazy_min_df if lazy_min_df is not None else 1_000_000
         if hot_route_df is not None:
             self.hot_route_df = hot_route_df
-        self._postings_df = spark.read.parquet(f"{index_dir}/postings")
-        self._term_stats_df = spark.read.parquet(f"{index_dir}/term_stats")
-        self._docs_df = spark.read.parquet(f"{index_dir}/docs")
-        self._init_meta_cols()
+        self._open_tables()
+
+    def _table_dirs(self, table: str) -> list[str]:
+        """``table``'s dir in every segment of this index."""
+        return [f"{s}/{table}" for s in self._segment_dirs]
+
+    def _open_tables(self) -> None:
+        """Spark frames over the segments' tables, and empty driver state:
+        term caches, norms, blooms and driver-local readers all load on
+        first use."""
+        read = self.spark.read.parquet
+        self._postings_df = read(*self._table_dirs("postings"))
+        self._term_stats_df = read(*self._table_dirs("term_stats"))
+        self._docs_df = read(*self._table_dirs("docs"))
+        # metadata column set + max_tf availability (pre-max_tf indexes
+        # lack the column; everything falls back to stored weights)
+        self._has_max_tf = "block_max_tf" in self._postings_df.columns
+        self._meta_cols = self._META_COLS + (("block_max_tf",) if self._has_max_tf else ())
+        self._row_cols = self._meta_cols + ("payload",)
         self._cache: dict[str, TermPostings | LazyTermPostings | None] = {}
         # LRU of terms currently holding a live decode memo (~16 B/posting
         # of int64 docs+tfs). Eviction drops only the memo — the compressed
@@ -572,6 +582,22 @@ class SearchEngine:
         self._dict_complete = False  # warm() may load the whole term dict
         self._doclens: NormsCache | None = None
         self._blooms: list | bool = False  # False = not loaded yet
+        self._local: dict = {}  # table name -> localread.LocalTable
+
+    def _local_table(self, table: str) -> LocalTable:
+        """Driver-local reader of ``table`` over every segment; its
+        footers are read on first use."""
+        from .localread import LocalTable
+
+        if table not in self._local:
+            self._local[table] = LocalTable(self._table_dirs(table), self.spark)
+        return self._local[table]
+
+    def _postings_rows(self, cols: tuple, isin: dict) -> list[dict]:
+        """``cols`` of the postings rows ``isin`` selects (LocalTable.take),
+        read on the driver: the table is (term, salt)-sorted, so footer
+        stats prune the read to the row groups that can hold them."""
+        return self._local_table("postings").take(list(cols), isin).to_pylist()
 
     def warm(self, max_dict_terms: int = 2_000_000) -> "SearchEngine":
         """Pin the postings table in executor memory (Spark cache), open the
@@ -605,9 +631,6 @@ class SearchEngine:
                 old._dec = None
 
     # ---- doc-length norms cache (Lucene-norms analogue) ----
-    def _doclens_dirs(self) -> list[str]:
-        return [f"{self.index_dir}/doclens"]
-
     @property
     def doclens(self) -> NormsCache:
         """int32 norms, indexable by a docID array. They page in by docID
@@ -616,15 +639,12 @@ class SearchEngine:
         O(n_docs) — the 10^9+-doc serving posture."""
         if self._doclens is None:
             self._doclens = NormsCache(
-                self._doclens_dirs(), self.n_docs,
+                self._table_dirs("doclens"), self.n_docs,
                 page_docs=self.norms_page_docs,
                 max_pages=self.norms_max_pages, spark=self.spark)
         return self._doclens
 
     # ---- absent-term bloom sidecar (driver-local, no job per novel term) ----
-    def _bloom_dirs(self) -> list[str]:
-        return [self.index_dir]
-
     def _bloom_absent(self, term: str) -> bool:
         """True ⇒ the term is definitely not indexed (no false negatives).
         Sidecar rows load per range on first probe, driver-local (zero
@@ -633,9 +653,9 @@ class SearchEngine:
         if self._blooms is False:
             from .bloom import load_term_bloom
 
-            self._blooms = [b for d in self._bloom_dirs()
+            self._blooms = [b for d in self._segment_dirs
                             if (b := load_term_bloom(self.spark, d)) is not None]
-            if len(self._blooms) < len(self._bloom_dirs()):
+            if len(self._blooms) < len(self._segment_dirs):
                 self._blooms = []  # any sidecar-less segment ⇒ can't conclude absence
         if not self._blooms:
             return False
@@ -674,12 +694,6 @@ class SearchEngine:
         "block_count", "block_offset", "block_max_weight", "block_kind",
     )
 
-    def _init_meta_cols(self) -> None:
-        """Metadata column set + max_tf availability (pre-max_tf indexes
-        lack the column; everything falls back to stored weights)."""
-        self._has_max_tf = "block_max_tf" in self._postings_df.columns
-        self._meta_cols = self._META_COLS + (("block_max_tf",) if self._has_max_tf else ())
-
     def _bound_arr(self, max_tf, n_blocks: int) -> np.ndarray:
         """Per-block tf-weight upper bound valid under ANY avgdl:
         w = tf/(tf + k1(1-b+b·dl/avgdl)) ≤ max_tf/(max_tf + k1(1-b)).
@@ -699,9 +713,9 @@ class SearchEngine:
         if missing:
             # routing first: term_stats (narrow, range-sorted, pushdown) says
             # which terms exist and how hot they are. Small terms get ONE
-            # payload scan serving the whole query (reference Q6); hot terms
-            # get a metadata-only scan (payload column pruned) and fetch
-            # payload lazily per candidate-bearing shard (LazyTermPostings).
+            # driver-local read serving the whole query (reference Q6); hot
+            # terms get a shard-summary scan and fetch metadata and payload
+            # lazily per candidate-bearing shard (LazyTermPostings).
             dfs = self._term_dfs(missing)
             small = [t for t in missing if dfs[t] is not None and dfs[t] <= self.lazy_min_df]
             hot = [t for t in missing if dfs[t] is not None and dfs[t] > self.lazy_min_df]
@@ -709,7 +723,7 @@ class SearchEngine:
                 if dfs[t] is None:
                     self._cache[t] = None
             if small:
-                rows = self._postings_df.filter(F.col("term").isin(small)).collect()
+                rows = self._postings_rows(self._row_cols, {"term": small})
                 by_term: dict[str, list] = {}
                 for r in rows:
                     by_term.setdefault(r["term"], []).append(r)
@@ -1032,7 +1046,7 @@ class SearchEngine:
     def _doclens_df(self) -> DataFrame:
         # project away the per-doc overlong flag (regex-only metadata) so
         # scoring joins never carry it through a shuffle
-        return self.spark.read.parquet(f"{self.index_dir}/doclens").select("doc_id", "dl")
+        return self.spark.read.parquet(*self._table_dirs("doclens")).select("doc_id", "dl")
 
     def _overlong_docs_df(self) -> DataFrame | None:
         """docIDs whose content holds a dropped (>MAX_TERM_BYTES)
@@ -1459,13 +1473,15 @@ class SearchEngine:
     # ---- doc fetch (reference Q15: join result IDs to the docs store) ----
     def fetch_docs(self, doc_ids: list[int]) -> DataFrame:
         """The stored rows of a page's docIDs, each once and in no set
-        order, as a ``doc_id IN (…)`` filter on the docs store. The store
-        is docID-range-sorted parquet, so the predicate is pushed into the
-        scan and row-group min/max stats skip everything outside the page:
-        one JVM-only Spark job with no ids frame and no join. An empty list
-        plans to an empty relation and runs no job. For ID sets too large
-        to inline in a plan, use ``fetch_docs_df``."""
-        return self._docs_df.filter(F.col("doc_id").isin([int(d) for d in doc_ids]))
+        order, as a local relation with the docs store's schema. The rows
+        are read on the driver (``LocalTable.take``): the store is
+        docID-sorted parquet, so footer min/max stats pick the row groups
+        that can hold a page id. Neither the read nor collecting the frame
+        runs a Spark job. For ID sets too large to hold on the driver, use
+        ``fetch_docs_df``."""
+        tbl = self._local_table("docs").take(
+            self._docs_df.columns, {"doc_id": [int(d) for d in doc_ids]})
+        return arrow_frame(self.spark, tbl, self._docs_df.schema)
 
     def fetch_docs_df(self, ids_df: DataFrame, prune_range: bool = False) -> DataFrame:
         """Join a docID DataFrame (e.g. search_df output) to the docs store

@@ -1,10 +1,15 @@
-"""Driver-local key-range reads over index side tables.
+"""Driver-local key reads over index tables.
 
-The reference answers its control-plane lookups as point reads into
-key-sorted chunks, with no query engine in the loop (wasm/chunks.c:56-72).
-The side tables here are written key-sorted (doclens by doc_id, the term
-bloom by range_id), so a pyarrow key-range filter prunes row groups by
-their min/max stats and a read costs zero Spark jobs.
+The reference answers its lookups as point reads into key-sorted chunks,
+with no query engine in the loop (wasm/chunks.c:56-72). The index tables
+here are written key-sorted (docs and doclens by doc_id, postings by
+(term, salt), the term bloom by range_id), so each parquet footer's
+per-row-group min/max of the key column says which row groups can hold a
+wanted key. The reader reads each file's footer once; a read decodes
+only the row groups whose range can hold a wanted key and filters their
+rows on the driver, with zero Spark jobs. It uses no ``pyarrow.dataset`` scanner, whose
+per-read state grew the driver's peak RSS about six times as much as this
+reader does over the same 200 page reads.
 
 One fallback: when pyarrow has no filesystem for a dir's scheme (e.g.
 ``hdfs://`` without libhdfs), reads go through Spark's own Hadoop
@@ -13,10 +18,13 @@ filesystem instead, at one Spark job per read.
 
 from __future__ import annotations
 
+import bisect
 import os
+from functools import reduce
 
 import pyarrow as pa
-import pyarrow.dataset as ds
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyarrow import fs as pafs
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -35,23 +43,39 @@ def _locate(path: str) -> tuple[pafs.FileSystem, str] | None:
         return None
 
 
-def _dir_dataset(filesystem: pafs.FileSystem, path: str) -> ds.Dataset | None:
-    """The parquet files directly under ``path``; None when the dir is
-    absent or holds none."""
+def _parquet_files(filesystem: pafs.FileSystem, path: str) -> list[pq.ParquetFile]:
+    """The parquet files directly under ``path``, in name order, footers
+    read; [] when the dir is absent or holds none."""
     infos = filesystem.get_file_info(
         pafs.FileSelector(path, allow_not_found=True, recursive=False))
-    files = sorted(i.path for i in infos
-                   if i.type == pafs.FileType.File and i.path.endswith(".parquet"))
-    return ds.dataset(files, format="parquet", filesystem=filesystem) if files else None
+    return [pq.ParquetFile(i.path, filesystem=filesystem)
+            for i in sorted(infos, key=lambda i: i.path)
+            if i.type == pafs.FileType.File and i.path.endswith(".parquet")]
+
+
+def _bounds(pf: pq.ParquetFile, column: str) -> list[tuple | None]:
+    """Per-row-group (min, max) of ``column`` from the footer; None where
+    the footer has no usable stats (that row group is always read)."""
+    md = pf.metadata
+    leaf = next(i for i in range(md.num_columns) if md.schema.column(i).path == column)
+    out: list[tuple | None] = []
+    for g in range(md.num_row_groups):
+        try:
+            st = md.row_group(g).column(leaf).statistics
+            out.append((st.min, st.max) if st is not None and st.has_min_max else None)
+        except (UnicodeDecodeError, ValueError):  # e.g. a truncated UTF-8 bound
+            out.append(None)
+    return out
 
 
 class LocalTable:
     """The union of the parquet files under ``dirs``, read on the driver.
 
     Each dir binds its own filesystem (a shared one would resolve a mixed
-    local / remote segment list against the wrong filesystem); the child
-    datasets are unioned. Listing a remote dir may raise ``OSError`` when
-    the store is unreachable."""
+    local / remote segment list against the wrong filesystem). The file
+    list and footers are read at construction; listing a remote dir may
+    raise ``OSError`` when the store is unreachable. ``row_groups_read``
+    counts the row groups decoded (test-asserted)."""
 
     def __init__(self, dirs: list[str], spark: SparkSession | None = None):
         self._dirs = list(dirs)
@@ -59,16 +83,43 @@ class LocalTable:
         self._sdf = None
         located = [_locate(d) for d in self._dirs]
         self._via_spark = None in located
-        children = [] if self._via_spark else [
-            c for loc in located if (c := _dir_dataset(*loc)) is not None]
-        self._dset = (None if not children
-                      else children[0] if len(children) == 1 else ds.dataset(children))
+        self._files = [] if self._via_spark else [
+            pf for loc in located for pf in _parquet_files(*loc)]
+        self._bounds: dict[str, list[list[tuple | None]]] = {}
+        self.row_groups_read = 0
 
     def _spark_df(self):
         if self._sdf is None:
             spark = self._spark or SparkSession.active()
             self._sdf = spark.read.parquet(*self._dirs)
         return self._sdf
+
+    def _key_bounds(self, column: str) -> list[list[tuple | None]]:
+        if column not in self._bounds:
+            self._bounds[column] = [_bounds(pf, column) for pf in self._files]
+        return self._bounds[column]
+
+    def _scan(self, columns: list[str], keep: dict, mask) -> pa.Table:
+        """``columns`` of the rows ``mask(table)`` selects, decoding only
+        the row groups whose bounds pass every ``keep[column](lo, hi)``."""
+        empty = self._empty(columns)
+        bounds = {c: self._key_bounds(c) for c in keep}
+        read = list(dict.fromkeys([*columns, *keep]))
+        parts = []
+        for f, pf in enumerate(self._files):
+            groups = [g for g in range(pf.metadata.num_row_groups)
+                      if all(b[f][g] is None or keep[c](*b[f][g]) for c, b in bounds.items())]
+            if groups:
+                t = pf.read_row_groups(groups, columns=read, use_threads=False)
+                self.row_groups_read += len(groups)
+                parts.append(t.filter(mask(t)).select(columns))
+        # segments written from different inputs may differ in nullability
+        return pa.concat_tables(parts, promote_options="default") if parts else empty
+
+    def _empty(self, columns: list[str]) -> pa.Table:
+        if not self._files:
+            raise FileNotFoundError(f"no parquet under {self._dirs}")
+        return self._files[0].schema_arrow.empty_table().select(columns)
 
     def read(self, columns: list[str], key: str, lo: int, hi: int) -> pa.Table:
         """``columns`` of the rows with ``lo <= key < hi``. Raises
@@ -77,17 +128,44 @@ class LocalTable:
             return (self._spark_df()
                     .filter((F.col(key) >= lo) & (F.col(key) < hi))
                     .select(*columns).toArrow())
-        if self._dset is None:
-            raise FileNotFoundError(f"no parquet under {self._dirs}")
-        return self._dset.to_table(
-            columns=columns, filter=(ds.field(key) >= lo) & (ds.field(key) < hi))
+        return self._scan(
+            columns, {key: lambda mn, mx: mx >= lo and mn < hi},
+            lambda t: pc.and_(pc.greater_equal(t[key], lo), pc.less(t[key], hi)))
+
+    def take(self, columns: list[str], isin: dict[str, list]) -> pa.Table:
+        """``columns`` of the rows whose every ``isin`` column holds one of
+        its listed values; each stored row once, however often a value is
+        listed. Raises FileNotFoundError when the dirs hold no parquet."""
+        want = {c: sorted(set(v)) for c, v in isin.items()}
+        if self._via_spark:
+            return (self._spark_df()
+                    .filter(reduce(lambda a, b: a & b,
+                                   [F.col(c).isin(v) for c, v in want.items()]))
+                    .select(*columns).toArrow())
+
+        def holds(vals):  # does [mn, mx] contain one of the sorted vals?
+            def keep(mn, mx):
+                i = bisect.bisect_left(vals, mn)
+                return i < len(vals) and vals[i] <= mx
+            return keep
+
+        def mask(t):
+            return reduce(pc.and_, [pc.is_in(t[c], value_set=pa.array(v, type=t[c].type))
+                                    for c, v in want.items()])
+
+        if not all(want.values()):
+            return self._empty(columns)
+        return self._scan(columns, {c: holds(v) for c, v in want.items()}, mask)
 
     def first(self, column: str):
         """``column`` of the first row; None when the table has no rows."""
         if self._via_spark:
             row = self._spark_df().select(column).head()
             return None if row is None else row[0]
-        if self._dset is None:
-            return None
-        t = self._dset.head(1, columns=[column])
-        return t[column][0].as_py() if t.num_rows else None
+        for pf in self._files:
+            for g in range(pf.metadata.num_row_groups):
+                if pf.metadata.row_group(g).num_rows:
+                    self.row_groups_read += 1
+                    t = pf.read_row_group(g, columns=[column], use_threads=False)
+                    return t[column][0].as_py()
+        return None

@@ -108,6 +108,15 @@ def get_spark(
     return spark
 
 
+def arrow_frame(spark: SparkSession, table, schema=None) -> DataFrame:
+    """A driver-side ``pyarrow.Table`` as a local relation (a
+    ``LocalTableScan``: no Spark job), cast to ``schema`` when given. The
+    chunks are combined first: PySpark 4.1's ``createDataFrame(pa.Table)``
+    silently drops every record batch after an empty one, and a filtered
+    read yields empty chunks."""
+    return spark.createDataFrame(table.combine_chunks(), schema=schema)
+
+
 def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
     """A driver-side literal table (``rows`` of tuples in ``ddl`` column
     order) as a local relation. Built from a ``pyarrow.Table``, it plans as
@@ -122,5 +131,5 @@ def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
 
     schema = to_arrow_schema(StructType.fromDDL(ddl))
     cols = list(zip(*rows)) or [()] * len(schema)
-    return spark.createDataFrame(pa.Table.from_arrays(
+    return arrow_frame(spark, pa.Table.from_arrays(
         [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema))

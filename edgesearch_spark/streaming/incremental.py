@@ -329,7 +329,7 @@ class MultiSegmentEngine(SearchEngine):
                          if tombstone_df is not None else None)
         self._deleted = np.asarray(sorted(tombstones or []), dtype=np.int64)
         self.spark = spark
-        self.index_dir = segment_dirs[0]  # for doclens property base; overridden below
+        self.index_dir = segment_dirs[0]  # named in error messages
         self._segment_dirs = segment_dirs
         stats = None
         n_docs = 0
@@ -365,10 +365,7 @@ class MultiSegmentEngine(SearchEngine):
         self.max_query_terms = self.stats.get("max_query_terms", 50)
         self.max_results = self.stats.get("max_results", 50)
         self.lazy_min_df = 1_000_000
-        self._postings_df = spark.read.parquet(*[f"{s}/postings" for s in segment_dirs])
-        self._term_stats_df = spark.read.parquet(*[f"{s}/term_stats" for s in segment_dirs])
-        self._docs_df = spark.read.parquet(*[f"{s}/docs" for s in segment_dirs])
-        self._init_meta_cols()
+        self._open_tables()
         # stored block-max weights were baked under each SEGMENT's avgdl;
         # once the union avgdl differs they understate true bounds and the
         # pruned kernel would be rank-unsafe. With per-block max_tf in the
@@ -377,13 +374,6 @@ class MultiSegmentEngine(SearchEngine):
         self._fresh_avgdl = all(
             abs(st - self.avgdl) < 1e-9 for st in self._segment_avgdls)
         self._tf_bounds = (not self._fresh_avgdl) and self._has_max_tf
-        self._cache = {}
-        from collections import OrderedDict
-        self._dec_lru = OrderedDict()
-        self._df_cache = {}
-        self._dict_complete = False
-        self._doclens = None
-        self._blooms = False
 
     def bigram_postings_df(self):
         # A COMPACTED live index is one plain segment — its sidecar is
@@ -545,31 +535,21 @@ class MultiSegmentEngine(SearchEngine):
             return df
         return df.join(self._tombstones_df(), "doc_id", "left_anti")
 
-    def _bloom_dirs(self):
-        return list(self._segment_dirs)
-
-    def _doclens_df(self):
-        return (self.spark.read.parquet(*[f"{s}/doclens" for s in self._segment_dirs])
-                .select("doc_id", "dl"))
-
     def _overlong_docs_df(self):
         # sound only when EVERY segment carries the per-doc flag (a
         # pre-0.3.1 segment could hide a literal invisibly)
         for seg in self._segment_dirs:
             if "ol" not in self.spark.read.parquet(f"{seg}/doclens").columns:
                 return None
-        return (self.spark.read.parquet(*[f"{s}/doclens" for s in self._segment_dirs])
+        return (self.spark.read.parquet(*self._table_dirs("doclens"))
                 .filter(F.col("ol") == 1).select("doc_id"))
 
-    def _doclens_dirs(self):
-        # base-class doclens property (paged NormsCache) works unchanged
-        # over the union of segment doclens dirs
-        return [f"{s}/doclens" for s in self._segment_dirs]
-
-    # fetch_terms: inherited — per-term df/max_weight are derived from the
-    # shard rows themselves (summed/maxed), which is segment-correct by
-    # construction; the union read interleaves shard rows and SearchEngine's
-    # (salt, first-block) ordering merges disjoint docID ranges.
+    # fetch_terms, norms, blooms and the driver-local readers: inherited,
+    # over every dir in _segment_dirs. Per-term df/max_weight are derived
+    # from the shard rows themselves (summed/maxed), which is segment-correct
+    # by construction; the union read interleaves shard rows and
+    # SearchEngine's (salt, first-block) ordering merges disjoint docID
+    # ranges.
 
     # ---- tombstone visibility filtering ----
     def _not_deleted_mask(self, docs):

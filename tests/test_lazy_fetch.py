@@ -100,3 +100,69 @@ def test_missing_terms_still_routed(engines):
     assert lazy.search(Query.make(require=["zzz_nope"], k=10)).total == 0
     r = lazy.search(Query.make(require=["rare"], contain=["zzz_nope"], k=10))
     assert r.total == len(RARE_DOCS)
+
+
+def test_new_lazy_shard_fetch_runs_no_spark_job(spark, index_dir):
+    """Once a hot term's shard summary is cached, a query that needs
+    shards not fetched yet, plus its page's doc fetch, runs no Spark job:
+    shard metadata and payload are driver-local reads."""
+    from conftest import jobs_run
+
+    eager = SearchEngine(spark, index_dir)
+    lazy = SearchEngine(spark, index_dir, lazy_min_df=100).warm()
+    hot = lazy.fetch_terms(["hot"])["hot"]  # the level-1 summary scan
+    assert isinstance(hot, LazyTermPostings)
+    assert hot.bytes_fetched == 0 and hot.meta_shards_fetched == 0
+    q = Query.make(require=["rare", "hot"], k=50)
+
+    def serve():
+        res = lazy.search(q)
+        return res, lazy.fetch_docs(res.doc_ids).collect()
+
+    try:
+        (res, rows), jobs = jobs_run(spark, serve)
+    finally:
+        lazy._postings_df.unpersist()
+    assert jobs == 0, jobs
+    assert res == eager.search(q) and res.doc_ids == RARE_DOCS
+    assert sorted(r["doc_id"] for r in rows) == RARE_DOCS
+    assert 0 < hot.bytes_fetched < hot.total_payload_bytes / 4
+
+    # metadata only, for every shard: still no job, no payload moved
+    fetched = hot.bytes_fetched
+    _, jobs = jobs_run(spark, lambda: hot._ensure_meta(np.arange(hot.n_shards)))
+    assert jobs == 0, jobs
+    assert hot.meta_shards_fetched == hot.n_shards and hot.bytes_fetched == fetched
+
+
+def test_spark_fallback_serves_terms_shards_and_docs(spark, index_dir, monkeypatch):
+    """A dir whose scheme pyarrow cannot open (e.g. hdfs:// without
+    libhdfs) reads the same rows through Spark: small terms, lazy shard
+    metadata and payload, and the doc fetch (empty page included) equal
+    the driver-local reads, and the fallback really runs Spark jobs."""
+    from conftest import jobs_run
+    from edgesearch_spark import localread
+
+    fast = SearchEngine(spark, index_dir, lazy_min_df=100)
+    readers = [fast._local_table("postings"), fast._local_table("docs"), fast.doclens._table]
+    monkeypatch.setattr(localread, "_locate", lambda path: None)
+    slow = SearchEngine(spark, index_dir, lazy_min_df=100).warm()
+    assert not any(r._via_spark for r in readers)
+    try:
+        slow.fetch_terms(["hot"])  # the level-1 summary scan, a Spark job either way
+        # a warmed engine reads only the small term and the shards here
+        q = Query.make(require=["rare", "hot"], k=50)
+        got, jobs = jobs_run(spark, lambda: slow.search(q))
+    finally:
+        slow._postings_df.unpersist()
+    assert got == fast.search(q) and jobs > 0  # the fallback really went through Spark
+    assert slow._local_table("postings")._via_spark
+    for spec in (dict(require=["rare", "hot"], k=50), dict(contain=["common1", "third"], k=7)):
+        q = Query.make(**spec)
+        for surface in ("search", "search_bm25", "search_bm25_wand"):
+            got = getattr(slow, surface)(q)
+            assert got == getattr(fast, surface)(q), (surface, spec)
+            assert sorted(slow.fetch_docs(got.doc_ids).collect()) == sorted(
+                fast.fetch_docs(got.doc_ids).collect())
+    assert slow.fetch_docs([]).collect() == []
+    assert slow.fetch_docs([5, 5, 1]).schema == fast._docs_df.schema

@@ -6,11 +6,12 @@
 - projections prune columns at the scan
 - the per-term df join in BM25 broadcasts (no shuffle of the big side)
 - the relational hot paths contain no Python eval nodes
-- a page's doc fetch is one pushed-down docs scan (no join, one job)
+- a kernel-routed page (term reads, norms, doc fetch) runs no Spark job
 - driver-side literal tables are local relations, never Python RDDs
 """
 
 import contextlib
+import glob
 import io
 import re
 import shutil
@@ -133,29 +134,100 @@ def assert_local_relations(frames):
         assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
 
 
-def test_doc_fetch_is_one_pushed_down_scan(spark, index_dir):
-    """A page's doc fetch is a doc_id IN filter pushed into the docs scan:
-    no ids frame, no join, no exchange, one Spark job — and none for an
-    empty page."""
+def test_doc_fetch_runs_no_spark_job(spark, index_dir):
+    """A page's doc fetch is a driver-local read of the docs store handed
+    to Spark as a local relation: building and collecting it runs no Spark
+    job, it has the docs store's schema and its rows, each stored doc once
+    however often its id is asked for, and an empty page has no rows."""
     from edgesearch_spark.engine import SearchEngine
 
     eng = SearchEngine(spark, index_dir)
-    page = [7, 1, 42, 3]
-    df = eng.fetch_docs(page)
-    rows, jobs = jobs_run(spark, df.collect)
-    assert sorted(r["doc_id"] for r in rows) == sorted(page)
-    assert jobs == 1, jobs
-    plan = plan_of(df)
-    for node in ("Join", "Exchange", "ExistingRDD", "Python"):
-        assert node not in plan, (node, plan)
-    pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
-    assert pushed and "In(doc_id" in pushed[0], plan
 
-    rows, jobs = jobs_run(spark, eng.fetch_docs([]).collect)
-    assert (rows, jobs) == ([], 0)
-    # each stored doc once, however often its id is asked for
-    rows = eng.fetch_docs([3, 3, 1, 3]).collect()
-    assert sorted(r["doc_id"] for r in rows) == [1, 3]
+    def fetch(page):
+        df = eng.fetch_docs(page)
+        return df, df.collect()
+
+    for page in ([7, 1, 42, 3], [3, 3, 1, 3], []):
+        (df, rows), jobs = jobs_run(spark, lambda: fetch(page))
+        assert jobs == 0, (page, jobs)
+        assert df.schema == eng._docs_df.schema
+        want = eng._docs_df.filter(F.col("doc_id").isin(page)).collect()
+        assert sorted(rows) == sorted(want), page
+        assert sorted(r["doc_id"] for r in rows) == sorted(set(page))
+
+
+def test_kernel_routed_page_runs_no_spark_job(spark, index_dir):
+    """On a warmed engine, kernel-routed queries on terms not fetched yet
+    (boolean, BM25 and WAND) plus each page's doc fetch run no Spark job
+    in total: term, norms and doc reads are all driver-local."""
+    from edgesearch_spark.engine import SearchEngine
+    from edgesearch_spark.oracle import Query
+
+    eng = SearchEngine(spark, index_dir).warm()
+    cold = SearchEngine(spark, index_dir)
+    plan = [(eng.search, Query.make(require=["import"], contain=["return"], k=5)),
+            (eng.search_bm25, Query.make(require=["license"], k=5)),
+            (eng.search_bm25_wand, Query.make(contain=["def", "class"], k=5))]
+    assert not eng._cache
+
+    def serve():
+        out = []
+        for surface, q in plan:
+            res = surface(q)
+            out.append((res, eng.last_route, eng.fetch_docs(res.doc_ids).collect()))
+        return out
+
+    try:
+        out, jobs = jobs_run(spark, serve)
+    finally:  # later plan tests read this index uncached
+        eng._postings_df.unpersist()
+    assert jobs == 0, jobs
+    for (surface, q), (res, route, rows) in zip(plan, out):
+        assert route == "kernel" and res.doc_ids, (q, route)
+        assert res == getattr(cold, surface.__name__)(q), q
+        assert sorted(r["doc_id"] for r in rows) == sorted(res.doc_ids)
+
+
+def test_doc_fetch_reads_only_the_row_groups_holding_the_page(spark, tmp_path_factory):
+    """The docs store is written on the postings' row-group byte budget
+    (IndexConfig.target_rowgroup_bytes). Built with a tiny budget, every
+    docs file holds several row groups, and a page inside one of them
+    decodes that one row group and returns the right rows."""
+    import pyarrow.parquet as pq
+
+    from edgesearch_spark.engine import SearchEngine
+
+    out = str(tmp_path_factory.mktemp("rgidx"))
+    build_index(spark, generate_corpus(spark, 600, seed=3), out,
+                IndexConfig(target_rowgroup_bytes=16 << 10, num_partitions=2),
+                order_cols=("repo", "path", "commit"))
+    mds = [pq.ParquetFile(f).metadata for f in sorted(glob.glob(f"{out}/docs/*.parquet"))]
+    assert mds and all(md.num_row_groups > 1 for md in mds), [md.num_row_groups for md in mds]
+    md = mds[0]
+    leaf = [md.schema.column(i).path for i in range(md.num_columns)].index("doc_id")
+    st = md.row_group(1).column(leaf).statistics
+    page = [st.max, st.min, (st.min + st.max) // 2]
+
+    eng = SearchEngine(spark, out)
+    reader = eng._local_table("docs")
+    before = reader.row_groups_read
+    rows = eng.fetch_docs(page).collect()
+    assert reader.row_groups_read - before == 1
+    want = eng._docs_df.filter(F.col("doc_id").isin(page)).collect()
+    assert sorted(rows) == sorted(want) and len(rows) == 3
+
+
+def test_arrow_frame_keeps_rows_after_an_empty_chunk(spark):
+    """PySpark 4.1's createDataFrame(pa.Table) drops every record batch
+    after an empty one; session.arrow_frame combines the chunks first, so a
+    table with an empty middle chunk keeps all its rows, with no job."""
+    import pyarrow as pa
+
+    from edgesearch_spark.session import arrow_frame
+
+    t = pa.table({"x": pa.chunked_array([[1, 2], [], [3, 4]], type=pa.int64())})
+    rows, jobs = jobs_run(spark, arrow_frame(spark, t).collect)
+    assert sorted(r["x"] for r in rows) == [1, 2, 3, 4] and jobs == 0
 
 
 def test_distributed_route_has_no_python_rdd(spark, index_dir):
@@ -307,10 +379,13 @@ def test_tombstone_frames_are_local_relations(spark, tmp_path):
     assert sorted(f.columns for f in frames).count(["doc_id"]) == 2, [f.columns for f in frames]
 
 
-def test_lazy_metadata_scan_prunes_payload_column(spark, index_dir):
+def test_lazy_metadata_scan_prunes_payload_column(spark, index_dir, monkeypatch):
     """The hot-term metadata fetch must never read the payload column: its
     ReadSchema at the parquet scan excludes `payload` (column pruning is the
-    entire point of metadata-first laziness)."""
+    entire point of metadata-first laziness), and so does the driver-local
+    read that serves a lazy term's shard metadata."""
+    import numpy as np
+
     from edgesearch_spark.engine import SearchEngine
 
     eng = SearchEngine(spark, index_dir)
@@ -318,3 +393,12 @@ def test_lazy_metadata_scan_prunes_payload_column(spark, index_dir):
     plan = plan_of(meta)
     rs = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     assert rs and all("payload" not in ln for ln in rs), plan
+
+    lazy = SearchEngine(spark, index_dir, lazy_min_df=1)
+    hot = lazy.fetch_terms(["import"])["import"]
+    table = lazy._local_table("postings")
+    reads, take = [], table.take
+    monkeypatch.setattr(table, "take", lambda cols, isin: reads.append(cols) or take(cols, isin))
+    hot._ensure_meta(np.arange(hot.n_shards))
+    assert reads and all("payload" not in cols for cols in reads), reads
+    assert hot.meta_shards_fetched == hot.n_shards and hot.bytes_fetched == 0
