@@ -17,8 +17,8 @@ chunks. Our flow, as declarative Spark stages, one build path each:
             (the reference computes df and drops it — src/build/mod.rs:62,88;
             we keep it: it is the BM25 idf input)
   blooms    absent-term bloom sidecar (bloom.py)
-  optional  positions (the same blob shuffle), hot bigrams and overlong-run
-            trigrams (flat posting stream → make_stream_encoder_arrow)
+  optional  positions, hot bigrams and overlong-run trigrams: the same blob
+            shuffle and range write as postings (_write_blob_table)
 
 Skew: a plain groupBy(term) would put a hot term's entire posting list in
 one task (the `import`-class problem at 10^12 files). The salt — a docID
@@ -68,10 +68,10 @@ class IndexConfig:
     block_size: int = 128
     salt_shift: int = 16  # shard = docID range of 2^16 docs (Roaring high-key analogue)
     # write-side size budget (reference packs ≤25 MiB chunks,
-    # src/build/chunks/bst.rs:86-105): postings files target this many bytes
-    # via maxRecordsPerFile derived from measured bytes/row, and row groups
-    # (of the postings, positions, sidecars and docs) stay small enough that
-    # key-range pruning keeps sub-file granularity.
+    # src/build/chunks/bst.rs:86-105): postings, positions and sidecar files
+    # target this many bytes via maxRecordsPerFile derived from measured
+    # bytes/row, and row groups (of those tables and docs) stay small enough
+    # that key-range pruning keeps sub-file granularity.
     target_file_bytes: int = 32 << 20
     target_rowgroup_bytes: int = 8 << 20
     num_partitions: int | None = None
@@ -143,6 +143,66 @@ def _commit_stage(out_dir: str, m: StageMetrics, lineage: dict) -> None:
 def load_stats(out_dir: str) -> dict:
     with open(os.path.join(out_dir, "stats.json")) as f:
         return json.load(f)
+
+
+def _patch_stats(out_dir: str, **kv) -> None:
+    """Merge ``kv`` into stats.json (atomic replace). The engine detects sidecars from stats.json, never from a filesystem
+    probe (remote index dirs, ADVICE r4 bloom lesson)."""
+    path = os.path.join(out_dir, "stats.json")
+    with open(path) as f:
+        st = json.load(f)
+    st.update(kv)
+    with open(path + ".tmp", "w") as f:
+        json.dump(st, f)
+    os.replace(path + ".tmp", path)
+
+
+def _write_blob_table(packed: DataFrame, encoder, schema: str, path: str,
+                      n_part: int, cfg: IndexConfig) -> dict:
+    """(bucket, blob) rows → one (term, salt)-range-sorted parquet table:
+    repartition(bucket) → encode (mapInArrow) → range write. Returns the
+    rows, postings (sum of df) and payload bytes observed on the write.
+
+    The encoded frame is persisted: repartitionByRange's boundary-sampling
+    pass would otherwise re-run the whole tokenize→shuffle→encode pipeline
+    a second time. Size budget (B12): bytes/row measured off the persisted
+    frame (which also materializes the cache ahead of boundary sampling)
+    caps records per output file, so files land near target_file_bytes
+    even when a range partition holds far more — at 100× scale an uncapped
+    range partition writes multi-GB files that defeat pruning."""
+    from pyspark import StorageLevel
+    from pyspark.sql import Observation
+
+    enc = (packed.repartition(4 * n_part, "bucket").mapInArrow(encoder, schema=schema)
+           .persist(StorageLevel.MEMORY_AND_DISK))
+    est = enc.agg(
+        F.count(F.lit(1)).alias("rows"), F.sum(F.octet_length("payload")).alias("bytes")
+    ).collect()[0]
+    enc_rows, enc_bytes = int(est["rows"] or 0), int(est["bytes"] or 0)
+    # block metadata arrays add ~29 B/block ≈ payload-order overhead; 1.3×
+    bytes_per_row = max(64.0, 1.3 * enc_bytes / max(1, enc_rows))
+    max_rec = max(1, int(cfg.target_file_bytes / bytes_per_row))
+    obs = Observation()
+    (enc.repartitionByRange(n_part, "term", "salt").sortWithinPartitions("term", "salt")
+        .observe(obs, F.count(F.lit(1)).alias("rows"), F.sum("df").alias("postings"),
+                 F.sum(F.octet_length("payload")).alias("bytes"))
+        .write.mode("overwrite")
+        .option("maxRecordsPerFile", max_rec)
+        .option("parquet.block.size", cfg.target_rowgroup_bytes)
+        .parquet(path))
+    enc.unpersist()
+    got = obs.get  # stats ride the write — no read-back scan of the table
+    return {k: int(got[k] or 0) for k in ("rows", "postings", "bytes")}
+
+
+def _write_sidecar(rows: DataFrame, path: str, n_part: int, cfg: IndexConfig) -> dict:
+    """(term, doc_id, tf) rows → a postings-schema sidecar table (w = 0)
+    through the postings blob shuffle."""
+    from .arrow_pipeline import make_pack_encoder, pack_postings_arrow
+
+    packed = pack_postings_arrow(rows, n_buckets=16 * n_part, salt_shift=cfg.salt_shift)
+    return _write_blob_table(packed, make_pack_encoder(cfg.block_size, cfg.salt_shift),
+                             POSTINGS_SCHEMA, path, n_part, cfg)
 
 
 def idf_value(n_docs: int, df: np.ndarray | int, variant: str = "lucene") -> np.ndarray | float:
@@ -372,8 +432,6 @@ def build_index(
     # ---- stage 3: salted posting blocks ----
     if not stage("postings"):
         t0 = time.monotonic()
-        from pyspark import StorageLevel
-
         # binary-blob shuffle: the tokenizer pre-packs each
         # (hash(term), salt)-bucket of a batch into one blob, so the
         # shuffle and BOTH Arrow crossings move thousands of binary rows
@@ -389,43 +447,13 @@ def build_index(
             k1=cfg.k1, b=cfg.b, avgdl=avgdl,
             word_map=cfg.word_map, field_prefix=cfg.field_prefix,
         )
-        stream = packed.repartition(4 * n_part, "bucket")
-        encoded = stream.mapInArrow(
-            make_pack_encoder(cfg.block_size, cfg.salt_shift), schema=POSTINGS_SCHEMA
-        )
-        # persist before the range write: repartitionByRange's boundary-
-        # sampling pass would otherwise re-run the whole tokenize→shuffle→
-        # encode pipeline a second time
-        encoded = encoded.persist(StorageLevel.MEMORY_AND_DISK)
-        # size budget (B12): measure bytes/row off the persisted frame (this
-        # also materializes the cache ahead of boundary sampling), then cap
-        # records per output file so files land near target_file_bytes even
-        # when a range partition holds far more — at 100× scale an uncapped
-        # range partition writes multi-GB files that defeat pruning.
-        est = encoded.agg(
-            F.count(F.lit(1)).alias("rows"), F.sum(F.octet_length("payload")).alias("bytes")
-        ).collect()[0]
-        enc_rows, enc_bytes = int(est["rows"] or 0), int(est["bytes"] or 0)
-        # block metadata arrays add ~29 B/block ≈ payload-order overhead; 1.3×
-        bytes_per_row = max(64.0, 1.3 * enc_bytes / max(1, enc_rows))
-        max_rec = max(1, int(cfg.target_file_bytes / bytes_per_row))
-        from pyspark.sql import Observation
-
-        pobs = Observation("postings_stats")
-        (encoded.repartitionByRange(n_part, "term", "salt").sortWithinPartitions("term", "salt")
-                .observe(pobs, F.count(F.lit(1)).alias("rows"), F.sum("df").alias("postings"),
-                         F.sum(F.octet_length("payload")).alias("bytes"))
-                .write.mode("overwrite")
-                .option("maxRecordsPerFile", max_rec)
-                .option("parquet.block.size", cfg.target_rowgroup_bytes)
-                .parquet(postings_path))
-        encoded.unpersist()
-        agg = pobs.get  # stats ride the write — no read-back scan of the table
+        agg = _write_blob_table(packed, make_pack_encoder(cfg.block_size, cfg.salt_shift),
+                                POSTINGS_SCHEMA, postings_path, n_part, cfg)
         dt = time.monotonic() - t0
         m = StageMetrics(
-            "postings", int(agg["rows"]), dt,
-            {"total_postings": int(agg["postings"] or 0), "payload_bytes": int(agg["bytes"] or 0),
-             "postings_per_sec": (agg["postings"] or 0) / dt if dt else None},
+            "postings", agg["rows"], dt,
+            {"total_postings": agg["postings"], "payload_bytes": agg["bytes"],
+             "postings_per_sec": agg["postings"] / dt if dt else None},
         )
         metrics.append(m)
         _commit_stage(out_dir, m, {"input": docs_path, "output": postings_path})
@@ -495,61 +523,22 @@ def build_index(
     # the skew cap (2^salt_shift docs per shard) carries over.
     if cfg.positions and not stage("positions"):
         t0 = time.monotonic()
-        pdocs = spark.read.parquet(docs_path)
-        if cfg.split_identifiers:
-            from .functions.code import identifier_marked_col
-
-            pdocs = pdocs.withColumn(content_col, identifier_marked_col(content_col))
-        # binary-blob shuffle (the postings discipline): the tokenizer
-        # pre-packs each (hash(term), salt)-bucket of a batch into one blob,
-        # the shuffle and both Arrow crossings move thousands of binary rows
-        # instead of one row per token occurrence, and the encoder sorts in
-        # numpy — the JVM never row-converts the position stream
         from .arrow_pipeline import make_pos_pack_encoder, tokenize_pos_pack_arrow
 
         packed = tokenize_pos_pack_arrow(
-            pdocs, doc_id_col="doc_id", content_col=content_col,
+            docs_df, doc_id_col="doc_id", content_col=content_col,
             n_buckets=16 * n_part, salt_shift=cfg.salt_shift,
             word_map=cfg.word_map, field_prefix=cfg.field_prefix,
         )
-        enc = packed.repartition(4 * n_part, "bucket").mapInArrow(
-            make_pos_pack_encoder(cfg.salt_shift), schema=POSITIONS_SCHEMA)
         positions_path = os.path.join(out_dir, "positions")
-        # persist before the range write: repartitionByRange's boundary-
-        # sampling pass re-executes the whole tokenize→shuffle→encode
-        # pipeline a SECOND time otherwise (the postings stage has carried
-        # this guard since round 3; the positions stage was paying the
-        # double run — half its round-7 wall time was the sampling rerun)
-        from pyspark import StorageLevel
-
-        enc = enc.persist(StorageLevel.MEMORY_AND_DISK)
-        enc.count()  # materialize ahead of boundary sampling
-        from pyspark.sql import Observation
-
-        posobs = Observation("positions_stats")
-        (enc.repartitionByRange(n_part, "term", "salt").sortWithinPartitions("term", "salt")
-            .observe(posobs, F.count(F.lit(1)).alias("rows"), F.sum("df").alias("postings"),
-                     F.sum(F.octet_length("payload")).alias("bytes"))
-            .write.mode("overwrite")
-            .option("parquet.block.size", cfg.target_rowgroup_bytes)
-            .parquet(positions_path))
-        enc.unpersist()
-        agg = posobs.get  # stats ride the write — no read-back scan
-        # engine detects the sidecar from stats.json, never a fs probe
-        stats_path = os.path.join(out_dir, "stats.json")
-        with open(stats_path) as f:
-            st = json.load(f)
-        st["positions"] = True
-        with open(stats_path + ".tmp", "w") as f:
-            json.dump(st, f)
-        os.replace(stats_path + ".tmp", stats_path)
+        agg = _write_blob_table(packed, make_pos_pack_encoder(cfg.salt_shift),
+                                POSITIONS_SCHEMA, positions_path, n_part, cfg)
+        _patch_stats(out_dir, positions=True)
         dt = time.monotonic() - t0
-        m = StageMetrics("positions", int(agg["rows"]), dt,
-                         {"total_postings": int(agg["postings"] or 0),
-                          "payload_bytes": int(agg["bytes"] or 0)})
+        m = StageMetrics("positions", agg["rows"], dt,
+                         {"total_postings": agg["postings"], "payload_bytes": agg["bytes"]})
         metrics.append(m)
         _commit_stage(out_dir, m, {"input": docs_path, "output": positions_path})
-
 
     # ---- stage 7 (optional): hot-bigram sidecar (common-grams) ----
     # Adjacent-pair postings for hot×hot term pairs, in the SAME postings
@@ -559,8 +548,6 @@ def build_index(
     # builds (word_map / field_prefix / split_identifiers rewrite tokens
     # relative to stored content) refuse the sidecar.
     if cfg.bigram_min_df is not None and not stage("bigrams"):
-        from .arrow_pipeline import make_stream_encoder_arrow
-
         t0 = time.monotonic()
         hot_df = (
             spark.read.parquet(terms_path)
@@ -603,7 +590,6 @@ def build_index(
             from .tokenizer import _tokens_col
 
             pair_derivation = "tokenize"
-            docs_df = spark.read.parquet(docs_path)
             ts = _tokens_col(content_col)
             pair = F.arrays_zip(
                 ts.alias("a"),
@@ -620,31 +606,12 @@ def build_index(
                 .groupBy("doc_id", F.concat_ws(" ", "a", "b").alias("term"))
                 .agg(F.count(F.lit(1)).alias("tf"))
             )
-        slim = pairs.select("term", "doc_id", "tf", F.lit(0.0).cast("float").alias("w"))
-        stream = slim.repartition(
-            n_part, "term", F.shiftright(F.col("doc_id"), cfg.salt_shift)
-        ).sortWithinPartitions("term", "doc_id")
         bigram_path = os.path.join(out_dir, "bigram_postings")
-        (stream.mapInArrow(make_stream_encoder_arrow(cfg.block_size, cfg.salt_shift),
-                           schema=POSTINGS_SCHEMA)
-               .repartitionByRange(n_part, "term", "salt").sortWithinPartitions("term", "salt")
-               .write.mode("overwrite")
-               .option("parquet.block.size", cfg.target_rowgroup_bytes)
-               .parquet(bigram_path))
-        agg = spark.read.parquet(bigram_path).agg(
-            F.count(F.lit(1)).alias("rows"), F.sum("df").alias("postings")).collect()[0]
-        # the engine detects the sidecar from stats.json (never from a
-        # filesystem probe — remote index dirs, ADVICE r4 bloom lesson)
-        stats_path = os.path.join(out_dir, "stats.json")
-        with open(stats_path) as f:
-            st = json.load(f)
-        st["bigram_min_df"] = cfg.bigram_min_df
-        with open(stats_path + ".tmp", "w") as f:
-            json.dump(st, f)
-        os.replace(stats_path + ".tmp", stats_path)
+        agg = _write_sidecar(pairs, bigram_path, n_part, cfg)
+        _patch_stats(out_dir, bigram_min_df=cfg.bigram_min_df)
         dt = time.monotonic() - t0
-        m = StageMetrics("bigrams", int(agg["rows"]), dt,
-                         {"total_postings": int(agg["postings"] or 0),
+        m = StageMetrics("bigrams", agg["rows"], dt,
+                         {"total_postings": agg["postings"],
                           "min_df": cfg.bigram_min_df,
                           "pair_derivation": pair_derivation})
         metrics.append(m)
@@ -661,14 +628,10 @@ def build_index(
     # unchanged. A corpus with no flagged docs commits the stage with no
     # table (trivially covered — stats records rows=0).
     if cfg.overlong_trigrams and not stage("oltrigrams"):
-        from .arrow_pipeline import make_stream_encoder_arrow
         from .tokenizer import MAX_TERM_BYTES
 
         t0 = time.monotonic()
-        stats_path = os.path.join(out_dir, "stats.json")
-        with open(stats_path) as f:
-            st = json.load(f)
-        if not st.get("has_overlong_runs"):
+        if not load_stats(out_dir).get("has_overlong_runs"):
             # stage 2 already proved no doc carries a dropped run — commit
             # the stage without touching the corpus (zero extra scan on
             # clean corpora, the common case); rows=0 tells the engine no
@@ -690,28 +653,10 @@ def build_index(
                 )).alias("term"))
                 .groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
             )
-            slim = tris.select("term", "doc_id", "tf",
-                               F.lit(0.0).cast("float").alias("w"))
-            stream = slim.repartition(
-                n_part, "term", F.shiftright(F.col("doc_id"), cfg.salt_shift)
-            ).sortWithinPartitions("term", "doc_id")
             oltri_path = os.path.join(out_dir, "overlong_trigrams")
-            enc = stream.mapInArrow(make_stream_encoder_arrow(cfg.block_size, cfg.salt_shift),
-                                    schema=POSTINGS_SCHEMA)
-            (enc.repartitionByRange(n_part, "term", "salt")
-                .sortWithinPartitions("term", "salt")
-                .write.mode("overwrite")
-                .option("parquet.block.size", cfg.target_rowgroup_bytes)
-                .parquet(oltri_path))
-            agg = spark.read.parquet(oltri_path).agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.sum("df").alias("postings")).collect()[0]
-            n_rows, n_post = int(agg["rows"] or 0), int(agg["postings"] or 0)
-        st["overlong_trigrams"] = True
-        st["overlong_trigram_rows"] = n_rows
-        with open(stats_path + ".tmp", "w") as f:
-            json.dump(st, f)
-        os.replace(stats_path + ".tmp", stats_path)
+            agg = _write_sidecar(tris, oltri_path, n_part, cfg)
+            n_rows, n_post = agg["rows"], agg["postings"]
+        _patch_stats(out_dir, overlong_trigrams=True, overlong_trigram_rows=n_rows)
         dt = time.monotonic() - t0
         m = StageMetrics("oltrigrams", n_rows, dt, {"total_postings": n_post})
         metrics.append(m)

@@ -12,7 +12,7 @@ This module holds the JVM definition of the token stream: pure Spark
 built-ins (split/filter/transform) that stay inside the JVM.
 ``norm_tokens_col`` is the normalized stream, ``tokenize_pairs`` the
 (doc_id, term, tf, dl) forward index over it, ``doc_length_col`` the BM25
-dl. The index build tokenizes with the Arrow tokenizers in
+dl. The index build tokenizes with the Arrow tokenizer in
 ``arrow_pipeline`` (same stream, no JVM row conversion); the JVM stream is
 the reference those are tested against, and the scan-side operators and
 contract queries use it directly.

@@ -7,7 +7,8 @@ import pyarrow as pa
 from index_reference import assert_postings_match_reference
 from pyspark.sql import functions as F
 
-from edgesearch_spark.arrow_pipeline import _tokenize_batch
+from edgesearch_spark.arrow_pipeline import (_POSITION_VALUES, _tokenize_batch, _unpack,
+                                             tokenize_pos_pack_arrow)
 from edgesearch_spark.build import IndexConfig, build_index
 from edgesearch_spark.corpus import generate_corpus
 from edgesearch_spark.tokenizer import norm_tokens_col, tokenize_pairs
@@ -27,6 +28,20 @@ def _arrow_pairs(rows, word_map=None, field_prefix=None):
         return []
     doc_out, code_out, tf, dl, uniques = got
     return sorted(zip(doc_out.tolist(), [uniques[c] for c in code_out], tf.tolist(), dl.tolist()))
+
+
+def _arrow_positions(df, word_map=None, field_prefix=None):
+    """The build's positions producer (tokenize → pack) on a DataFrame, its
+    blobs parsed back → sorted (doc_id, term, pos) tuples."""
+    packed = tokenize_pos_pack_arrow(df, "doc_id", "content", n_buckets=4, salt_shift=16,
+                                     word_map=word_map, field_prefix=field_prefix)
+    blobs = pa.RecordBatch.from_arrays(
+        [pa.array([bytes(r["blob"]) for r in packed.collect()], pa.binary())], names=["blob"])
+    got = _unpack(iter([blobs]), _POSITION_VALUES)
+    if got is None:
+        return []
+    terms, codes, docs, (pos,) = got
+    return sorted(zip(docs.tolist(), terms.take(pa.array(codes)).to_pylist(), pos.tolist()))
 
 
 def test_pack_postings_match_reference(spark, tmp_path_factory):
@@ -94,31 +109,34 @@ def test_pandas_tokenizer_field_prefix():
 
 def test_postings_file_size_budget(spark, tmp_path_factory):
     """B12: maxRecordsPerFile derived from measured bytes/row keeps postings
-    files near the configured byte target even when one range partition holds
-    far more rows."""
+    and positions files near the configured byte target even when one range
+    partition holds far more rows."""
     import os
 
     out = str(tmp_path_factory.mktemp("sized"))
     build_index(
         spark, generate_corpus(spark, 1200, seed=13), out,
-        IndexConfig(target_file_bytes=24 << 10, num_partitions=4),
+        IndexConfig(target_file_bytes=24 << 10, num_partitions=4, positions=True),
         order_cols=("repo", "path", "commit"),
     )
-    sizes = []
-    for f in os.listdir(f"{out}/postings"):
-        if f.endswith(".parquet"):
-            sizes.append(os.path.getsize(f"{out}/postings/{f}"))
-    assert len(sizes) > 4, "budget should split beyond the 4 range partitions"
-    # parquet per-file floor is a few KB of footer; assert no file blows past
-    # the target by more than the expected overhead factor
-    assert max(sizes) < (24 << 10) * 4, sorted(sizes)[-3:]
+    for table in ("postings", "positions"):
+        sizes = []
+        for f in os.listdir(f"{out}/{table}"):
+            if f.endswith(".parquet"):
+                sizes.append(os.path.getsize(f"{out}/{table}/{f}"))
+        assert len(sizes) > 4, f"{table}: budget should split beyond the 4 range partitions"
+        # parquet per-file floor is a few KB of footer; assert no file blows
+        # past the target by more than the expected overhead factor
+        assert max(sizes) < (24 << 10) * 4, (table, sorted(sizes)[-3:])
 
 
 def test_tokenizer_unicode_null_parity(spark):
     """The Arrow tokenizer's C++ ASCII fast path + Python fallback must be
     row-for-row identical to the JVM token stream (norm_tokens_col explode
     + count) on unicode, null, empty, over-long-token, emoji, Kelvin-sign,
-    ligature and final-sigma content, with and without word_map/prefix."""
+    ligature and final-sigma content, with and without word_map/prefix —
+    and so must the positions producer's (doc_id, term, pos) stream against
+    posexplode(norm_tokens_col)."""
     rows = [
         (0, "Hello WORLD foo123 bar"),
         (1, "café résumé naïve"),
@@ -144,3 +162,7 @@ def test_tokenizer_unicode_null_parity(spark):
             .join(dl, "doc_id").collect())
         assert _arrow_pairs(rows, **kw) == want, kw
         assert len(want) > 0
+        want_pos = sorted(
+            (r["doc_id"], r["term"], r["pos"])
+            for r in toks.select("doc_id", F.posexplode("toks").alias("pos", "term")).collect())
+        assert _arrow_positions(df, **kw) == want_pos, kw

@@ -378,7 +378,13 @@ def bigram_index(spark, tmp_path_factory):
 
 
 def test_bigram_sidecar_built_and_detected(spark, bigram_index):
+    from index_reference import assert_sidecars_match_reference
+
     assert bigram_index.stats.get("bigram_min_df") == 4
+    # both sidecars (doc 5 holds a dropped >255-byte run) decode to their
+    # references
+    n_bi, n_tri = assert_sidecars_match_reference(spark, bigram_index.index_dir)
+    assert n_bi > 0 and n_tri > 0
     bp = bigram_index.bigram_postings_df()
     keys = {r["term"] for r in bp.select("term").distinct().collect()}
     assert "data value" in keys and "value data" in keys
@@ -706,6 +712,9 @@ def test_bigram_pairs_derived_from_positions_byte_identical(spark, bigram_index,
     rb = sorted(tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v
                       for v in r) for r in b.select(*cols).collect())
     assert ra == rb and len(ra) > 0
+    from index_reference import assert_sidecars_match_reference
+
+    assert assert_sidecars_match_reference(spark, out)[0] > 0
 
 
 @pytest.fixture(scope="module")
