@@ -60,6 +60,8 @@ POSTINGS_SCHEMA = (
 
 POSITIONS_SCHEMA = "term string, salt long, df long, payload binary"
 
+TERM_STATS_SCHEMA = "term string, df long, cf long, max_weight float"
+
 
 @dataclass
 class IndexConfig:
@@ -467,7 +469,8 @@ def build_index(
     # second full shuffle of every (doc, term) pair.
     if not stage("terms"):
         t0 = time.monotonic()
-        post_df = spark.read.parquet(postings_path)
+        # known schemas: a bare read would run a schema-inference job
+        post_df = spark.read.schema(POSTINGS_SCHEMA).parquet(postings_path)
         term_stats = (
             post_df.groupBy("term")
             .agg(
@@ -496,7 +499,7 @@ def build_index(
         from .bloom import build_term_bloom
 
         t0 = time.monotonic()
-        ts_df = spark.read.parquet(terms_path)
+        ts_df = spark.read.schema(TERM_STATS_SCHEMA).parquet(terms_path)
         try:  # the terms stage already counted — skip the extra job
             with open(_manifest_path(out_dir, "terms")) as f:
                 n_terms = int(json.load(f)["rows"])
@@ -550,7 +553,7 @@ def build_index(
     if cfg.bigram_min_df is not None and not stage("bigrams"):
         t0 = time.monotonic()
         hot_df = (
-            spark.read.parquet(terms_path)
+            spark.read.schema(TERM_STATS_SCHEMA).parquet(terms_path)
             .filter(F.col("df") >= cfg.bigram_min_df).select("term")
         )
         if cfg.positions and _stage_done(out_dir, "positions"):
@@ -567,7 +570,7 @@ def build_index(
 
             pair_derivation = "positions"
             dec = (
-                spark.read.parquet(os.path.join(out_dir, "positions"))
+                spark.read.schema(POSITIONS_SCHEMA).parquet(os.path.join(out_dir, "positions"))
                 .join(F.broadcast(hot_df), "term", "left_semi")
                 .select("term", "df", "payload")
                 .mapInPandas(_decode_pos_rows, schema=POS_DECODED_SCHEMA)

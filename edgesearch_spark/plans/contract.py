@@ -1424,6 +1424,68 @@ WITH toks AS (
 """
 
 
+# (query_id, require, contain, exclude): terms shared across queries, one
+# exclude clause and one contain-only query
+BATCH_BM25 = [("b1", ["table"], ["vector", "stream"], []),
+              ("b2", ["table", "merge"], [], []),
+              ("b3", ["merge"], ["spark"], ["slow"]),
+              ("b4", [], ["vector", "spark", "merge"], [])]
+BATCH_BM25_K = 10
+
+
+def q_batch_bm25_table(spark, sf_dir):
+    """A TABLE of scored boolean queries ranked in ONE plan
+    (plans/batch.batch_search, scored): per-query clause filter, the
+    shared BM25 fold and a per-query ``row_number() <= k`` top-k."""
+    from ..plans.batch import QUERIES_SCHEMA, batch_search
+
+    eng = _engine_for(spark, sf_dir)
+    qdf = spark.createDataFrame(BATCH_BM25, QUERIES_SCHEMA)
+    out = batch_search(spark, eng, qdf, k=BATCH_BM25_K, scored=True)
+    return out.select("query_id", F.col("rank").cast("long").alias("rank"), "doc_id",
+                      F.round("score", 4).alias("score"))
+
+
+def _bm25_query_cte(qid: str, req: list[str], con: list[str], exc: list[str]) -> str:
+    def quoted(ts):
+        return ", ".join(f"'{t}'" for t in ts)
+
+    conds = [f"h.doc_id IN ({_sql_doc_set(t)})" for t in req]
+    if con:
+        conds.append(f"h.doc_id IN (SELECT doc_id FROM pairs WHERE term IN ({quoted(con)}))")
+    if exc:
+        conds.append(f"h.doc_id NOT IN (SELECT doc_id FROM pairs WHERE term IN ({quoted(exc)}))")
+    return f"""
+  SELECT '{qid}' AS query_id, h.doc_id,
+         sum(ln(1.0 + (s.n - f.df + 0.5) / (f.df + 0.5))
+             * h.tf * {K1 + 1}
+             / (h.tf + {K1} * (1 - {B} + {B} * d.dl / s.avgdl))) AS score
+  FROM pairs h JOIN dfs f USING (term) JOIN dl d USING (doc_id) CROSS JOIN stats s
+  WHERE h.term IN ({quoted(req + con)}) AND {" AND ".join(conds)}
+  GROUP BY h.doc_id"""
+
+
+# SQL_BM25_TOPK per query. Ranks order on the score rounded to 9 places,
+# so a last-ulp difference from another summation order cannot swap two
+# equal scores. batch_search rounds its score to 6 places and the entry
+# to 4; Spark rounds a double half-up on its decimal digits, so the
+# second rounding runs on a DECIMAL here.
+SQL_BATCH_BM25_TABLE = f"""
+WITH {_PAIRS_CTE}, {_DL_CTE},
+stats AS (SELECT count(*) AS n, (SELECT avg(dl) FROM dl) AS avgdl FROM documents),
+dfs AS (SELECT term, count(*) AS df FROM pairs GROUP BY term),
+scored AS ({" UNION ALL ".join(_bm25_query_cte(*q) for q in BATCH_BM25)}
+),
+ranked AS (
+  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY round(score, 9) DESC, doc_id) - 1 AS rank
+  FROM scored
+)
+SELECT query_id, rank, doc_id,
+       CAST(round(CAST(round(score, 6) AS DECIMAL(18, 6)), 4) AS DOUBLE) AS score
+FROM ranked WHERE rank < {BATCH_BM25_K}
+"""
+
+
 WILDCARD = "s?a*"  # expands to scan / small / spark in the dictionary
 
 
@@ -1825,9 +1887,12 @@ LIMIT 20
 # entries that just re-earned official green in r6 (phrase_match,
 # regex_search, idx_facet_lang, term_suggest, idx_snippets,
 # code_token_stats) in their place; the new batch_near_table leads, letting
-# ann_lsh_buckets (official-green r5+r6) age past the cap.
+# ann_lsh_buckets (official-green r5+r6) age past the cap. batch_bm25_table
+# (the scored batch_search oracle) leads next; embedding_near_dup_lsh ages
+# past the cap.
 QUERIES = {
     # --- newest index-engine surfaces (r5/r6) ---
+    "batch_bm25_table": (q_batch_bm25_table, SQL_BATCH_BM25_TABLE),
     "batch_near_table": (q_batch_near_table, SQL_BATCH_NEAR_TABLE),
     "idx_prefix_search": (q_idx_prefix_search, SQL_IDX_PREFIX_SEARCH),
     "idx_wildcard_search": (q_idx_wildcard_search, SQL_IDX_WILDCARD_SEARCH),

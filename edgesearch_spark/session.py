@@ -7,6 +7,7 @@ hot paths), UTC timezone (DuckDB-oracle comparability).
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -19,16 +20,38 @@ def package_zip() -> str:
     ``get_spark`` registers it via ``sc.addPyFile`` so UDF closures that
     reference edgesearch_spark modules resolve on Python workers no matter
     the driver's cwd — the same artifact a cluster run passes to
-    ``spark-submit --py-files``."""
+    ``spark-submit --py-files``.
+
+    The zip is named by a hash of its content and moved into place whole
+    (``os.replace``), so sessions of two checkouts never write the same
+    file and ``addPyFile`` never copies a half-written one. A zip that
+    already exists for this content is reused as is."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    out = os.path.join(tempfile.gettempdir(), "edgesearch_spark_pyfiles.zip")
-    with zipfile.ZipFile(out, "w") as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    rel = os.path.join("edgesearch_spark", os.path.relpath(full, pkg_dir))
-                    zf.write(full, rel)
+    members = []
+    for root, dirs, files in os.walk(pkg_dir):
+        dirs.sort()
+        for f in sorted(files):
+            if f.endswith(".py"):
+                full = os.path.join(root, f)
+                with open(full, "rb") as fh:
+                    members.append((os.path.join("edgesearch_spark", os.path.relpath(full, pkg_dir)),
+                                    fh.read()))
+    digest = hashlib.sha256()
+    for name, data in members:
+        digest.update(b"%d:%s\0%d:" % (len(name), name.encode(), len(data)) + data)
+    out = os.path.join(tempfile.gettempdir(), f"edgesearch_spark_pyfiles_{digest.hexdigest()[:16]}.zip")
+    if os.path.exists(out):
+        return out
+    fd, tmp = tempfile.mkstemp(suffix=".zip.tmp", dir=os.path.dirname(out))
+    try:
+        with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as zf:
+            for name, data in members:
+                zf.writestr(name, data)
+        os.chmod(tmp, 0o644)  # mkstemp's 0600 would hide it from other users
+        os.replace(tmp, out)
+    except BaseException:
+        os.unlink(tmp)
+        raise
     return out
 
 

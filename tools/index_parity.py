@@ -20,9 +20,7 @@ is the table's sort order) and prints one line per table:
   OK rows    the rows are identical in order; the files split differently
   DIFF ...   the rows differ
 
-stats.json is compared as parsed JSON. Run two ``build``s one after the
-other, never at once: sessions of both checkouts write the same package
-zip in the temp dir (``session.package_zip``).
+stats.json is compared as parsed JSON.
 """
 
 from __future__ import annotations
