@@ -56,12 +56,6 @@ def _positions(term: str) -> np.ndarray:
     return (h1 + np.arange(BLOOM_K, dtype=np.uint64) * np.uint64(h2)) % np.uint64(M_BITS)
 
 
-def _set_bits(bits: np.ndarray, terms) -> None:
-    for t in terms:
-        pos = _positions(t)
-        bits[pos >> np.uint64(3)] |= (1 << (pos & np.uint64(7))).astype(np.uint8)
-
-
 def build_term_bloom(spark: SparkSession, term_stats: DataFrame, out_path: str,
                      n_terms: int) -> int:
     """Write the sidecar: one row per range (range_id, n_ranges, bits).

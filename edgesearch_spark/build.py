@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .docids import assign_doc_ids
+from .localread import LocalTable
 
 STAGES = ("docs", "stats", "postings", "terms")
 
@@ -59,8 +60,6 @@ POSTINGS_SCHEMA = (
 )
 
 POSITIONS_SCHEMA = "term string, salt long, df long, payload binary"
-
-TERM_STATS_SCHEMA = "term string, df long, cf long, max_weight float"
 
 
 @dataclass
@@ -307,8 +306,9 @@ def build_index(
             layout = docs.repartitionByRange(n_part, "doc_id").sortWithinPartitions("doc_id")
         obs = Observation("docid_invariants")
         # row groups on the postings' byte budget: a page's doc fetch
-        # decodes the few row groups whose doc_id range holds a page id
-        # (localread.LocalTable), never a whole file, at any corpus size
+        # decodes only the row groups whose doc_id range holds a page id
+        # (localread.LocalTable). Below ~8 MB a docs file is ONE row group,
+        # so a page with ids scattered over the files decodes them whole
         (layout.observe(obs,
                         F.count(F.lit(1)).alias("n"), F.min("doc_id").alias("lo"),
                         F.max("doc_id").alias("hi"),
@@ -341,7 +341,7 @@ def build_index(
         return metrics
 
     _tune_split_size(spark, docs_path, n_part)
-    docs_df = spark.read.parquet(docs_path)
+    docs_df = LocalTable([docs_path], spark).frame()
     if cfg.split_identifiers:
         # applies to tokenization inputs only — stage 1 (original content)
         # is already on disk
@@ -469,8 +469,7 @@ def build_index(
     # second full shuffle of every (doc, term) pair.
     if not stage("terms"):
         t0 = time.monotonic()
-        # known schemas: a bare read would run a schema-inference job
-        post_df = spark.read.schema(POSTINGS_SCHEMA).parquet(postings_path)
+        post_df = LocalTable([postings_path], spark).frame()
         term_stats = (
             post_df.groupBy("term")
             .agg(
@@ -499,7 +498,7 @@ def build_index(
         from .bloom import build_term_bloom
 
         t0 = time.monotonic()
-        ts_df = spark.read.schema(TERM_STATS_SCHEMA).parquet(terms_path)
+        ts_df = LocalTable([terms_path], spark).frame()
         try:  # the terms stage already counted — skip the extra job
             with open(_manifest_path(out_dir, "terms")) as f:
                 n_terms = int(json.load(f)["rows"])
@@ -553,7 +552,7 @@ def build_index(
     if cfg.bigram_min_df is not None and not stage("bigrams"):
         t0 = time.monotonic()
         hot_df = (
-            spark.read.schema(TERM_STATS_SCHEMA).parquet(terms_path)
+            LocalTable([terms_path], spark).frame()
             .filter(F.col("df") >= cfg.bigram_min_df).select("term")
         )
         if cfg.positions and _stage_done(out_dir, "positions"):
@@ -570,7 +569,7 @@ def build_index(
 
             pair_derivation = "positions"
             dec = (
-                spark.read.schema(POSITIONS_SCHEMA).parquet(os.path.join(out_dir, "positions"))
+                LocalTable([os.path.join(out_dir, "positions")], spark).frame()
                 .join(F.broadcast(hot_df), "term", "left_semi")
                 .select("term", "df", "payload")
                 .mapInPandas(_decode_pos_rows, schema=POS_DECODED_SCHEMA)
@@ -641,7 +640,7 @@ def build_index(
             # sidecar table exists to read
             n_rows, n_post, oltri_path = 0, 0, None
         else:
-            fdocs = spark.read.parquet(docs_path).filter(
+            fdocs = LocalTable([docs_path], spark).frame().filter(
                 F.col(content_col).rlike(f"[a-zA-Z0-9]{{{MAX_TERM_BYTES + 1},}}"))
             runs = fdocs.select(
                 "doc_id",

@@ -541,6 +541,7 @@ class SearchEngine:
         self.index_dir = index_dir
         self._segment_dirs = [index_dir]
         self.stats = load_stats(index_dir)
+        self._segment_stats = [self.stats]
         self.n_docs: int = self.stats["n_docs"]
         self.k1: float = self.stats["k1"]
         self.b: float = self.stats["b"]
@@ -554,18 +555,15 @@ class SearchEngine:
             self.hot_route_df = hot_route_df
         self._open_tables()
 
-    def _table_dirs(self, table: str) -> list[str]:
-        """``table``'s dir in every segment of this index."""
-        return [f"{s}/{table}" for s in self._segment_dirs]
-
     def _open_tables(self) -> None:
         """Spark frames over the segments' tables, and empty driver state:
-        term caches, norms, blooms and driver-local readers all load on
-        first use."""
-        read = self.spark.read.parquet
-        self._postings_df = read(*self._table_dirs("postings"))
-        self._term_stats_df = read(*self._table_dirs("term_stats"))
-        self._docs_df = read(*self._table_dirs("docs"))
+        term caches, norms and blooms load on first use. The frames take
+        their schemas from the tables' footers (``LocalTable.frame``), so
+        opening them runs no Spark job."""
+        self._local: dict = {}  # (table, segment dirs) -> localread.LocalTable
+        self._postings_df = self._local_table("postings").frame()
+        self._term_stats_df = self._local_table("term_stats").frame()
+        self._docs_df = self._local_table("docs").frame()
         # metadata column set + max_tf availability (pre-max_tf indexes
         # lack the column; everything falls back to stored weights)
         self._has_max_tf = "block_max_tf" in self._postings_df.columns
@@ -582,16 +580,17 @@ class SearchEngine:
         self._dict_complete = False  # warm() may load the whole term dict
         self._doclens: NormsCache | None = None
         self._blooms: list | bool = False  # False = not loaded yet
-        self._local: dict = {}  # table name -> localread.LocalTable
 
-    def _local_table(self, table: str) -> LocalTable:
-        """Driver-local reader of ``table`` over every segment; its
-        footers are read on first use."""
+    def _local_table(self, table: str, segments: list[str] | None = None) -> LocalTable:
+        """The one opener of an index table: a driver-local reader of
+        ``table`` over ``segments`` (default: every segment), which also
+        gives its Spark frame. Its footers are read on first use."""
         from .localread import LocalTable
 
-        if table not in self._local:
-            self._local[table] = LocalTable(self._table_dirs(table), self.spark)
-        return self._local[table]
+        key = (table, tuple(self._segment_dirs if segments is None else segments))
+        if key not in self._local:
+            self._local[key] = LocalTable([f"{s}/{table}" for s in key[1]], self.spark)
+        return self._local[key]
 
     def _postings_rows(self, cols: tuple, isin: dict) -> list[dict]:
         """``cols`` of the postings rows ``isin`` selects (LocalTable.take),
@@ -639,7 +638,7 @@ class SearchEngine:
         O(n_docs) — the 10^9+-doc serving posture."""
         if self._doclens is None:
             self._doclens = NormsCache(
-                self._table_dirs("doclens"), self.n_docs,
+                [f"{s}/doclens" for s in self._segment_dirs], self.n_docs,
                 page_docs=self.norms_page_docs,
                 max_pages=self.norms_max_pages, spark=self.spark)
         return self._doclens
@@ -1046,14 +1045,15 @@ class SearchEngine:
     def _doclens_df(self) -> DataFrame:
         # project away the per-doc overlong flag (regex-only metadata) so
         # scoring joins never carry it through a shuffle
-        return self.spark.read.parquet(*self._table_dirs("doclens")).select("doc_id", "dl")
+        return self._local_table("doclens").frame().select("doc_id", "dl")
 
     def _overlong_docs_df(self) -> DataFrame | None:
         """docIDs whose content holds a dropped (>MAX_TERM_BYTES)
         alphanumeric run — the only docs where a regex literal can hide
-        outside the term dictionary. None when the index predates the
-        per-doc flag (0.3.1) — callers must then treat pruning as unsound."""
-        df = self.spark.read.parquet(f"{self.index_dir}/doclens")
+        outside the term dictionary. None when any segment predates the
+        per-doc flag (0.3.1; the frame keeps only the columns every segment
+        has) — callers must then treat pruning as unsound."""
+        df = self._local_table("doclens").frame()
         if "ol" not in df.columns:
             return None
         return df.filter(F.col("ol") == 1).select("doc_id")
@@ -1064,9 +1064,7 @@ class SearchEngine:
         a filesystem probe (remote index dirs, ADVICE r4 bloom lesson)."""
         if self.stats.get("bigram_min_df") is None:
             return None
-        if not hasattr(self, "_bigram_df"):
-            self._bigram_df = self.spark.read.parquet(f"{self.index_dir}/bigram_postings")
-        return self._bigram_df
+        return self._local_table("bigram_postings").frame()
 
     def bigram_pair_plan(self, pairs: list[str]):
         """Serving plan for adjacent-pair keys ("t1 t2") off the common-grams
@@ -1095,23 +1093,29 @@ class SearchEngine:
         DROPPED (>MAX_TERM_BYTES) alphanumeric runs — the literal evidence
         that lets index_regex_search intersect the overlong-flagged set
         instead of unioning it wholesale. Presence from stats.json, not a
-        fs probe (remote index dirs, ADVICE r4 bloom lesson)."""
-        if not self.stats.get("overlong_trigrams") or \
-                not self.stats.get("overlong_trigram_rows"):
-            return None  # rows=0: clean corpus — no table was written
-        if not hasattr(self, "_oltri_df"):
-            self._oltri_df = self.spark.read.parquet(
-                f"{self.index_dir}/overlong_trigrams")
-        return self._oltri_df
+        fs probe (remote index dirs, ADVICE r4 bloom lesson).
+
+        Trigram rows are keyed by global docIDs and the trigram alphabet is
+        corpus-independent, so segment sidecars union soundly; served only
+        when EVERY segment carries one. A clean segment (rows=0) wrote no
+        table, and its docs need no trigram evidence, so the union over the
+        flagged segments is complete."""
+        if not all(st.get("overlong_trigrams") for st in self._segment_stats):
+            return None
+        segs = [s for s, st in zip(self._segment_dirs, self._segment_stats)
+                if st.get("overlong_trigram_rows")]
+        return self._local_table("overlong_trigrams", segs).frame() if segs else None
 
     def positions_df(self) -> DataFrame | None:
-        """The positional sidecar (build stage 6), or None when the index
-        was built without one. Presence from stats.json, not a fs probe."""
-        if not self.stats.get("positions"):
+        """The positional sidecar (build stage 6), or None unless every
+        segment was built with one. Presence from stats.json, not a fs
+        probe. Positions are keyed by global docIDs, so segment sidecars
+        union soundly; partial coverage is served by positions_plan, which
+        adds a per-segment fallback branch (an uncovered segment would
+        silently drop its matches for a consumer reading this raw)."""
+        if not all(st.get("positions") for st in self._segment_stats):
             return None
-        if not hasattr(self, "_positions_df"):
-            self._positions_df = self.spark.read.parquet(f"{self.index_dir}/positions")
-        return self._positions_df
+        return self._local_table("positions").frame()
 
     def positions_plan(self):
         """Per-segment positional serving plan: ``(pos_df, uncov_postings)``
@@ -1206,7 +1210,7 @@ class SearchEngine:
             hits, ["doc_id"], keep,
             ords=range(len(score_order)) if scored else None,
             c_of=lambda i: F.lit(c_of_ord[i]) if i in c_of_ord else None,
-            # reading doclens infers its schema with a job: scored only
+            # an unscored fold needs no norms
             dl=self._doclens_df() if scored else None, knorm=knorm)
         if not scored:
             return matched.select("doc_id", F.lit(0.0).alias("score"))

@@ -11,6 +11,10 @@ rows on the driver, with zero Spark jobs. It uses no ``pyarrow.dataset`` scanner
 per-read state grew the driver's peak RSS about six times as much as this
 reader does over the same 200 page reads.
 
+The same footers give the table's Spark frame (``LocalTable.frame``) its
+schema: Spark stores its row schema in every file it writes, so opening an
+index table runs no schema-inference job.
+
 One fallback: when pyarrow has no filesystem for a dir's scheme (e.g.
 ``hdfs://`` without libhdfs), reads go through Spark's own Hadoop
 filesystem instead, at one Spark job per read.
@@ -19,6 +23,7 @@ filesystem instead, at one Spark job per read.
 from __future__ import annotations
 
 import bisect
+import json
 import os
 from functools import reduce
 
@@ -26,8 +31,13 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyarrow import fs as pafs
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+# footer key of the row schema Spark writes into every parquet file (the
+# field its own schema inference reads)
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _locate(path: str) -> tuple[pafs.FileSystem, str] | None:
@@ -44,8 +54,11 @@ def _locate(path: str) -> tuple[pafs.FileSystem, str] | None:
 
 
 def _parquet_files(filesystem: pafs.FileSystem, path: str) -> list[pq.ParquetFile]:
-    """The parquet files directly under ``path``, in name order, footers
-    read; [] when the dir is absent or holds none."""
+    """The parquet files directly under ``path`` in name order, or the
+    file ``path`` itself, footers read; [] when the dir is absent or holds
+    none."""
+    if filesystem.get_file_info(path).type == pafs.FileType.File:
+        return [pq.ParquetFile(path, filesystem=filesystem)]
     infos = filesystem.get_file_info(
         pafs.FileSelector(path, allow_not_found=True, recursive=False))
     return [pq.ParquetFile(i.path, filesystem=filesystem)
@@ -68,8 +81,26 @@ def _bounds(pf: pq.ParquetFile, column: str) -> list[tuple | None]:
     return out
 
 
+def _spark_schema(files: list[pq.ParquetFile]) -> StructType | None:
+    """The Spark row schema of the union of ``files``, from their footers:
+    the columns every file has, in first-file order, nullable where any
+    file has them nullable (a segment written before a column existed
+    lacks it; segments written from different inputs may differ in
+    nullability). None when there are no files or a footer lacks Spark's
+    schema."""
+    raws = dict.fromkeys((pf.metadata.metadata or {}).get(_SPARK_SCHEMA_KEY) for pf in files)
+    if not raws or None in raws:
+        return None
+    schemas = [StructType.fromJson(json.loads(r)) for r in raws]
+    shared = set.intersection(*(set(s.names) for s in schemas))
+    nullable = {f.name for s in schemas for f in s.fields if f.nullable}
+    return StructType([StructField(f.name, f.dataType, f.name in nullable, f.metadata)
+                       for f in schemas[0].fields if f.name in shared])
+
+
 class LocalTable:
-    """The union of the parquet files under ``dirs``, read on the driver.
+    """The union of the parquet files under ``dirs`` (each a dir, or one
+    parquet file), read on the driver or opened as a Spark frame.
 
     Each dir binds its own filesystem (a shared one would resolve a mixed
     local / remote segment list against the wrong filesystem). The file
@@ -88,10 +119,17 @@ class LocalTable:
         self._bounds: dict[str, list[list[tuple | None]]] = {}
         self.row_groups_read = 0
 
-    def _spark_df(self):
+    def frame(self) -> DataFrame:
+        """The table as a Spark frame, with the schema ``_spark_schema``
+        merges from the footers: opening it runs no Spark job. A dir
+        pyarrow cannot open, no files at all (a missing dir then raises
+        here, as Spark does), or a footer without Spark's schema leaves the
+        schema to Spark's inference, one job."""
         if self._sdf is None:
             spark = self._spark or SparkSession.active()
-            self._sdf = spark.read.parquet(*self._dirs)
+            schema = None if self._via_spark else _spark_schema(self._files)
+            reader = spark.read if schema is None else spark.read.schema(schema)
+            self._sdf = reader.parquet(*self._dirs)
         return self._sdf
 
     def _key_bounds(self, column: str) -> list[list[tuple | None]]:
@@ -125,7 +163,7 @@ class LocalTable:
         """``columns`` of the rows with ``lo <= key < hi``. Raises
         FileNotFoundError when the dirs hold no parquet at all."""
         if self._via_spark:
-            return (self._spark_df()
+            return (self.frame()
                     .filter((F.col(key) >= lo) & (F.col(key) < hi))
                     .select(*columns).toArrow())
         return self._scan(
@@ -138,7 +176,7 @@ class LocalTable:
         listed. Raises FileNotFoundError when the dirs hold no parquet."""
         want = {c: sorted(set(v)) for c, v in isin.items()}
         if self._via_spark:
-            return (self._spark_df()
+            return (self.frame()
                     .filter(reduce(lambda a, b: a & b,
                                    [F.col(c).isin(v) for c, v in want.items()]))
                     .select(*columns).toArrow())
@@ -160,7 +198,7 @@ class LocalTable:
     def first(self, column: str):
         """``column`` of the first row; None when the table has no rows."""
         if self._via_spark:
-            row = self._spark_df().select(column).head()
+            row = self.frame().select(column).head()
             return None if row is None else row[0]
         for pf in self._files:
             for g in range(pf.metadata.num_row_groups):

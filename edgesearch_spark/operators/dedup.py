@@ -126,7 +126,10 @@ def _minhash_wide(
     are bit-identical to the historical exploded formulation: md5 family =
     md5(j ‖ ':' ‖ shingle) with two disjoint 56-bit hex windows per digest
     (seed 2j = chars 1-14, seed 2j+1 = chars 16-29), xx family =
-    xxhash64(seed, shingle).
+    xxhash64(seed, shingle). (A linear Kirsch–Mitzenmacher family
+    h_i = a + i·b was tried and rejected: the argmin of a line family
+    correlates adjacent seeds, which collapses banded-LSH precision — 182
+    candidate pairs vs 25 on the contract corpus.)
 
     The shingle stream is NOT deduped: min() is idempotent, so duplicate
     shingles cannot change any signature value, and skipping the per-doc
@@ -160,30 +163,6 @@ def _minhash_wide(
         wide = wide.withColumns(vals)
     return wide.groupBy("doc_id").agg(
         *[F.min(f"v{s}").alias(f"h{s}") for s in range(num_hashes)])
-
-
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, num_hashes: int = 32,
-    family: str = "md5",
-) -> DataFrame:
-    """(doc_id, seed, minhash): MinHash over shingle sets via a seeded md5
-    family, TWO independent 56-bit hashes per digest (disjoint hex windows),
-    so the crypto-hash count is num_hashes/2 per shingle. (A linear
-    Kirsch–Mitzenmacher family h_i = a + i·b was tried and rejected: the
-    argmin of a line family correlates adjacent seeds, which collapses
-    banded-LSH precision — 182 candidate pairs vs 25 on the contract corpus.)
-    Portable: DuckDB parses the same hex windows with CAST('0x'||… AS BIGINT),
-    so every signature matches bit-for-bit. Computed via the wide one-
-    groupBy plan (_minhash_wide) and unpivoted AFTER the aggregation, so the
-    long shape costs docs×num_hashes narrow rows, never shingles×num_hashes."""
-    agg = _minhash_wide(df, id_col, text_col, n, num_hashes, family)
-    return agg.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.struct(F.lit(s).alias("seed"), F.col(f"h{s}").alias("minhash"))
-            for s in range(num_hashes)
-        ])).alias("x"),
-    ).select("doc_id", F.col("x.seed").alias("seed"), F.col("x.minhash").alias("minhash"))
 
 
 def minhash_lsh_candidates(

@@ -30,8 +30,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..build import load_stats
-from ..sources.postings import decoded_postings, doclens_table, term_stats_table
 from .fold import _MAX_ORD_COLS, bm25_fold
 
 QUERIES_SCHEMA = "query_id string, require array<string>, contain array<string>, exclude array<string>"
@@ -158,17 +156,12 @@ def batch_search(
     query-scaled frames (per-query terms, clause cardinalities) carry NO
     broadcast hint — AQE picks broadcast when they are small and falls back
     to shuffle joins when the query table itself is cluster-sized."""
+    from ..engine import SearchEngine
     from ..sources.postings import DECODED_SCHEMA, _decode_rows
 
-    eng = None if isinstance(index_dir, str) else index_dir
-    if eng is not None:
-        stats = eng.stats
-        ts_raw, posts_raw, dl = eng._term_stats_df, eng._postings_df, eng._doclens_df()
-    else:
-        stats = load_stats(index_dir)
-        ts_raw = term_stats_table(spark, index_dir)
-        posts_raw = None
-        dl = doclens_table(spark, index_dir)
+    # opening an engine runs no Spark job (its frames take the footers' schemas)
+    eng = SearchEngine(spark, index_dir) if isinstance(index_dir, str) else index_dir
+    stats = eng.stats
     n_docs, avgdl = stats["n_docs"], stats["avgdl"] or 1.0
     k1, b = stats["k1"], stats["b"]
 
@@ -177,8 +170,8 @@ def batch_search(
     sample = _vocab_sample(vocab, ISIN_MAX_TERMS)
     bcast = True if sample is not None else _vocab_fits_broadcast(vocab)
 
-    ts = _prune_terms(ts_raw, vocab, sample, bcast).select("term", "df")
-    if eng is not None:
+    ts = _prune_terms(eng._term_stats_df, vocab, sample, bcast).select("term", "df")
+    if len(eng._segment_dirs) > 1:
         # multi-segment unions carry one term_stats row PER SEGMENT; the
         # query-side df is their sum (identical to engine.fetch_terms)
         ts = ts.groupBy("term").agg(F.sum("df").alias("df"))
@@ -195,15 +188,10 @@ def batch_search(
         F.sum((F.col("is_e") & F.col("df").isNotNull()).cast("int")).alias("n_exc"),
     )
 
-    if eng is not None:
-        posts = (_prune_terms(posts_raw, vocab, sample, bcast)
-                 .select("term", "block_first_doc", "block_max_doc",
-                         "block_count", "block_offset", "block_kind", "payload")
-                 .mapInPandas(_decode_rows, schema=DECODED_SCHEMA))
-    else:
-        posts = decoded_postings(spark, index_dir, terms=sample,
-                                 vocab=None if sample is not None else vocab,
-                                 broadcast_vocab=bcast)
+    posts = (_prune_terms(eng._postings_df, vocab, sample, bcast)
+             .select("term", "block_first_doc", "block_max_doc",
+                     "block_count", "block_offset", "block_kind", "payload")
+             .mapInPandas(_decode_rows, schema=DECODED_SCHEMA))
     # c = idf·(k1+1), once per (query, term): it rides the hit rows only
     # past the fold's column cap, else the query-sized qconsts frame
     # joined after the clause filter
@@ -226,7 +214,7 @@ def batch_search(
             )
         )
         # live-docs BEFORE ranking: a tombstoned doc must not consume a rank
-        return matched if eng is None else eng._live_filter_df(matched)
+        return eng._live_filter_df(matched)
 
     # scoring positions: 1..the largest require+contain clause in the TABLE,
     # probed as ONE driver scalar (ord 0 marks exclude-only terms)
@@ -242,7 +230,7 @@ def batch_search(
             "query_id")
     knorm = F.lit(k1) * (1 - b + b * F.col("dl") / F.lit(float(avgdl)))
     matched = bm25_fold(hits, ["query_id", "doc_id"], keep, ords,
-                        c_of=lambda i: F.col(f"__c{i}"), dl=dl, knorm=knorm,
+                        c_of=lambda i: F.col(f"__c{i}"), dl=eng._doclens_df(), knorm=knorm,
                         consts=qconsts)
 
     order = (F.col("score").desc(), F.col("doc_id").asc()) if scored else (F.col("doc_id").asc(),)

@@ -1,6 +1,6 @@
-"""Index-table readers: the postings/docs/doclens/term_stats tables as
-DataFrames, plus a decoder that explodes compressed posting blocks back
-into (term, doc_id, tf) rows for relational query plans.
+"""Posting decoders: explode compressed posting blocks (and positional
+shards) back into (term, doc_id, tf) rows for relational query plans.
+Index tables open through ``localread.LocalTable.frame``.
 
 The decode is the inverse of build's encoder — numpy varint/delta decode
 inside mapInPandas, Arrow-batched. Term filters are applied BEFORE decode so
@@ -17,23 +17,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..localread import LocalTable
+
 DECODED_SCHEMA = "term string, doc_id long, tf long"
-
-
-def postings_table(spark: SparkSession, index_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{index_dir}/postings")
-
-
-def term_stats_table(spark: SparkSession, index_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{index_dir}/term_stats")
-
-
-def doclens_table(spark: SparkSession, index_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{index_dir}/doclens")
-
-
-def docs_table(spark: SparkSession, index_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{index_dir}/docs")
 
 
 def _decode_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -108,7 +94,7 @@ def decoded_postings(spark: SparkSession, index_dir: str, terms: list[str] | Non
     DataFrame of any cardinality) to prune with a broadcast semi-join — the
     relational route for cluster-sized query vocabularies where an In-list
     would explode the plan (plans/batch.py picks between them)."""
-    pt = postings_table(spark, index_dir)
+    pt = LocalTable([f"{index_dir}/postings"], spark).frame()
     if terms is not None:
         pt = pt.filter(F.col("term").isin(list(terms)))
     elif vocab is not None:

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..build import IndexConfig, build_index
 from ..engine import SearchEngine
+from ..localread import LocalTable
 from ..session import local_frame
 
 
@@ -118,7 +119,7 @@ class IncrementalIndexer:
         segs = self.segment_dirs()
         if not os.path.exists(self._tombstone_dir):
             return MultiSegmentEngine(self.spark, segs)
-        tomb = self.spark.read.parquet(self._tombstone_dir).distinct()
+        tomb = self._tombstones()
         if tomb.count() <= self.max_driver_tombstones:
             return MultiSegmentEngine(self.spark, segs, tombstones=self.deleted_ids())
         return MultiSegmentEngine(self.spark, segs, tombstone_df=tomb)
@@ -154,6 +155,11 @@ class IncrementalIndexer:
             os.rename(legacy, d)
         return d
 
+    def _tombstones(self, paths: list[str] | None = None) -> DataFrame:
+        """Distinct deleted docIDs of ``paths`` (default: the current
+        generation's tombstone dir) as a Spark frame."""
+        return LocalTable(paths or [self._tombstone_dir], self.spark).frame().distinct()
+
     def _tombstone_files(self) -> list[str]:
         import glob as _glob
 
@@ -174,10 +180,7 @@ class IncrementalIndexer:
     def deleted_ids(self) -> list[int]:
         if not os.path.exists(self._tombstone_dir):
             return []
-        return sorted(
-            r["doc_id"]
-            for r in self.spark.read.parquet(self._tombstone_dir).distinct().collect()
-        )
+        return sorted(r["doc_id"] for r in self._tombstones().collect())
 
     def compact(self, out_dir: str, tombstone_files: list[str] | None = None) -> str:
         """Merge all segments into one fresh index (rebuilds block-max
@@ -190,13 +193,13 @@ class IncrementalIndexer:
         in-place compaction passes its snapshot so concurrent delete_docs
         appends can't half-apply)."""
         segs = self.segment_dirs()
-        docs = self.spark.read.parquet(*[f"{s}/docs" for s in segs])
+        docs = LocalTable([f"{s}/docs" for s in segs], self.spark).frame()
         if tombstone_files is None:
             tombstone_files = self._tombstone_files()
         if tombstone_files:
             # tombstones never visit the driver here either: anti-join the
             # parquet set directly (AQE broadcasts it when small)
-            tomb = self.spark.read.parquet(*tombstone_files).distinct()
+            tomb = self._tombstones(tombstone_files)
             docs = (
                 docs.join(tomb, "doc_id", "left_anti")
                 .withColumnRenamed("doc_id", "__old_id")
@@ -289,7 +292,7 @@ class IncrementalIndexer:
             return None
         n_tomb = 0
         if os.path.exists(self._tombstone_dir):
-            n_tomb = self.spark.read.parquet(self._tombstone_dir).distinct().count()
+            n_tomb = self._tombstones().count()
         frac = n_tomb / max(1, int(man["next_doc_id"]))
         if len(man["segments"]) > max_segments or frac > max_tombstone_frac:
             return self.compact_in_place()
@@ -335,19 +338,18 @@ class MultiSegmentEngine(SearchEngine):
         n_docs = 0
         total_tokens = 0
         overlong = False
-        self._segment_avgdls: list[float] = []
-        self._segment_bigram_min_df: list[int | None] = []
+        self._segment_stats: list[dict] = []
         for s in segment_dirs:
             with open(os.path.join(s, "stats.json")) as f:
                 st = json.load(f)
+            self._segment_stats.append(st)
             stats = stats or st
             n_docs += st["n_docs"]
             total_tokens += st["total_tokens"]
             # per-segment flags OR together: missing key = pre-0.3.1
             # segment = unknown = treat as present (regex soundness guard)
             overlong = overlong or bool(st.get("has_overlong_runs", True))
-            self._segment_avgdls.append(float(st["avgdl"]))
-            self._segment_bigram_min_df.append(st.get("bigram_min_df"))
+        self._segment_avgdls = [float(st["avgdl"]) for st in self._segment_stats]
         self.stats = {**stats, "n_docs": n_docs, "total_tokens": total_tokens,
                       "avgdl": (total_tokens / n_docs) if n_docs else 0.0,
                       "has_overlong_runs": overlong}
@@ -356,7 +358,8 @@ class MultiSegmentEngine(SearchEngine):
         # serves covered segments and falls back per-segment elsewhere);
         # min() so the pair-selection heuristic tries every pair that
         # could be hot somewhere
-        bmins = [b for b in self._segment_bigram_min_df if b is not None]
+        bmins = [b for st in self._segment_stats
+                 if (b := st.get("bigram_min_df")) is not None]
         self.stats["bigram_min_df"] = min(bmins) if bmins else None
         self.n_docs = n_docs
         self.k1 = self.stats["k1"]
@@ -382,13 +385,8 @@ class MultiSegmentEngine(SearchEngine):
         # unions never serve it: a globally-hot pair can be locally cold
         # in a small segment and absent from its sidecar, which would
         # silently drop matches. Fallback = AND+verify, identical results.
-        if (len(self._segment_dirs) == 1 and self._deleted.size == 0
-                and self._tomb_df is None
-                and self.stats.get("bigram_min_df") is not None):
-            if not hasattr(self, "_bigram_df"):
-                self._bigram_df = self.spark.read.parquet(
-                    f"{self._segment_dirs[0]}/bigram_postings")
-            return self._bigram_df
+        if len(self._segment_dirs) == 1 and not self._has_deletes:
+            return super().bigram_postings_df()
         return None
 
     def bigram_pair_plan(self, pairs):
@@ -404,13 +402,12 @@ class MultiSegmentEngine(SearchEngine):
         is sound either way. Tombstones are anti-joined on both branches,
         so the route works with live deletes (the single-engine plan never
         has any)."""
-        segs = [s for s, b in zip(self._segment_dirs, self._segment_bigram_min_df)
-                if b is not None]
+        segs = [s for s, st in zip(self._segment_dirs, self._segment_stats)
+                if st.get("bigram_min_df") is not None]
         if not segs:
             self.last_bigram_plan = None
             return None
-        spark = self.spark
-        bg_union = spark.read.parquet(*[f"{s}/bigram_postings" for s in segs])
+        bg_union = self._local_table("bigram_postings", segs).frame()
         if not hasattr(self, "_bigram_presence"):
             self._bigram_presence: dict[str, set] = {}
         todo = [p for p in pairs if p not in self._bigram_presence]
@@ -440,8 +437,7 @@ class MultiSegmentEngine(SearchEngine):
                 continue
             want = list(dict.fromkeys(p.split(" ", 1)))
             dec = self._decoded_for(
-                want,
-                postings_df=spark.read.parquet(*[f"{u}/postings" for u in uncov]))
+                want, postings_df=self._local_table("postings", uncov).frame())
             maybe_parts.append(
                 dec.groupBy("doc_id")
                 .agg(F.countDistinct("term").alias("nc"))
@@ -460,24 +456,6 @@ class MultiSegmentEngine(SearchEngine):
         }
         return exact, maybe
 
-    def positions_df(self):
-        # Positions are per-doc data keyed by GLOBAL docIDs (segments build
-        # at their docID-space offset), so segment sidecars union soundly —
-        # unlike the bigram sidecar, whose hot-pair selection is df-
-        # threshold-relative. This TOTAL-coverage surface stays None unless
-        # EVERY segment carries one (an uncovered segment would silently
-        # drop its matches for any consumer that reads it raw); every
-        # serving operator — the single-query proximity family AND
-        # batch_phrase_search — routes through positions_plan(), which
-        # serves partial coverage with a per-segment fallback branch.
-        # Deletes are handled by _live_filter_df at the result surface.
-        if not hasattr(self, "_positions_union_df"):
-            self._positions_union_df = None
-            if all(self._segment_stats_flag(s, "positions") for s in self._segment_dirs):
-                self._positions_union_df = self.spark.read.parquet(
-                    *[f"{s}/positions" for s in self._segment_dirs])
-        return self._positions_union_df
-
     def positions_plan(self):
         """Per-segment positional route (VERDICT r6 #3, mirroring
         bigram_pair_plan): segments that carry the sidecar serve
@@ -489,60 +467,21 @@ class MultiSegmentEngine(SearchEngine):
         and the fallback candidates partition the corpus — no overlap, no
         gap — and both branches end in _live_filter_df / tombstone-aware
         fetches."""
-        if not hasattr(self, "_positions_plan_cache"):
-            cov = [s for s in self._segment_dirs
-                   if self._segment_stats_flag(s, "positions")]
-            if not cov:
-                self._positions_plan_cache = (None, None, 0, 0)
-            else:
-                uncov = [s for s in self._segment_dirs if s not in cov]
-                pos = self.spark.read.parquet(*[f"{s}/positions" for s in cov])
-                up = (self.spark.read.parquet(*[f"{u}/postings" for u in uncov])
-                      if uncov else None)
-                self._positions_plan_cache = (pos, up, len(cov), len(uncov))
-        pos, up, n_cov, n_uncov = self._positions_plan_cache
-        self.last_positions_plan = (None if pos is None else
-                                    {"covered_segments": n_cov,
-                                     "fallback_segments": n_uncov})
-        return pos, up
-
-    def oltrigrams_df(self):
-        # Trigram rows are keyed by GLOBAL docIDs and the trigram alphabet
-        # is corpus-independent (every dropped run of a segment contributes
-        # its own trigrams — no df-threshold relativity like the bigram
-        # sidecar), so segment sidecars union soundly. Served only when
-        # EVERY segment carries one; deletes are handled by the verify
-        # stage's fetch (tombstone-aware) like the dict-candidate path.
-        if not hasattr(self, "_oltri_union_df"):
-            self._oltri_union_df = None
-            if all(self._segment_stats_flag(s, "overlong_trigrams")
-                   for s in self._segment_dirs):
-                # a clean segment (rows=0) wrote no table — its docs need no
-                # trigram evidence, so the union over flagged segments only
-                # is complete
-                dirs = [f"{s}/overlong_trigrams" for s in self._segment_dirs
-                        if self._segment_stats_flag(s, "overlong_trigram_rows")]
-                if dirs:
-                    self._oltri_union_df = self.spark.read.parquet(*dirs)
-        return self._oltri_union_df
-
-    def _segment_stats_flag(self, seg_dir: str, key: str):
-        with open(os.path.join(seg_dir, "stats.json")) as f:
-            return json.load(f).get(key)
+        cov = [s for s, st in zip(self._segment_dirs, self._segment_stats)
+               if st.get("positions")]
+        if not cov:
+            self.last_positions_plan = None
+            return None, None
+        uncov = [s for s in self._segment_dirs if s not in cov]
+        self.last_positions_plan = {"covered_segments": len(cov),
+                                    "fallback_segments": len(uncov)}
+        return (self._local_table("positions", cov).frame(),
+                self._local_table("postings", uncov).frame() if uncov else None)
 
     def _live_filter_df(self, df):
         if not self._has_deletes:
             return df
         return df.join(self._tombstones_df(), "doc_id", "left_anti")
-
-    def _overlong_docs_df(self):
-        # sound only when EVERY segment carries the per-doc flag (a
-        # pre-0.3.1 segment could hide a literal invisibly)
-        for seg in self._segment_dirs:
-            if "ol" not in self.spark.read.parquet(f"{seg}/doclens").columns:
-                return None
-        return (self.spark.read.parquet(*self._table_dirs("doclens"))
-                .filter(F.col("ol") == 1).select("doc_id"))
 
     # fetch_terms, norms, blooms and the driver-local readers: inherited,
     # over every dir in _segment_dirs. Per-term df/max_weight are derived

@@ -74,12 +74,3 @@ def tokenize_pairs(df: DataFrame, doc_id_col: str = "doc_id", content_col: str =
         "doc_id", "term", "tf", "dl"
     )
 
-
-def doc_terms(df: DataFrame, doc_id_col: str = "doc_id", content_col: str = "content") -> DataFrame:
-    """Per-doc distinct term set (the reference's document-terms contract:
-    unique within doc — src/build/mod.rs:64-67). (doc_id, terms array<string>)."""
-    return df.select(
-        F.col(doc_id_col).alias("doc_id"),
-        F.array_distinct(_tokens_col(content_col)).alias("terms"),
-    )
-
