@@ -3,8 +3,9 @@
 Brand-new engine with the query/data-processing capabilities of
 wilsonzlin/edgesearch (reference at /root/reference, studied in SURVEY.md),
 re-expressed Spark-first: DataFrame/SQL plans optimized by Catalyst, with
-vectorized numpy/pandas-UDF kernels only where built-ins can't express the
-semantics (posting-block codec, block-max WAND top-k).
+vectorized numpy kernels over Arrow batches (mapInArrow) or on the driver
+only where built-ins can't express the semantics (posting-block codec,
+block-max WAND top-k).
 
 Layout:
   session.py       — SparkSession factory sized to the host; ships this package
@@ -25,7 +26,7 @@ Layout:
   oracle.py        — independent brute-force oracle (pure python) for goldens
   corpus.py        — deterministic synthetic source-code corpus generator
   plans/           — batch query tables, the shared BM25 fold, contract queries
-  sources/         — postings decode; iceberg and NUL-delimited input readers
+  sources/         — postings/positions decode; iceberg and NUL-delimited readers
   streaming/       — incremental segments and deletes; watermarked windowed
                      aggregation and dedup
   operators/       — dedup (exact/minhash/simhash/jaccard), similarity (ANN),

@@ -565,14 +565,12 @@ def build_index(
             # drop-filtered token stream, so a dropped >MAX_TERM_BYTES run
             # collapses identically). Work scales with HOT-term postings
             # (broadcast-semi-joined before decode), not corpus tokens.
-            from .sources.postings import POS_DECODED_SCHEMA, _decode_pos_rows
+            from .sources.postings import decode_positions
 
             pair_derivation = "positions"
-            dec = (
+            dec = decode_positions(
                 LocalTable([os.path.join(out_dir, "positions")], spark).frame()
                 .join(F.broadcast(hot_df), "term", "left_semi")
-                .select("term", "df", "payload")
-                .mapInPandas(_decode_pos_rows, schema=POS_DECODED_SCHEMA)
             )
             toks = dec.select("doc_id", "term", F.explode("positions").alias("pos"))
             perdoc = toks.groupBy("doc_id").agg(

@@ -67,7 +67,7 @@ def _row_to_blocks(row: dict) -> PostingBlocks:
         offsets=np.array(row["block_offset"], dtype=np.int64),
         max_weight=np.array(row["block_max_weight"], dtype=np.float32),
         kinds=np.array(row["block_kind"], dtype=np.uint8),
-        payload=bytes(row["payload"]),
+        payload=bytes(row.get("payload") or b""),
         max_tf=np.array(mtf, dtype=np.int32) if mtf is not None else None,
     )
 
@@ -327,7 +327,7 @@ class LazyTermPostings:
         self._sbytes = np.array([r["payload_bytes"] for r in shards], dtype=np.int64)
         self._snblocks = np.array([r["n_blocks"] for r in shards], dtype=np.int64)
         self.max_weight = float(self._smw.max()) if self._smw.size else 0.0
-        self._meta: dict[int, dict] = {}
+        self._meta: dict[int, PostingBlocks] = {}
         self._payload: dict[int, PostingBlocks] = {}
         self.bytes_fetched = 0
         self.meta_shards_fetched = 0
@@ -361,20 +361,16 @@ class LazyTermPostings:
         rows = self._engine._postings_rows(
             self._engine._meta_cols, {"term": [self.term], "salt": [self._salts[s] for s in need]})
         for s, r in self._match_rows(rows, need, "metadata").items():
-            n_blk = len(r["block_count"])
-            if self._engine._tf_bounds:
-                mw = self._engine._bound_arr(r.get("block_max_tf"), n_blk)
-            else:
-                mw = np.array(r["block_max_weight"], dtype=np.float32)
-            self._meta[s] = {
-                "first_doc": np.array(r["block_first_doc"], dtype=np.int64),
-                "max_doc": np.array(r["block_max_doc"], dtype=np.int64),
-                "counts": np.array(r["block_count"], dtype=np.int32),
-                "offsets": np.array(r["block_offset"], dtype=np.int64),
-                "max_weight": mw,
-                "kinds": np.array(r["block_kind"], dtype=np.uint8),
-            }
+            self._meta[s] = self._blocks(r)  # payload column pruned: b""
             self.meta_shards_fetched += 1
+
+    def _blocks(self, row: dict) -> PostingBlocks:
+        """A fetched shard row as blocks, max_weight re-derived from max_tf
+        when the engine's stored weights are stale."""
+        pb = _row_to_blocks(row)
+        if self._engine._tf_bounds:
+            pb.max_weight = self._engine._bound_arr(pb.max_tf, pb.n_blocks)
+        return pb
 
     def _ensure_payload(self, shard_idx) -> None:
         need = [int(s) for s in np.unique(shard_idx) if int(s) not in self._payload]
@@ -383,17 +379,10 @@ class LazyTermPostings:
         rows = self._engine._postings_rows(
             self._engine._row_cols, {"term": [self.term], "salt": [self._salts[s] for s in need]})
         for s, r in self._match_rows(rows, need, "payload").items():
-            pb = _row_to_blocks(r)
-            if self._engine._tf_bounds:
-                pb.max_weight = self._engine._bound_arr(pb.max_tf, pb.n_blocks)
-            self._payload[s] = pb
+            pb = self._payload[s] = self._blocks(r)
             self.bytes_fetched += len(pb.payload)
             if s not in self._meta:  # the full row carries metadata too
-                self._meta[s] = {
-                    "first_doc": pb.first_doc, "max_doc": pb.max_doc,
-                    "counts": pb.counts, "offsets": pb.offsets,
-                    "max_weight": pb.max_weight, "kinds": pb.kinds,
-                }
+                self._meta[s] = pb
                 self.meta_shards_fetched += 1
 
     def _shards_for_docs(self, doc_ids: np.ndarray) -> np.ndarray:
@@ -467,7 +456,7 @@ class LazyTermPostings:
         blocks_per_shard: dict[int, np.ndarray] = {}
         for s in cand:
             m = self._meta[int(s)]
-            keep_blk = (idf_k * m["max_weight"].astype(np.float64) * F32_BOUND_SLACK
+            keep_blk = (idf_k * m.max_weight.astype(np.float64) * F32_BOUND_SLACK
                         + bound_if_new) >= theta
             skipped += int((~keep_blk).sum())
             if keep_blk.any():
@@ -494,9 +483,9 @@ class LazyTermPostings:
             if acc >= n_blocks:
                 break
         self._ensure_meta(np.array(take))
-        mws = np.concatenate([self._meta[s]["max_weight"] for s in take])
-        owner = np.concatenate([np.full(self._meta[s]["max_weight"].size, s) for s in take])
-        local = np.concatenate([np.arange(self._meta[s]["max_weight"].size) for s in take])
+        mws = np.concatenate([self._meta[s].max_weight for s in take])
+        owner = np.concatenate([np.full(self._meta[s].n_blocks, s) for s in take])
+        local = np.concatenate([np.arange(self._meta[s].n_blocks) for s in take])
         if mws.size > n_blocks:
             sel = np.argpartition(mws, -n_blocks)[-n_blocks:]
         else:
@@ -999,7 +988,8 @@ class SearchEngine:
     def _decoded_for(self, terms: "list[str] | Column",
                      postings_df: DataFrame | None = None) -> DataFrame:
         """(term, doc_id, tf) rows for the given terms, decoded executor-side
-        (scan pruned by the term filter). Uses self._postings_df so it is
+        by ``sources.postings.decode_postings`` (one Arrow decode per batch;
+        scan pruned by the term filter). Uses self._postings_df so it is
         multi-segment-correct; pass postings_df to decode a sidecar table in
         the same schema (e.g. the hot-bigram common-grams sidecar).
         ``terms`` may be a Column predicate over ``term`` instead of a list —
@@ -1025,14 +1015,10 @@ class SearchEngine:
         the extra shuffle stage rather than pay it as fixed latency.
         Unknown dfs (sidecar tables, Column predicates like prefix
         StartsWith) keep the spread: it is the safe default."""
-        from .sources.postings import DECODED_SCHEMA, _decode_rows
+        from .sources.postings import decode_postings
 
         pred = terms if isinstance(terms, Column) else F.col("term").isin(terms)
-        pt = (postings_df if postings_df is not None else self._postings_df
-              ).filter(pred).select(
-            "term", "block_first_doc", "block_max_doc", "block_count",
-            "block_offset", "block_kind", "payload",
-        )
+        pt = (postings_df if postings_df is not None else self._postings_df).filter(pred)
         spread = True
         if (postings_df is None and not isinstance(terms, Column)
                 and all(t in self._df_cache for t in terms)):
@@ -1040,7 +1026,7 @@ class SearchEngine:
             spread = total > self.decode_spread_min_postings
         if spread:
             pt = pt.repartition(F.col("term"), F.col("block_first_doc"))
-        return pt.mapInPandas(_decode_rows, schema=DECODED_SCHEMA)
+        return decode_postings(pt)
 
     def _doclens_df(self) -> DataFrame:
         # project away the per-doc overlong flag (regex-only metadata) so
@@ -1136,23 +1122,22 @@ class SearchEngine:
     def _decoded_positions_for(self, terms: list[str],
                                positions_df: DataFrame | None = None) -> DataFrame | None:
         """(term, doc_id, positions array<long>) rows for the given terms,
-        decoded executor-side off the positional sidecar (scan pruned by the
-        term filter — the same pruned-fetch shape as _decoded_for). None
+        decoded executor-side off the positional sidecar by
+        ``sources.postings.decode_positions`` (scan pruned by the term
+        filter — the same pruned-fetch shape as _decoded_for). None
         when the index carries no sidecar. Pass ``positions_df`` to decode
         an explicit sidecar table (the covered-segment union from
         positions_plan) instead of the engine-wide one."""
-        from .sources.postings import POS_DECODED_SCHEMA, _decode_pos_rows
+        from .sources.postings import decode_positions
 
         pt = positions_df if positions_df is not None else self.positions_df()
         if pt is None:
             return None
-        pruned = pt.filter(F.col("term").isin(terms)).select(
-            "term", "salt", "df", "payload")
         # spread a hot term's salt shards across decode tasks (the range-
         # sorted layout packs them into one row group → one scan task; see
         # _decoded_for) — the shuffle moves only compressed position blobs
-        pruned = pruned.repartition(F.col("term"), F.col("salt")).drop("salt")
-        return pruned.mapInPandas(_decode_pos_rows, schema=POS_DECODED_SCHEMA)
+        pruned = pt.filter(F.col("term").isin(terms)).repartition(F.col("term"), F.col("salt"))
+        return decode_positions(pruned)
 
     def _live_filter_df(self, df: DataFrame) -> DataFrame:
         """Visibility-filter a (doc_id, …) DataFrame against tombstones.

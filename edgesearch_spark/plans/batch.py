@@ -157,7 +157,7 @@ def batch_search(
     broadcast hint — AQE picks broadcast when they are small and falls back
     to shuffle joins when the query table itself is cluster-sized."""
     from ..engine import SearchEngine
-    from ..sources.postings import DECODED_SCHEMA, _decode_rows
+    from ..sources.postings import decode_postings
 
     # opening an engine runs no Spark job (its frames take the footers' schemas)
     eng = SearchEngine(spark, index_dir) if isinstance(index_dir, str) else index_dir
@@ -188,10 +188,7 @@ def batch_search(
         F.sum((F.col("is_e") & F.col("df").isNotNull()).cast("int")).alias("n_exc"),
     )
 
-    posts = (_prune_terms(eng._postings_df, vocab, sample, bcast)
-             .select("term", "block_first_doc", "block_max_doc",
-                     "block_count", "block_offset", "block_kind", "payload")
-             .mapInPandas(_decode_rows, schema=DECODED_SCHEMA))
+    posts = decode_postings(_prune_terms(eng._postings_df, vocab, sample, bcast))
     # c = idf·(k1+1), once per (query, term): it rides the hit rows only
     # past the fold's column cap, else the query-sized qconsts frame
     # joined after the clause filter
@@ -269,28 +266,23 @@ def _batch_position_structs(engine, qterms: DataFrame, vocab: DataFrame,
     pt, uncov = engine.positions_plan()
     if pt is None:
         raise ValueError("index has no positional sidecar (IndexConfig.positions)")
-    from ..sources.postings import POS_DECODED_SCHEMA, _decode_pos_rows
+    from ..sources.postings import decode_positions, decode_postings
 
-    pruned = (_prune_terms(pt, vocab, sample, broadcast_ok)
-              .select("term", "salt", "df", "payload")
-              # spread hot terms' salt shards across decode tasks (the
-              # range-sorted layout packs a term's shards into one scan
-              # task otherwise — see SearchEngine._decoded_for)
-              .repartition(F.col("term"), F.col("salt")).drop("salt"))
-    decoded = pruned.mapInPandas(_decode_pos_rows, schema=POS_DECODED_SCHEMA)
+    decoded = decode_positions(
+        _prune_terms(pt, vocab, sample, broadcast_ok)
+        # spread hot terms' salt shards across decode tasks (the
+        # range-sorted layout packs a term's shards into one scan
+        # task otherwise — see SearchEngine._decoded_for)
+        .repartition(F.col("term"), F.col("salt")))
 
     hits = decoded.join(qterms, "term")
     sl = hits.groupBy("query_id", "doc_id").agg(
         F.collect_list(F.struct("slot", "positions")).alias("sl"))
     if uncov is not None:
         from ..functions.textsearch import _indexed_tokens_col
-        from ..sources.postings import DECODED_SCHEMA, _decode_rows
 
-        udec = (_prune_terms(uncov, vocab, sample, broadcast_ok)
-                .select("term", "block_first_doc", "block_max_doc",
-                        "block_count", "block_offset", "block_kind", "payload")
-                .repartition(F.col("term"), F.col("block_first_doc"))
-                .mapInPandas(_decode_rows, schema=DECODED_SCHEMA))
+        udec = decode_postings(_prune_terms(uncov, vocab, sample, broadcast_ok)
+                               .repartition(F.col("term"), F.col("block_first_doc")))
         qdist = qterms.groupBy("query_id").agg(
             F.countDistinct("term").alias("nd"))
         pairs = (udec.join(qterms.select("query_id", "term").distinct(), "term")

@@ -37,12 +37,12 @@ def python_nodes(plan: str) -> set:
 
 
 def decode_only_python(plan: str) -> bool:
-    """True iff every Python node of ``plan`` is a posting decode's
-    MapInPandas (its formatted details name the decode function)."""
-    nodes = re.findall(r"\(\d+\) MapInPandas\n", plan)
-    funcs = re.findall(r"MapInPandas\nInput \[\d+\]: [^\n]*\nArguments: (\w+)", plan)
-    return (python_nodes(plan) == {"MapInPandas"} and len(funcs) == len(nodes) > 0
-            and set(funcs) == {"_decode_rows"})
+    """True iff every Python node of ``plan`` is a posting or positions
+    decode's MapInArrow (its formatted details name the decode function)."""
+    nodes = re.findall(r"\(\d+\) MapInArrow\n", plan)
+    funcs = re.findall(r"MapInArrow\nInput \[\d+\]: [^\n]*\nArguments: (\w+)\(", plan)
+    return (python_nodes(plan) == {"MapInArrow"} and len(funcs) == len(nodes) > 0
+            and set(funcs) <= {"_postings_batches", "_positions_batches"})
 
 
 @pytest.fixture(scope="module")
@@ -233,7 +233,7 @@ def test_arrow_frame_keeps_rows_after_an_empty_chunk(spark):
 def test_distributed_route_has_no_python_rdd(spark, index_dir):
     """The distributed route's per-term literal table is a local relation:
     the executed plan holds no Python-RDD scan, and its only Python nodes
-    are the posting decode's MapInPandas."""
+    are the posting decode's MapInArrow."""
     from edgesearch_spark.engine import SearchEngine
     from edgesearch_spark.oracle import Query
 
@@ -254,7 +254,7 @@ def test_routed_page_action_is_take_ordered_over_observed_count(
         spark, index_dir, monkeypatch, scored):
     """A routed page and its exact total are ONE JVM action: the executed
     plan is TakeOrderedAndProject over CollectMetrics (the observed count),
-    and its only Python node is the posting decode's MapInPandas."""
+    and its only Python node is the posting decode's MapInArrow."""
     from edgesearch_spark.engine import SearchEngine
     from edgesearch_spark.oracle import Query
 
@@ -285,7 +285,7 @@ def test_routed_page_action_is_take_ordered_over_observed_count(
 def test_batch_rank_is_window_group_limit(spark, index_dir):
     """batch_search ranks with a row_number() <= k filter that Spark plans
     as a per-query WindowGroupLimit on both sides of the rank shuffle; the
-    only Python nodes left are the posting decode's MapInPandas."""
+    only Python nodes left are the posting decode's MapInArrow."""
     from edgesearch_spark.plans.batch import QUERIES_SCHEMA, batch_search
     from edgesearch_spark.session import local_frame
 
