@@ -489,35 +489,6 @@ def decode_all(pb: PostingBlocks) -> tuple[np.ndarray, np.ndarray]:
     return out_docs, out_tfs
 
 
-def concat_blocks(parts: list[PostingBlocks]) -> PostingBlocks:
-    """Merge posting-block runs whose docID ranges are disjoint and ascending
-    (the salted-shard merge: salt = docID range bucket ⇒ concatenation is the
-    merge — the reference's PQ multiway union, wasm/roaring.c:18715, degenerates
-    to concat because our shards never interleave)."""
-    parts = [p for p in parts if p.n_blocks > 0]
-    if not parts:
-        return _empty_blocks()
-    for a, b in zip(parts, parts[1:]):
-        if a.max_doc[-1] >= b.first_doc[0]:
-            raise ValueError("posting shards overlap; cannot concat-merge")
-    sizes = [len(p.payload) for p in parts]
-    base = np.cumsum([0] + sizes[:-1])
-    offsets = np.concatenate(
-        [p.offsets[:-1] + base[i] for i, p in enumerate(parts)] + [np.array([sum(sizes)], dtype=np.int64)]
-    )
-    return PostingBlocks(
-        first_doc=np.concatenate([p.first_doc for p in parts]),
-        max_doc=np.concatenate([p.max_doc for p in parts]),
-        counts=np.concatenate([p.counts for p in parts]),
-        offsets=offsets.astype(np.int64),
-        max_weight=np.concatenate([p.max_weight for p in parts]),
-        kinds=np.concatenate([p.kinds for p in parts]),
-        payload=b"".join(p.payload for p in parts),
-        max_tf=(np.concatenate([p.max_tf for p in parts])
-                if all(p.max_tf is not None for p in parts) else None),
-    )
-
-
 # ---- positional sidecar codec (IndexConfig.positions) ----
 # Per-(term, salt) shard payload, three varint segments:
 #

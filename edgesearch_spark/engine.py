@@ -31,7 +31,8 @@ because it never scores.
 
 The driver-side kernel is the low-latency path (query terms ≤ 50, postings
 for ≤ 50 terms fit one machine — same deployment shape as the reference's
-worker). ``postings_for_terms``/``doc_fetch`` expose the distributed pieces.
+worker). ``search_df``/``fetch_docs_df`` expose the distributed result set
+and its doc fetch.
 """
 
 from __future__ import annotations
@@ -43,7 +44,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .build import idf_value, load_stats
-from .codec import PostingBlocks, concat_blocks, decode_all, decode_block
+from .codec import PostingBlocks, decode_all, decode_block
 from .oracle import Query, QueryTooLarge, SearchResult
 from .plans.fold import bm25_fold
 from .session import arrow_frame, local_frame
@@ -168,145 +169,68 @@ class NormsCache:
         return self.n_docs
 
 
+def _row_summary(row: dict) -> dict:
+    """A full postings row plus the level-1 shard summary fields that the
+    hot-term scan aggregates in Spark (fetch_terms)."""
+    mtf = row.get("block_max_tf")
+    return {**row, "min_doc": row["block_first_doc"][0], "max_doc": row["block_max_doc"][-1],
+            "max_weight": max(row["block_max_weight"]), "payload_bytes": row["block_offset"][-1],
+            "n_blocks": len(row["block_count"]), "max_tf": max(mtf) if mtf is not None else None}
+
+
 class TermPostings:
-    lazy = False  # fully materialized on the driver (wand.py skips θ-bootstrap)
+    """One term's postings as its (term, salt) shards in docID order, with
+    TWO-LEVEL metadata. Mirrors the reference's two-level chunk lookup
+    (chunk first-keys → in-chunk BST, src/build/chunks/mod.rs:24-26,
+    bst.rs:111-131):
 
-    __slots__ = ("term", "df", "max_weight", "blocks", "_dec", "_on_decode")
+      level 1 — one SUMMARY row per shard (min/max docID, df, max weight,
+        payload bytes, n_blocks): O(df / 2^salt_shift) driver rows, ~40 B
+        each — at df = 10^11 that is ~60 MB of summaries instead of tens
+        of GB of block metadata;
+      level 2 — block metadata (33 B / 128-posting block) per shard;
+      level 3 — payload bytes per shard.
 
-    def __init__(self, term: str, df: int, max_weight: float, blocks: PostingBlocks,
-                 on_decode=None):
-        self.term, self.df, self.max_weight, self.blocks = term, df, max_weight, blocks
-        # decode-once memo (docs, tfs): a query touches the same list many
-        # times (boolean kernel, WAND seeding, exact rescoring) and the
-        # repeated decode_all was the measured kernel hotspot (~0.05 s per
-        # decode of a df≈500k list, up to 7 decodes per mixed query). Per
-        # term the memo is ≤ 16 MB (eager terms hold ≤ lazy_min_df postings;
-        # hotter terms are LazyTermPostings); ACROSS terms the owning engine
-        # bounds live memos with an LRU via ``on_decode`` — only the
-        # compressed blocks stay cached for evicted terms, so a long-running
-        # serving process doesn't grow driver RSS with every distinct term.
-        self._dec: tuple[np.ndarray, np.ndarray] | None = None
-        self._on_decode = on_decode
+    A term with df ≤ the engine's ``lazy_min_df`` is PREFETCHED: one
+    driver-local full-row read fills every shard's levels 2 and 3 up front.
+    A hotter term is served ON DEMAND (``lazy``): only the summaries are
+    read (a Spark scan, aggregated executor-side), and levels 2 and 3 load
+    per candidate-bearing shard (``SearchEngine._postings_rows``: zero
+    Spark jobs, row groups pruned by their (term, salt) footer stats) — the
+    driver-kernel analogue of the reference worker streaming one chunk at a
+    time (script/src/main.ts:191-240): a require+rare query touches only
+    the rare term's salt ranges of a df≈N list.
 
-    # ---- kernel interface (shared with LazyTermPostings) ----
-    @property
-    def n_blocks(self) -> int:
-        return self.blocks.n_blocks
-
-    def _decoded(self) -> tuple[np.ndarray, np.ndarray]:
-        if self._dec is None:
-            self._dec = decode_all(self.blocks)
-            if self._on_decode is not None:
-                self._on_decode(self)
-        return self._dec
-
-    def block_ranges(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """(first_doc, max_doc, counts) per block — metadata only."""
-        return self.blocks.first_doc, self.blocks.max_doc, self.blocks.counts
-
-    def all_docs(self) -> np.ndarray:
-        return self._decoded()[0]
-
-    def lookup_tfs(self, doc_ids: np.ndarray) -> np.ndarray:
-        if self._dec is None:
-            # not decoded yet: sparse probes take the block-skip path (never
-            # force a full decode for a few candidates); dense probes decode
-            # once and keep it
-            blk = np.searchsorted(self.blocks.max_doc, doc_ids, side="left")
-            touched = np.unique(blk[blk < self.blocks.n_blocks])
-            if touched.size <= max(32, self.blocks.n_blocks // 4):
-                return lookup_tfs(self.blocks, doc_ids)
-            self._decoded()
-        docs, tfs = self._dec
-        out = np.zeros(doc_ids.size, dtype=np.int64)
-        pos = np.searchsorted(docs, doc_ids)
-        ok = pos < docs.size
-        hit = np.zeros(doc_ids.size, dtype=bool)
-        hit[ok] = docs[pos[ok]] == doc_ids[ok]
-        out[hit] = tfs[pos[hit]]
-        return out
-
-    def decode_blocks_docs(self, block_idx: np.ndarray) -> np.ndarray:
-        if block_idx.size == 0:
-            return np.empty(0, np.int64)
-        if self._dec is not None:  # slice the memo — no decoding at all
-            bs = np.concatenate([[0], np.cumsum(self.blocks.counts)]).astype(np.int64)
-            docs = self._dec[0]
-            return np.concatenate([docs[bs[i] : bs[i + 1]] for i in block_idx])
-        return np.concatenate([decode_block(self.blocks, int(i))[0] for i in block_idx])
-
-    # ---- WAND seeding protocol ----
-    def seed_docs(self, bound_if_new: float, theta: float, idf_k: float) -> tuple[np.ndarray, int]:
-        """Doc IDs of this term, decoding only blocks whose bound
-        idf_k·block_max_weight + bound_if_new can reach θ for an unseen doc."""
-        keep = (idf_k * self.blocks.max_weight.astype(np.float64) * F32_BOUND_SLACK
-                + bound_if_new) >= theta
-        skipped = int((~keep).sum())
-        if not keep.any():
-            return np.empty(0, np.int64), skipped
-        if keep.all():
-            return self.all_docs(), skipped
-        if self._dec is None and int(keep.sum()) > self.blocks.n_blocks // 4:
-            # mostly-kept: one vectorized decode (memoized) then slice beats
-            # a python decode_block call per kept block by ~10×
-            self._decoded()
-        return self.decode_blocks_docs(np.flatnonzero(keep)), skipped
-
-    def bootstrap_docs(self, n_blocks: int) -> np.ndarray:
-        """Docs from the ``n_blocks`` highest-max_weight blocks — the θ
-        bootstrap sample (wand.py) that keeps the first seeding term from
-        ever decoding its whole list."""
-        mw = self.blocks.max_weight
-        if mw.size <= n_blocks:
-            return self.all_docs()
-        top = np.sort(np.argpartition(mw, -n_blocks)[-n_blocks:])
-        return self.decode_blocks_docs(top)
-
-
-class LazyTermPostings:
-    """Hot-term postings with TWO-LEVEL lazy metadata and driver-bounded
-    memory. Mirrors the reference's two-level chunk lookup (chunk first-keys
-    → in-chunk BST, src/build/chunks/mod.rs:24-26, bst.rs:111-131):
-
-      level 1 — one SUMMARY row per (term, salt) shard, aggregated inside
-        the scan (min/max docID, df, max weight, payload bytes, n_blocks):
-        O(df / 2^salt_shift) driver rows, ~40 B each — at df = 10^11 that is
-        ~60 MB of summaries instead of tens of GB of block metadata;
-      level 2 — block metadata (33 B / 128-posting block), fetched lazily
-        per candidate shard (payload column pruned from that read);
-      level 3 — payload bytes, fetched per shard only when blocks of that
-        shard actually decode.
-
-    Levels 2 and 3 are driver-local reads (``SearchEngine._postings_rows``):
-    zero Spark jobs, row groups pruned by their (term, salt) footer stats.
-
-    This is the driver-kernel analogue of the reference worker streaming one
-    chunk at a time (script/src/main.ts:191-240) — a require+rare query
-    touches only the rare term's salt ranges of a df≈N list.
+    ``lazy`` is read only where the two differ: the whole-term decode memo
+    (prefetched terms only, so it stays ≤ lazy_min_df × 16 B per term),
+    wand's θ bootstrap, and the engine's union-total budget rules.
 
     Counters (test-asserted): ``bytes_fetched`` payload bytes actually
     transferred; ``meta_shards_fetched`` shards whose block metadata was
-    pulled — both ≪ totals for bounded query shapes.
+    pulled — both ≪ totals for bounded query shapes on an on-demand term.
 
     Shards are docID-range-disjoint by construction (salt = doc_id >> shift
     is a range bucket; multi-segment splits of one salt carry disjoint
     global docID ranges), so candidate→shard routing is a searchsorted."""
 
-    lazy = True  # wand.py θ-bootstraps before seeding a lazy top term
-
     __slots__ = (
-        "term", "df", "max_weight", "_engine", "_salts", "_smin", "_smax",
-        "_smw", "_sdf", "_sbytes", "_snblocks", "_meta", "_payload",
+        "term", "df", "max_weight", "lazy", "_engine", "_salts", "_smin", "_smax",
+        "_smw", "_sdf", "_sstart", "_sbytes", "_snblocks", "_meta", "_payload", "_dec",
         "bytes_fetched", "total_payload_bytes", "meta_shards_fetched",
     )
 
-    def __init__(self, engine: "SearchEngine", term: str, summary_rows: list):
+    def __init__(self, engine: "SearchEngine", term: str, shards: list[dict], lazy: bool):
+        """``shards``: one dict per shard with the level-1 summary fields
+        (salt, df, min_doc, max_doc, max_weight, max_tf, payload_bytes,
+        n_blocks); a prefetched term's dicts are full rows (``_row_summary``)
+        whose blocks and payload are kept."""
         self._engine = engine
         self.term = term
+        self.lazy = lazy
         # shards in docID order (salt, then min docID for multi-segment
         # splits of one salt bucket — ranges are disjoint, so this is global
         # docID order)
-        shards = sorted(summary_rows, key=lambda r: (r["salt"], r["min_doc"]))
+        shards = sorted(shards, key=lambda r: (r["salt"], r["min_doc"]))
         self.df = int(sum(r["df"] for r in shards))
         self._salts = [int(r["salt"]) for r in shards]
         self._smin = np.array([r["min_doc"] for r in shards], dtype=np.int64)
@@ -315,159 +239,220 @@ class LazyTermPostings:
             # stored weights are stale; shard bound from avgdl-free max_tf
             # (vectorized — shards can number df/2^16; -1 marks a missing
             # max_tf, bounded by 1.0 like _bound_arr's None case)
-            smtf = np.array(
-                [r["max_tf"] if "max_tf" in r.__fields__ and r["max_tf"] is not None
-                 else -1 for r in shards], dtype=np.float64)
+            smtf = np.array([-1 if r.get("max_tf") is None else r["max_tf"] for r in shards],
+                            dtype=np.float64)
             c = engine.k1 * (1.0 - engine.b)
             self._smw = np.where(
                 (smtf > 0) & (c > 0), (smtf / (smtf + c)) * (1.0 + 1e-12), 1.0)
         else:
             self._smw = np.array([r["max_weight"] for r in shards], dtype=np.float64)
         self._sdf = np.array([r["df"] for r in shards], dtype=np.int64)
+        # posting offset of each shard in the term's docID order
+        self._sstart = np.concatenate([[0], np.cumsum(self._sdf)])
         self._sbytes = np.array([r["payload_bytes"] for r in shards], dtype=np.int64)
         self._snblocks = np.array([r["n_blocks"] for r in shards], dtype=np.int64)
         self.max_weight = float(self._smw.max()) if self._smw.size else 0.0
         self._meta: dict[int, PostingBlocks] = {}
         self._payload: dict[int, PostingBlocks] = {}
+        # decode-once memo (docs, tfs) — see _memo
+        self._dec: tuple[np.ndarray, np.ndarray] | None = None
         self.bytes_fetched = 0
         self.meta_shards_fetched = 0
         self.total_payload_bytes = int(self._sbytes.sum())
+        if not lazy:
+            self._keep(shards, range(self.n_shards))
 
     @property
     def n_shards(self) -> int:
         return int(self._smin.size)
 
+    @property
+    def n_blocks(self) -> int:
+        return int(self._snblocks.sum())
+
     # ---- level-2/3 fetches ----
-    def _match_rows(self, rows: list, need: list[int], what: str) -> dict[int, object]:
+    def _keep(self, rows: list, need) -> None:
+        """Store the fetched rows of shards ``need``: block metadata always,
+        payload when the row carries it."""
         by_key = {(int(r["salt"]), int(r["block_first_doc"][0])): r
                   for r in rows if r["block_first_doc"]}
-        out = {}
         for s in need:
             key = (self._salts[s], int(self._smin[s]))
             if key not in by_key:
                 raise RuntimeError(
-                    f"postings {what} fetch for term={self.term!r} found no row for "
+                    f"postings fetch for term={self.term!r} found no row for "
                     f"shard (salt={key[0]}, first_doc={key[1]}) — the index under "
                     f"{self._engine.index_dir!r} changed between the summary scan and "
-                    f"this lazy fetch (rewritten/compacted?); rebuild the engine"
+                    f"this shard fetch (rewritten/compacted?); rebuild the engine"
                 )
-            out[s] = by_key[key]
-        return out
-
-    def _ensure_meta(self, shard_idx) -> None:
-        need = [int(s) for s in np.unique(shard_idx) if int(s) not in self._meta]
-        if not need:
-            return
-        rows = self._engine._postings_rows(
-            self._engine._meta_cols, {"term": [self.term], "salt": [self._salts[s] for s in need]})
-        for s, r in self._match_rows(rows, need, "metadata").items():
-            self._meta[s] = self._blocks(r)  # payload column pruned: b""
-            self.meta_shards_fetched += 1
+            r = by_key[key]
+            pb = self._blocks(r)
+            if s not in self._meta:
+                self._meta[s] = pb
+                self.meta_shards_fetched += 1
+            if "payload" in r:
+                self._payload[s] = pb
+                self.bytes_fetched += len(pb.payload)
 
     def _blocks(self, row: dict) -> PostingBlocks:
         """A fetched shard row as blocks, max_weight re-derived from max_tf
-        when the engine's stored weights are stale."""
+        when the engine's stored weights are stale (multi-segment,
+        pre-compact)."""
         pb = _row_to_blocks(row)
         if self._engine._tf_bounds:
             pb.max_weight = self._engine._bound_arr(pb.max_tf, pb.n_blocks)
         return pb
 
+    def _fetch(self, shard_idx, have: dict, cols: tuple) -> None:
+        need = [int(s) for s in np.unique(shard_idx) if int(s) not in have]
+        if need:
+            rows = self._engine._postings_rows(
+                cols, {"term": [self.term], "salt": [self._salts[s] for s in need]})
+            self._keep(rows, need)
+
+    def _ensure_meta(self, shard_idx) -> None:
+        self._fetch(shard_idx, self._meta, self._engine._meta_cols)  # payload column pruned
+
     def _ensure_payload(self, shard_idx) -> None:
-        need = [int(s) for s in np.unique(shard_idx) if int(s) not in self._payload]
-        if not need:
-            return
-        rows = self._engine._postings_rows(
-            self._engine._row_cols, {"term": [self.term], "salt": [self._salts[s] for s in need]})
-        for s, r in self._match_rows(rows, need, "payload").items():
-            pb = self._payload[s] = self._blocks(r)
-            self.bytes_fetched += len(pb.payload)
-            if s not in self._meta:  # the full row carries metadata too
-                self._meta[s] = pb
-                self.meta_shards_fetched += 1
+        self._fetch(shard_idx, self._payload, self._engine._row_cols)
 
     def _shards_for_docs(self, doc_ids: np.ndarray) -> np.ndarray:
         s = np.searchsorted(self._smax, doc_ids, side="left")
         return np.unique(s[s < self.n_shards])
 
+    # ---- decoding ----
+    def _memo(self) -> tuple[np.ndarray, np.ndarray] | None:
+        """The whole-term decode (docs, tfs), or None for an on-demand term.
+
+        A query touches the same list many times (boolean kernel, WAND
+        seeding, exact rescoring) and the repeated decode_all was the
+        measured kernel hotspot (~0.05 s per decode of a df≈500k list, up
+        to 7 decodes per mixed query), so a prefetched term decodes once and
+        keeps it: ≤ lazy_min_df × 16 B per term. ACROSS terms the owning
+        engine bounds live memos with an LRU (``_note_decoded``) — only the
+        compressed blocks stay cached for evicted terms, so a long-running
+        serving process doesn't grow driver RSS with every distinct term.
+        An on-demand term never keeps one: its decode would be O(df)."""
+        if self._dec is None and not self.lazy:
+            docs, tfs = zip(*(decode_all(self._payload[s]) for s in range(self.n_shards)))
+            self._dec = (np.concatenate(docs), np.concatenate(tfs))
+            self._engine._note_decoded(self)
+        return self._dec
+
+    def _block_docs(self, s: int, blocks: np.ndarray) -> np.ndarray:
+        """docIDs of blocks ``blocks`` (ascending) of shard ``s``: slices of
+        the memo when there is one, else decoded from the shard's payload
+        (one whole-shard decode when every block is wanted)."""
+        whole = blocks.size == self._snblocks[s]
+        if self._dec is not None:
+            docs, lo = self._dec[0], self._sstart[s]
+            if whole:
+                return docs[lo : self._sstart[s + 1]]
+            bs = lo + np.concatenate([[0], np.cumsum(self._meta[s].counts)])
+            return np.concatenate([docs[bs[b] : bs[b + 1]] for b in blocks])
+        pb = self._payload[s]
+        if whole:
+            return decode_all(pb)[0]
+        return np.concatenate([decode_block(pb, int(b))[0] for b in blocks])
+
+    def _kept_docs(self, keep: dict[int, np.ndarray]) -> np.ndarray:
+        """docIDs of the kept blocks, ``keep`` = {shard: block indices},
+        both ascending — fetching only those shards' payload."""
+        if not keep:
+            return np.empty(0, np.int64)
+        if self._dec is None:
+            self._ensure_payload(np.fromiter(keep, np.int64))
+        return np.concatenate([self._block_docs(s, b) for s, b in keep.items()])
+
+    def _shards_docs(self, shards) -> np.ndarray:
+        return self._kept_docs({int(s): np.arange(self._snblocks[s]) for s in shards})
+
     # ---- kernel interface ----
     def lookup_tfs(self, doc_ids: np.ndarray) -> np.ndarray:
+        """tf for each (sorted) candidate docID, 0 when absent. Candidates
+        route to the shards whose docID range can hold them; only those are
+        fetched. Sparse probes decode only candidate-bearing blocks; a probe
+        touching most of the term's blocks decodes the whole term once."""
         out = np.zeros(doc_ids.size, dtype=np.int64)
         if doc_ids.size == 0 or self.n_shards == 0:
             return out
-        shards = self._shards_for_docs(doc_ids)
-        if shards.size == 0:
-            return out
-        self._ensure_payload(shards)
-        for s in shards:
-            lo, hi = int(self._smin[s]), int(self._smax[s])
-            sel = (doc_ids >= lo) & (doc_ids <= hi)
-            if sel.any():
-                out[sel] = lookup_tfs(self._payload[int(s)], doc_ids[sel])
+        if self._dec is None:
+            owner = np.searchsorted(self._smax, doc_ids, side="left")
+            shards = np.unique(owner[owner < self.n_shards])
+            self._ensure_payload(shards)
+            touched = sum(
+                np.unique(np.searchsorted(self._meta[s].max_doc, doc_ids[owner == s])).size
+                for s in shards)
+            if touched > max(32, self.n_blocks // 4):
+                self._memo()
+            if self._dec is None:
+                for s in shards:
+                    sel = owner == s
+                    out[sel] = lookup_tfs(self._payload[int(s)], doc_ids[sel])
+                return out
+        docs, tfs = self._dec
+        pos = np.searchsorted(docs, doc_ids)
+        ok = pos < docs.size
+        hit = np.zeros(doc_ids.size, dtype=bool)
+        hit[ok] = docs[pos[ok]] == doc_ids[ok]
+        out[hit] = tfs[pos[hit]]
         return out
 
     def all_docs(self) -> np.ndarray:
-        """Full decode — fetches every shard. Only reachable below the
-        engine's hot_route_df budget; bigger unions are auto-routed to the
-        distributed plan and never materialize here."""
-        if self.n_shards == 0:
-            return np.empty(0, np.int64)
-        allsh = np.arange(self.n_shards)
-        self._ensure_payload(allsh)
-        return np.concatenate([decode_all(self._payload[s])[0] for s in range(self.n_shards)])
+        """Every docID. An on-demand term fetches every shard — only
+        reachable below the engine's hot_route_df budget; bigger unions are
+        auto-routed to the distributed plan and never materialize here."""
+        memo = self._memo()
+        return memo[0] if memo is not None else self._shards_docs(range(self.n_shards))
 
     def first_docs(self, n: int) -> np.ndarray:
-        """First ``n`` docIDs in ascending order, fetching only the leading
+        """First ``n`` docIDs in ascending order, decoding only the leading
         shards that cover them (shards are docID-disjoint and sorted) —
         O(page), never O(df). The shard summaries' exact per-shard counts
         pick the covering prefix up front, so this is ONE payload fetch.
         Serves single-term docID-ordered pagination."""
-        if self.n_shards == 0 or n <= 0:
+        if n <= 0:
             return np.empty(0, np.int64)
-        cum = np.cumsum(self._sdf)
-        k = int(np.searchsorted(cum, n)) + 1  # shards 0..k-1 cover n docs
-        need = np.arange(min(k, self.n_shards))
-        self._ensure_payload(need)
-        return np.concatenate([decode_all(self._payload[int(s)])[0] for s in need])[:n]
+        k = int(np.searchsorted(self._sstart[1:], n)) + 1  # shards 0..k-1 cover n docs
+        return self._shards_docs(range(min(k, self.n_shards)))[:n]
 
-    # ---- _union_total interface: shard granularity ----
+    # ---- _union_total interface: block granularity ----
     def block_ranges(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """Shard-level ranges (disjoint, sorted, exact counts) — the union
-        cardinality algebra in _union_total works at any granularity."""
-        return self._smin, self._smax, self._sdf
+        """(first_doc, max_doc, counts) per block, in docID order —
+        metadata only."""
+        self._ensure_meta(np.arange(self.n_shards))
+        m = [self._meta[s] for s in range(self.n_shards)]
+        return (np.concatenate([p.first_doc for p in m]), np.concatenate([p.max_doc for p in m]),
+                np.concatenate([p.counts for p in m]))
 
-    def decode_blocks_docs(self, idx: np.ndarray) -> np.ndarray:
-        """Indices are SHARD indices (matching block_ranges granularity)."""
-        if idx.size == 0:
-            return np.empty(0, np.int64)
-        shards = np.unique(idx)
-        self._ensure_payload(shards)
-        return np.concatenate([decode_all(self._payload[int(s)])[0] for s in shards])
+    def decode_blocks_docs(self, block_idx: np.ndarray) -> np.ndarray:
+        """docIDs of the given (ascending) term-wide block indices."""
+        bstart = np.concatenate([[0], np.cumsum(self._snblocks)])
+        owner = np.searchsorted(bstart, block_idx, side="right") - 1
+        return self._kept_docs(
+            {int(s): block_idx[owner == s] - bstart[s] for s in np.unique(owner)})
 
     # ---- WAND seeding protocol (two-level: shard skip, then block skip) ----
     def seed_docs(self, bound_if_new: float, theta: float, idf_k: float) -> tuple[np.ndarray, int]:
+        """Doc IDs of this term, decoding only blocks whose bound
+        idf_k·block_max_weight + bound_if_new can reach θ for an unseen doc.
+        A shard whose summary bound cannot is skipped without fetching it."""
         keep_shard = (idf_k * self._smw * F32_BOUND_SLACK + bound_if_new) >= theta
         skipped = int(self._snblocks[~keep_shard].sum())
-        if not keep_shard.any():
-            return np.empty(0, np.int64), skipped
         cand = np.flatnonzero(keep_shard)
         self._ensure_meta(cand)
-        docs: list[np.ndarray] = []
-        fetch: list[int] = []
-        blocks_per_shard: dict[int, np.ndarray] = {}
+        keep: dict[int, np.ndarray] = {}
         for s in cand:
-            m = self._meta[int(s)]
-            keep_blk = (idf_k * m.max_weight.astype(np.float64) * F32_BOUND_SLACK
-                        + bound_if_new) >= theta
+            keep_blk = (idf_k * self._meta[int(s)].max_weight.astype(np.float64)
+                        * F32_BOUND_SLACK + bound_if_new) >= theta
             skipped += int((~keep_blk).sum())
             if keep_blk.any():
-                fetch.append(int(s))
-                blocks_per_shard[int(s)] = np.flatnonzero(keep_blk)
-        if fetch:
-            self._ensure_payload(np.array(fetch))
-            for s in fetch:
-                pb = self._payload[s]
-                docs.extend(decode_block(pb, int(b))[0] for b in blocks_per_shard[s])
-        return (np.concatenate(docs) if docs else np.empty(0, np.int64)), skipped
+                keep[int(s)] = np.flatnonzero(keep_blk)
+        if sum(b.size for b in keep.values()) > self.n_blocks // 4:
+            # mostly-kept: one vectorized decode (memoized) then slice beats
+            # a python decode_block call per kept block by ~10×
+            self._memo()
+        return self._kept_docs(keep), skipped
 
     def bootstrap_docs(self, n_blocks: int) -> np.ndarray:
         """Docs from ~n_blocks highest-promise blocks: shards by max_weight
@@ -486,15 +471,9 @@ class LazyTermPostings:
         mws = np.concatenate([self._meta[s].max_weight for s in take])
         owner = np.concatenate([np.full(self._meta[s].n_blocks, s) for s in take])
         local = np.concatenate([np.arange(self._meta[s].n_blocks) for s in take])
-        if mws.size > n_blocks:
-            sel = np.argpartition(mws, -n_blocks)[-n_blocks:]
-        else:
-            sel = np.arange(mws.size)
-        fetch = np.unique(owner[sel])
-        self._ensure_payload(fetch)
-        return np.concatenate(
-            [decode_block(self._payload[int(owner[i])], int(local[i]))[0] for i in sel]
-        ) if sel.size else np.empty(0, np.int64)
+        sel = np.argpartition(mws, -n_blocks)[-n_blocks:] if mws.size > n_blocks else np.arange(mws.size)
+        return self._kept_docs({int(s): np.sort(local[sel][owner[sel] == s])
+                                  for s in np.unique(owner[sel])})
 
 
 class SearchEngine:
@@ -510,6 +489,10 @@ class SearchEngine:
     # pre-decode (term, shard) repartition is skipped — the work is too
     # small to straggle and the shuffle stage would be pure fixed latency
     decode_spread_min_postings: int = 65_536
+    # terms with df above this are served on demand: shard summaries first,
+    # metadata and payload per candidate-bearing shard — bounds driver
+    # memory on hot terms. Smaller terms are prefetched whole.
+    lazy_min_df: int = 1_000_000
     # terms allowed to hold a live decode memo at once (LRU; ≤16 MB each ⇒
     # ~1 GB decoded ceiling). Class attr so MultiSegmentEngine inherits.
     max_decoded_terms: int = 64
@@ -537,9 +520,8 @@ class SearchEngine:
         self.avgdl: float = self.stats["avgdl"] or 1.0
         self.max_query_terms: int = self.stats.get("max_query_terms", 50)
         self.max_results: int = self.stats.get("max_results", 50)
-        # terms with df above this are served lazily: metadata first, payload
-        # per candidate-bearing shard — bounds driver memory on hot terms
-        self.lazy_min_df: int = lazy_min_df if lazy_min_df is not None else 1_000_000
+        if lazy_min_df is not None:
+            self.lazy_min_df = lazy_min_df
         if hot_route_df is not None:
             self.hot_route_df = hot_route_df
         self._open_tables()
@@ -558,10 +540,10 @@ class SearchEngine:
         self._has_max_tf = "block_max_tf" in self._postings_df.columns
         self._meta_cols = self._META_COLS + (("block_max_tf",) if self._has_max_tf else ())
         self._row_cols = self._meta_cols + ("payload",)
-        self._cache: dict[str, TermPostings | LazyTermPostings | None] = {}
-        # LRU of terms currently holding a live decode memo (~16 B/posting
-        # of int64 docs+tfs). Eviction drops only the memo — the compressed
-        # blocks stay in _cache — so the decoded footprint is bounded at
+        self._cache: dict[str, TermPostings | None] = {}
+        # LRU of prefetched terms currently holding a live decode memo
+        # (~16 B/posting of int64 docs+tfs). Eviction drops only the memo —
+        # the compressed blocks stay in _cache — so the decoded footprint is bounded at
         # ~max_decoded_terms × 16 MB instead of growing with every distinct
         # term a long-lived serving process ever scores.
         self._dec_lru: "OrderedDict[str, TermPostings]" = OrderedDict()
@@ -696,48 +678,22 @@ class SearchEngine:
         return (t / (t + c)) * (1.0 + 1e-12)
 
     # ---- batched postings fetch: one scan serves all terms ----
-    def fetch_terms(self, terms: list[str]) -> dict[str, TermPostings | LazyTermPostings | None]:
+    def fetch_terms(self, terms: list[str]) -> dict[str, TermPostings | None]:
         missing = [t for t in set(terms) if t not in self._cache]
         if missing:
             # routing first: term_stats (narrow, range-sorted, pushdown) says
             # which terms exist and how hot they are. Small terms get ONE
-            # driver-local read serving the whole query (reference Q6); hot
-            # terms get a shard-summary scan and fetch metadata and payload
-            # lazily per candidate-bearing shard (LazyTermPostings).
+            # driver-local read serving the whole query (reference Q6) and
+            # are prefetched whole; hot terms get a shard-summary scan and
+            # fetch metadata and payload on demand per candidate-bearing
+            # shard. Both end in the one TermPostings.
             dfs = self._term_dfs(missing)
             small = [t for t in missing if dfs[t] is not None and dfs[t] <= self.lazy_min_df]
             hot = [t for t in missing if dfs[t] is not None and dfs[t] > self.lazy_min_df]
-            for t in missing:
-                if dfs[t] is None:
-                    self._cache[t] = None
+            by_term: dict[str, list] = {}
             if small:
-                rows = self._postings_rows(self._row_cols, {"term": small})
-                by_term: dict[str, list] = {}
-                for r in rows:
-                    by_term.setdefault(r["term"], []).append(r)
-                for t in small:
-                    if t not in by_term:
-                        self._cache[t] = None
-                        continue
-                    # order shards by (salt, first-block docID): multi-segment
-                    # indexes can split one salt bucket across segments with
-                    # disjoint docID ranges — the secondary key orders those
-                    shards = sorted(
-                        by_term[t],
-                        key=lambda r: (r["salt"], r["block_first_doc"][0] if r["block_first_doc"] else -1),
-                    )
-                    pb = concat_blocks([_row_to_blocks(r) for r in shards])
-                    if self._tf_bounds:
-                        # stale stored weights (multi-segment, pre-compact):
-                        # rebind the block maxima from avgdl-free max_tf
-                        pb.max_weight = self._bound_arr(pb.max_tf, pb.n_blocks)
-                    self._cache[t] = TermPostings(
-                        t,
-                        int(sum(r["df"] for r in shards)),
-                        float(pb.max_weight.max()) if pb.n_blocks else 0.0,
-                        pb,
-                        on_decode=self._note_decoded,
-                    )
+                for r in self._postings_rows(self._row_cols, {"term": small}):
+                    by_term.setdefault(r["term"], []).append(_row_summary(r))
             if hot:
                 # level-1 summary scan: ONE aggregated row per (term, salt)
                 # shard — block metadata stays executor-side until a shard
@@ -753,16 +709,11 @@ class SearchEngine:
                 ]
                 if self._has_max_tf:
                     summ_cols.append(F.array_max("block_max_tf").alias("max_tf"))
-                summ = (
-                    self._postings_df.filter(F.col("term").isin(hot))
-                    .select(*summ_cols)
-                    .collect()
-                )
-                by_term = {}
-                for r in summ:
-                    by_term.setdefault(r["term"], []).append(r)
-                for t in hot:
-                    self._cache[t] = LazyTermPostings(self, t, by_term[t]) if t in by_term else None
+                for r in self._postings_df.filter(F.col("term").isin(hot)).select(*summ_cols).collect():
+                    by_term.setdefault(r["term"], []).append(r.asDict())
+            for t in missing:
+                shards = by_term.get(t)
+                self._cache[t] = TermPostings(self, t, shards, lazy=t in hot) if shards else None
         return {t: self._cache[t] for t in terms}
 
     def idf(self, df: int) -> float:
@@ -824,7 +775,7 @@ class SearchEngine:
             # intersect (the reference AND-folds in input order — result set
             # is identical, order of folding is a pure optimization, SURVEY §4).
             # Hot terms past the seed are PROBED, never decoded whole — with a
-            # lazy seed-mate only candidate-bearing shards are even fetched.
+            # seed-mate served on demand only candidate-bearing shards are fetched.
             req = sorted((tp[t] for t in q.require), key=lambda p: p.df)
             result = req[0].all_docs()
             for p in req[1:]:
@@ -1257,8 +1208,7 @@ class SearchEngine:
             if q.continuation >= total:
                 return SearchResult(total, None, [])
             k_eff = q.continuation + q.k
-            page = (single.first_docs(k_eff) if isinstance(single, LazyTermPostings)
-                    else single.all_docs()[:k_eff])[q.continuation :]
+            page = single.first_docs(k_eff)[q.continuation :]
             last = q.continuation + page.size - 1
             return SearchResult(total, None if last == total - 1 else last + 1, page.tolist())
         matched = self._matched_docs_df(q, tp, scored=False)
@@ -1321,14 +1271,14 @@ class SearchEngine:
         overlapping another term's range are decoded and deduped. For salted
         range-bucketed lists disjoint salt ranges never decode at all.
 
-        Hot (lazy) terms never decode whole here: with ONE hot term,
+        On-demand (hot) terms never decode whole here: with ONE hot term,
         |∪| = df_hot + |eager_union \\ hot| via a bounded membership probe
         (inclusion–exclusion); with ≥2 hot terms the exact union count runs
         as one distributed job (their ranges overlap everywhere, so the
         metadata algebra would decode them fully on the driver)."""
         if len(present) == 1:
             return int(present[0].df)
-        hot = [p for p in present if isinstance(p, LazyTermPostings)]
+        hot = [p for p in present if p.lazy]
         if len(hot) >= 2:
             return int(
                 self._decoded_for([p.term for p in present])

@@ -367,7 +367,6 @@ class MultiSegmentEngine(SearchEngine):
         self.avgdl = self.stats["avgdl"] or 1.0
         self.max_query_terms = self.stats.get("max_query_terms", 50)
         self.max_results = self.stats.get("max_results", 50)
-        self.lazy_min_df = 1_000_000
         self._open_tables()
         # stored block-max weights were baked under each SEGMENT's avgdl;
         # once the union avgdl differs they understate true bounds and the
@@ -621,15 +620,15 @@ class MultiSegmentEngine(SearchEngine):
             return total
         import numpy as np
 
-        # Driver probes on a LAZY term fetch the payload of every shard a
-        # tombstone falls in — for a scattered delete set that is the whole
-        # list, the exact blow-up LazyTermPostings exists to prevent. Budget
+        # Driver probes on an on-demand term fetch the payload of every shard
+        # a tombstone falls in — for a scattered delete set that is the whole
+        # list, the exact blow-up on-demand serving exists to prevent. Budget
         # the would-be fetch; past it, count |union ∩ tombstones| as ONE
         # distributed job (decode pruned cluster-side, broadcast-semi-join
         # the delete set) — no shard payload reaches the driver.
         est = 0
         for p in present:
-            if getattr(p, "lazy", False):
+            if p.lazy:
                 sh = p._shards_for_docs(self._deleted)
                 est += int(p._sbytes[sh].sum())
         if est > self.union_probe_budget_bytes:

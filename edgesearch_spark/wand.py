@@ -96,15 +96,15 @@ def wand_topk(
     # would decode the WHOLE first list — fatal on a df≈N term), score the
     # docs of the ~4k highest-max_weight blocks of the top-bound term. Those
     # docs stay in the pool, so this is pure work-reordering: any θ they set
-    # only prunes blocks that provably cannot reach the page. Two-level lazy
-    # postings fetch only the few shards owning those blocks.
+    # only prunes blocks that provably cannot reach the page. An on-demand
+    # term fetches only the few shards owning those blocks.
     #
-    # ONLY when the seeding term is served lazily: for an eager TermPostings
-    # the payload is already on the driver and θ = -inf seeding is exactly
-    # one full decode, so pre-decoding the top blocks is pure double work
+    # ONLY when the seeding term is served on demand: a prefetched term's
+    # payload is already on the driver and θ = -inf seeding is exactly one
+    # full decode, so pre-decoding the top blocks is pure double work
     # (measured +40-100 ms per query at 500k docs, zero extra skips on
     # uniform corpora — the r2→r3 wand_* latency regression).
-    if getattr(tps[0], "lazy", False):
+    if tps[0].lazy:
         boot_blocks = max(4 * k, 8)
         boot = np.unique(tps[0].bootstrap_docs(boot_blocks))
         if boot.size:

@@ -5,7 +5,6 @@ from hypothesis import strategies as st
 
 from edgesearch_spark.codec import (
     PostingBlocks,
-    concat_blocks,
     decode_all,
     decode_block,
     decode_varint,
@@ -70,25 +69,6 @@ def test_decode_single_block():
     d, t = decode_block(pb, 1)
     assert d.tolist() == [30, 40]
     assert t.tolist() == [3, 4]
-
-
-def test_concat_blocks_is_merge_of_disjoint_shards():
-    a = _mk([0, 1, 2, 3], [1, 2, 1, 1])
-    b = _mk([10, 11], [5, 5])
-    c = _mk([20], [1])
-    merged = concat_blocks([a, b, c])
-    d, t = decode_all(merged)
-    assert d.tolist() == [0, 1, 2, 3, 10, 11, 20]
-    assert t.tolist() == [1, 2, 1, 1, 5, 5, 1]
-    assert merged.n_postings == 7
-    # block boundaries preserved, offsets rebased correctly
-    d1, _ = decode_block(merged, 1)
-    assert d1.tolist() == [10, 11]
-
-
-def test_concat_blocks_rejects_overlap():
-    with pytest.raises(ValueError):
-        concat_blocks([_mk([0, 5]), _mk([3, 9])])
 
 
 @given(
@@ -216,16 +196,6 @@ def test_dense_roundtrip_property(docs, bs, tfmod):
     assert tb.tolist() == tfs[lo : lo + int(pb.counts[i])]
 
 
-def test_concat_preserves_kinds():
-    a = _mk(list(range(0, 100)), [1] * 100, block_size=128)
-    b = _mk([500 + 7 * i for i in range(40)], [2] * 40, block_size=128)
-    m = concat_blocks([a, b])
-    assert m.kinds.tolist() == a.kinds.tolist() + b.kinds.tolist()
-    assert m.first_doc.tolist() == a.first_doc.tolist() + b.first_doc.tolist()
-    d, t = decode_all(m)
-    assert d.tolist() == list(range(0, 100)) + [500 + 7 * i for i in range(40)]
-
-
 def test_containers_at_large_docids():
     """Run/bitset selection and reconstruction at 10^12-scale docIDs (the
     metadata first_doc carries the absolute base; streams stay small)."""
@@ -245,11 +215,6 @@ def test_containers_at_large_docids():
 
 def test_postings_block_max_tf():
     """Per-block max raw tf rides beside max_weight (avgdl-free WAND bounds
-    for multi-segment engines) and survives concat-merge."""
-    from edgesearch_spark.codec import concat_blocks
-
+    for multi-segment engines)."""
     pb = _mk([0, 1, 5, 100, 101, 102, 4_000_000_000], [1, 3, 2, 9, 1, 1, 7], block_size=3)
     assert pb.max_tf.tolist() == [3, 9, 7]
-    pb2 = _mk([5_000_000_000, 5_000_000_001], [4, 2], block_size=3)
-    merged = concat_blocks([pb, pb2])
-    assert merged.max_tf.tolist() == [3, 9, 7, 4]

@@ -362,7 +362,7 @@ def test_union_total_live_budget_routes_probe_distributed(spark, tmp_path_factor
     payloads to the driver past union_probe_budget_bytes: with budget 0 the
     |union ∩ tombstones| count runs as one distributed job (driver probes
     forbidden via monkeypatch) and the exact total is unchanged."""
-    from edgesearch_spark.engine import LazyTermPostings
+    from edgesearch_spark.engine import TermPostings
 
     root = str(tmp_path_factory.mktemp("probedist"))
     idx = IncrementalIndexer(spark, root, CFG, order_cols=("path",), content_col="content")
@@ -378,7 +378,7 @@ def test_union_total_live_budget_routes_probe_distributed(spark, tmp_path_factor
 
     eng_a, a = run()  # driver-probe path (default budget)
 
-    orig = LazyTermPostings.lookup_tfs
+    orig = TermPostings.lookup_tfs
 
     deleted = np.arange(0, 300, 3)
 
@@ -390,11 +390,11 @@ def test_union_total_live_budget_routes_probe_distributed(spark, tmp_path_factor
         return orig(self, doc_ids)
 
     type(eng_a).union_probe_budget_bytes = 0
-    LazyTermPostings.lookup_tfs = forbidden
+    TermPostings.lookup_tfs = forbidden
     try:
         eng_b, b = run()
     finally:
-        LazyTermPostings.lookup_tfs = orig
+        TermPostings.lookup_tfs = orig
         del type(eng_a).union_probe_budget_bytes
     assert a.total == b.total == 300 - 100
     assert list(a.doc_ids) == list(b.doc_ids)

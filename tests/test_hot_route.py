@@ -3,12 +3,14 @@
   * union-shaped queries over terms hotter than ``hot_route_df`` auto-route
     to the distributed plan — identical results, the driver holds only the
     page (never a df≈N docID set);
-  * the WAND kernel θ-bootstraps from the top-bound term's best blocks, so
-    a contain-only query against a df≈N term never decodes the whole list
-    (asserted via bytes_fetched ≪ total_payload_bytes);
-  * two-level metadata: a require+rare query against a df≈N term pulls
-    block metadata for only the rare term's candidate shards, not all
-    O(df/2^16) of them (meta_shards_fetched ≪ n_shards).
+  * a term hotter than ``lazy_min_df`` is served on demand
+    (``TermPostings.lazy``), and the WAND kernel θ-bootstraps from such a
+    top-bound term's best blocks, so a contain-only query against a df≈N
+    term never decodes the whole list (asserted via bytes_fetched ≪
+    total_payload_bytes);
+  * two-level metadata: a require+rare query against an on-demand df≈N
+    term pulls block metadata for only the rare term's candidate shards,
+    not all O(df/2^16) of them (meta_shards_fetched ≪ n_shards).
 
 Reference analogue: the worker streams one chunk at a time and never holds
 a full hot posting list on its control plane (script/src/main.ts:191-240).
@@ -19,7 +21,7 @@ import pytest
 
 from conftest import jobs_run
 from edgesearch_spark.build import IndexConfig, build_index
-from edgesearch_spark.engine import LazyTermPostings, SearchEngine
+from edgesearch_spark.engine import SearchEngine
 from edgesearch_spark.oracle import Query
 
 N = 4096  # 32 salt buckets at shift 7, 256 blocks at block_size 16
@@ -73,7 +75,7 @@ def test_bool_contain_hot_routes_distributed(engines):
     # single-term union: the page decodes only the LEADING shards (O(page),
     # zero Spark jobs); total comes from shard summaries
     hot = routed._cache["hot"]
-    assert isinstance(hot, LazyTermPostings)
+    assert hot.lazy
     assert 0 < hot.bytes_fetched < hot.total_payload_bytes / 8, (
         hot.bytes_fetched, hot.total_payload_bytes)
 
@@ -87,7 +89,7 @@ def test_bool_multi_term_hot_union_zero_driver_payload(engines):
     assert routed.last_route == "distributed"
     for t in ("hot", "third"):
         p = routed._cache[t]
-        if isinstance(p, LazyTermPostings):
+        if p.lazy:
             assert p.bytes_fetched == 0, (t, p.bytes_fetched)
 
 
@@ -161,7 +163,7 @@ def test_wand_kernel_hot_bootstrap_bounded(engines):
     assert list(w.scores) == list(a.scores)
     assert kernel.last_route == "kernel"
     hot = kernel._cache["hot"]
-    assert isinstance(hot, LazyTermPostings)
+    assert hot.lazy
     assert hot.bytes_fetched > 0
     assert hot.bytes_fetched < hot.total_payload_bytes / 4, (
         hot.bytes_fetched, hot.total_payload_bytes)
@@ -177,7 +179,7 @@ def test_two_level_meta_bounded_on_require_rare(spark, index_dir):
     r = eng.search(q)
     assert r.total == len(RARE)
     hot = eng._cache["hot"]
-    assert isinstance(hot, LazyTermPostings)
+    assert hot.lazy
     # rare docs live in 1 salt bucket (100..149 < 128 boundary? 100-127 in
     # bucket 0, 140-149 in bucket 1) → ≤2 of 32 shards materialize
     assert hot.meta_shards_fetched <= 2, hot.meta_shards_fetched
@@ -219,7 +221,7 @@ def test_union_total_single_hot_probe_budgeted(spark, index_dir):
     assert a.total == b.total == N
     assert list(a.doc_ids) == list(b.doc_ids)
     h = tight.fetch_terms(["hot"])["hot"]
-    assert isinstance(h, LazyTermPostings)
+    assert h.lazy
     # the budgeted engine fetched only what the kernel page itself needed —
     # far below the full list (the probe would have pulled ~everything)
     assert h.bytes_fetched < h.total_payload_bytes / 2, (

@@ -1,6 +1,8 @@
-"""Hot-term driver safety: terms with df > lazy_min_df are served via
-LazyTermPostings — block metadata up front (payload column pruned from the
-scan), payload fetched per candidate-bearing (term, salt) shard only.
+"""Hot-term driver safety: terms with df > lazy_min_df are served on
+demand (``TermPostings.lazy``) — shard summaries up front, block metadata
+(payload column pruned from the read) and payload fetched per
+candidate-bearing (term, salt) shard only; smaller terms are prefetched
+whole.
 A require+rare query against a df=N term must transfer ≪ the full posting
 list while producing byte-identical results to the eager engine."""
 
@@ -9,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from edgesearch_spark.build import IndexConfig, build_index
-from edgesearch_spark.engine import LazyTermPostings, SearchEngine, TermPostings
+from edgesearch_spark.engine import SearchEngine
 from edgesearch_spark.oracle import Query
 
 N = 2000
@@ -46,8 +48,8 @@ def test_require_rare_plus_hot_bounded_fetch(engines):
     a, b = eager.search(q), lazy.search(q)
     assert (a.total, a.continuation, list(a.doc_ids)) == (b.total, b.continuation, list(b.doc_ids))
     hot = lazy._cache["hot"]
-    assert isinstance(hot, LazyTermPostings)
-    assert isinstance(lazy._cache["rare"], TermPostings)
+    assert hot.lazy
+    assert not lazy._cache["rare"].lazy
     # the rare docs live in ~2 of the 16 salt buckets: ≪ full payload moved
     assert hot.bytes_fetched > 0
     assert hot.bytes_fetched < hot.total_payload_bytes / 4, (
@@ -102,6 +104,28 @@ def test_missing_terms_still_routed(engines):
     assert r.total == len(RARE_DOCS)
 
 
+def test_on_demand_term_keeps_no_decode_memo(engines):
+    """The decode memo's bound (max_decoded_terms × lazy_min_df × 16 B)
+    holds because an on-demand term never keeps a whole-term decode: after
+    boolean, exhaustive BM25 and WAND queries that decode all of 'hot', it
+    holds no memo and never enters the memo LRU, while the prefetched
+    'rare' does."""
+    _, lazy = engines
+    for spec in (dict(contain=["hot"], k=10),
+                 dict(require=["rare"], contain=["hot", "third"], k=10),
+                 dict(contain=["hot", "rare"], k=10)):
+        q = Query.make(**spec)
+        lazy.search(q)
+        lazy.search_bm25(q)
+        lazy.search_bm25_wand(q)
+    hot, third, rare = (lazy._cache[t] for t in ("hot", "third", "rare"))
+    assert hot.lazy and third.lazy and not rare.lazy
+    assert hot.bytes_fetched == hot.total_payload_bytes  # decoded whole
+    assert hot._dec is None and third._dec is None
+    assert "hot" not in lazy._dec_lru and "third" not in lazy._dec_lru
+    assert rare._dec is not None and "rare" in lazy._dec_lru
+
+
 def test_new_lazy_shard_fetch_runs_no_spark_job(spark, index_dir):
     """Once a hot term's shard summary is cached, a query that needs
     shards not fetched yet, plus its page's doc fetch, runs no Spark job:
@@ -111,7 +135,7 @@ def test_new_lazy_shard_fetch_runs_no_spark_job(spark, index_dir):
     eager = SearchEngine(spark, index_dir)
     lazy = SearchEngine(spark, index_dir, lazy_min_df=100).warm()
     hot = lazy.fetch_terms(["hot"])["hot"]  # the level-1 summary scan
-    assert isinstance(hot, LazyTermPostings)
+    assert hot.lazy
     assert hot.bytes_fetched == 0 and hot.meta_shards_fetched == 0
     q = Query.make(require=["rare", "hot"], k=50)
 

@@ -146,8 +146,7 @@ def test_multisegment_lazy_parity(spark, corpus_parts, tmp_path_factory):
         sa, sb = eager.search_bm25(q), lazy.search_bm25(q)
         assert list(sa.doc_ids) == list(sb.doc_ids), q
         assert np.allclose(sa.scores, sb.scores, atol=1e-12), q
-    from edgesearch_spark.engine import LazyTermPostings
-    assert any(isinstance(p, LazyTermPostings) for p in lazy._cache.values() if p)
+    assert any(p.lazy for p in lazy._cache.values() if p)
 
 
 def test_multisegment_hot_route_parity(spark, corpus_parts, tmp_path_factory):
@@ -218,11 +217,10 @@ def test_multisegment_wand_prunes_via_max_tf_bounds(spark, tmp_path_factory):
     # the page stays bit-identical
     lazy_eng = indexer.engine()
     lazy_eng.lazy_min_df = 10
-    from edgesearch_spark.engine import LazyTermPostings
 
     wl = lazy_eng.search_bm25_wand(q)
     p = lazy_eng._cache["score"]
-    assert isinstance(p, LazyTermPostings)
+    assert p.lazy
     assert list(wl.doc_ids) == list(e.doc_ids)
     assert list(wl.scores) == list(e.scores)
     res = wand_topk([(lazy_eng.idf(p.df), p)], 10, lazy_eng.doclens,

@@ -101,7 +101,6 @@ def test_wand_actually_prunes(engine):
     terms = ["uid00000005", "import", "the", "license", "return"]
     tp = engine.fetch_terms(terms)
     present = [(engine.idf(p.df), p) for p in tp.values() if p is not None]
-    union = int(np.unique(np.concatenate([p.blocks.max_doc for _, p in present])).size) or 1
     res = wand_topk(present, 5, engine.doclens, engine.k1, engine.b, engine.avgdl)
     full_union = sum(p.df for _, p in present)
     assert res.seeded < full_union, (res.seeded, full_union)
@@ -121,8 +120,6 @@ def test_decode_memo_lru_bounded(engine):
     (docs, tfs) int64 pair for every distinct term ever scored. With
     max_decoded_terms=2, querying many distinct terms keeps ≤2 live memos;
     evicted terms keep their compressed blocks (still served correctly)."""
-    from edgesearch_spark.engine import TermPostings
-
     old = engine.max_decoded_terms
     engine.max_decoded_terms = 2
     engine._cache.clear()
@@ -132,7 +129,7 @@ def test_decode_memo_lru_bounded(engine):
         for t in terms:
             engine.search_bm25(Query.make(contain=[t], k=5))
         live = [tp for tp in engine._cache.values()
-                if isinstance(tp, TermPostings) and tp._dec is not None]
+                if tp is not None and not tp.lazy and tp._dec is not None]
         assert len(live) <= 2
         assert len(engine._dec_lru) <= 2
         # an evicted term still answers identically (re-decodes on demand)

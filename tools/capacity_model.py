@@ -11,10 +11,10 @@ projects a target deployment (default 10^12 docs — the north rule's scale):
 
   * postings payload + parquet metadata bytes;
   * docs store bytes (content ships at input size — dominated by content);
-  * term dictionary + bloom sidecar bytes, and what the DRIVER holds under
-    eager vs lazy bloom load;
-  * serving-node memory: norms cache (int32/doc), per-query two-level lazy
-    summaries for a df-hot term (rows = df / 2^salt_shift);
+  * term dictionary + bloom sidecar bytes, and what the DRIVER holds of
+    the bloom (an LRU of the ranges queries touch);
+  * serving-node memory: norms cache (int32/doc), the shard summaries of a
+    df-hot term served on demand (rows = df / 2^salt_shift);
   * executor-side shuffle volume of a rebuild (pack blobs ≈ payload bytes).
 
 Every projected line prints the measured constant it scales from, so the
