@@ -500,6 +500,9 @@ class SearchEngine:
     # max_pages × page_docs × 4 B resident (1 GB default)
     norms_page_docs: int = 1 << 22
     norms_max_pages: int = 64
+    # decoded docs row groups kept by the docs reader (LocalTable LRU, in
+    # Table.nbytes), so a repeated or overlapping page decodes nothing
+    docs_cache_bytes: int = 64 << 20
     last_route: str = "kernel"  # diagnostics: "kernel" | "distributed"
     # True ⇒ stored block-max WEIGHTS are stale (baked under a different
     # avgdl than the live one — multi-segment, pre-compact) and every
@@ -555,12 +558,15 @@ class SearchEngine:
     def _local_table(self, table: str, segments: list[str] | None = None) -> LocalTable:
         """The one opener of an index table: a driver-local reader of
         ``table`` over ``segments`` (default: every segment), which also
-        gives its Spark frame. Its footers are read on first use."""
+        gives its Spark frame. Its footers are read on first use. Only the
+        docs reader caches decoded row groups (``docs_cache_bytes``)."""
         from .localread import LocalTable
 
         key = (table, tuple(self._segment_dirs if segments is None else segments))
         if key not in self._local:
-            self._local[key] = LocalTable([f"{s}/{table}" for s in key[1]], self.spark)
+            self._local[key] = LocalTable(
+                [f"{s}/{table}" for s in key[1]], self.spark,
+                cache_bytes=self.docs_cache_bytes if table == "docs" else 0)
         return self._local[key]
 
     def _postings_rows(self, cols: tuple, isin: dict) -> list[dict]:
@@ -1414,9 +1420,10 @@ class SearchEngine:
         """The stored rows of a page's docIDs, each once and in no set
         order, as a local relation with the docs store's schema. The rows
         are read on the driver (``LocalTable.take``): the store is
-        docID-sorted parquet, so footer min/max stats pick the row groups
-        that can hold a page id. Neither the read nor collecting the frame
-        runs a Spark job. For ID sets too large to hold on the driver, use
+        docID-sorted parquet in small row groups, so footer min/max stats
+        pick the row groups that can hold a page id, and decoded groups
+        stay in an LRU (``docs_cache_bytes``). Neither the read nor
+        collecting the frame runs a Spark job. For ID sets too large to hold on the driver, use
         ``fetch_docs_df``."""
         tbl = self._local_table("docs").take(
             self._docs_df.columns, {"doc_id": [int(d) for d in doc_ids]})

@@ -11,6 +11,12 @@ rows on the driver, with zero Spark jobs. It uses no ``pyarrow.dataset`` scanner
 per-read state grew the driver's peak RSS about six times as much as this
 reader does over the same 200 page reads.
 
+The docs store is the one table read by point lookups with scattered keys
+(a BM25 page's ids): it is written in small zstd row groups
+(``build.DOCS_ROWGROUP_ROWS``), and its reader keeps an LRU of decoded row
+groups (``cache_bytes``), so a page decodes only the groups that hold its
+ids and a repeated or overlapping page decodes none.
+
 The same footers give the table's Spark frame (``LocalTable.frame``) its
 schema: Spark stores its row schema in every file it writes, so opening an
 index table runs no schema-inference job.
@@ -25,6 +31,7 @@ from __future__ import annotations
 import bisect
 import json
 import os
+from collections import OrderedDict
 from functools import reduce
 
 import pyarrow as pa
@@ -106,9 +113,15 @@ class LocalTable:
     local / remote segment list against the wrong filesystem). The file
     list and footers are read at construction; listing a remote dir may
     raise ``OSError`` when the store is unreachable. ``row_groups_read``
-    counts the row groups decoded (test-asserted)."""
+    counts the row groups decoded (test-asserted).
 
-    def __init__(self, dirs: list[str], spark: SparkSession | None = None):
+    ``cache_bytes`` > 0 keeps decoded row groups in an LRU keyed by (file,
+    row group, columns read) and bounded by their ``Table.nbytes``; a hit
+    decodes nothing and does not count in ``row_groups_read``, and a row
+    group larger than the whole budget is decoded but never kept."""
+
+    def __init__(self, dirs: list[str], spark: SparkSession | None = None,
+                 cache_bytes: int = 0):
         self._dirs = list(dirs)
         self._spark = spark
         self._sdf = None
@@ -118,6 +131,9 @@ class LocalTable:
             pf for loc in located for pf in _parquet_files(*loc)]
         self._bounds: dict[str, list[list[tuple | None]]] = {}
         self.row_groups_read = 0
+        self.cache_bytes = cache_bytes
+        self._cache: OrderedDict[tuple, pa.Table] = OrderedDict()
+        self.cached_bytes = 0
 
     def frame(self) -> DataFrame:
         """The table as a Spark frame, with the schema ``_spark_schema``
@@ -145,14 +161,30 @@ class LocalTable:
         read = list(dict.fromkeys([*columns, *keep]))
         parts = []
         for f, pf in enumerate(self._files):
-            groups = [g for g in range(pf.metadata.num_row_groups)
-                      if all(b[f][g] is None or keep[c](*b[f][g]) for c, b in bounds.items())]
-            if groups:
-                t = pf.read_row_groups(groups, columns=read, use_threads=False)
-                self.row_groups_read += len(groups)
-                parts.append(t.filter(mask(t)).select(columns))
+            for g in range(pf.metadata.num_row_groups):
+                if all(b[f][g] is None or keep[c](*b[f][g]) for c, b in bounds.items()):
+                    t = self._row_group(f, pf, g, read)
+                    parts.append(t.filter(mask(t)).select(columns))
         # segments written from different inputs may differ in nullability
         return pa.concat_tables(parts, promote_options="default") if parts else empty
+
+    def _row_group(self, f: int, pf: pq.ParquetFile, g: int, read: list[str]) -> pa.Table:
+        """Row group ``g`` of file ``f``, ``read`` columns, through the LRU:
+        decoded on a miss, then kept while the newest entries fit in
+        ``cache_bytes``."""
+        key = (f, g, tuple(read))
+        t = self._cache.get(key)
+        if t is not None:
+            self._cache.move_to_end(key)
+            return t
+        t = pf.read_row_group(g, columns=read, use_threads=False)
+        self.row_groups_read += 1
+        if 0 < t.nbytes <= self.cache_bytes:
+            self._cache[key] = t
+            self.cached_bytes += t.nbytes
+            while self.cached_bytes > self.cache_bytes:
+                self.cached_bytes -= self._cache.popitem(last=False)[1].nbytes
+        return t
 
     def _empty(self, columns: list[str]) -> pa.Table:
         if not self._files:

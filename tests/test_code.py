@@ -165,7 +165,8 @@ def test_capacity_model_serving_budget_at_1e12(spark, code_docs, tmp_path_factor
     summaries = (10**11 / (1 << 16)) * 40
     bloom_lru = 1024 * 96 * 1024  # bloom.py load_term_bloom max_cached_rows × 96 KiB
     decode_memos = SearchEngine.max_decoded_terms * 16 << 20  # ≤16 MB/term LRU
-    resident = norms_resident + summaries + bloom_lru + decode_memos
+    docs_cache = SearchEngine.docs_cache_bytes  # decoded docs row groups, LRU
+    resident = norms_resident + summaries + bloom_lru + decode_memos + docs_cache
     assert resident < 32 * GiB, f"driver-resident projection {resident/GiB:.1f} GiB"
     # and each line individually stays sane
     assert norms_resident <= 1 * GiB

@@ -189,8 +189,9 @@ def test_kernel_routed_page_runs_no_spark_job(spark, index_dir):
 
 
 def test_doc_fetch_reads_only_the_row_groups_holding_the_page(spark, tmp_path_factory):
-    """The docs store is written on the postings' row-group byte budget
-    (IndexConfig.target_rowgroup_bytes). Built with a tiny budget, every
+    """The docs store is written in row groups of at most
+    build.DOCS_ROWGROUP_ROWS rows, with IndexConfig.target_rowgroup_bytes as
+    the byte cap for very large docs. Built with a tiny byte cap, every
     docs file holds several row groups, and a page inside one of them
     decodes that one row group and returns the right rows."""
     import pyarrow.parquet as pq

@@ -105,6 +105,9 @@ def project(m: dict, target_docs: int, hot_df: int) -> list[tuple[str, str, str]
     rows.append(("driver norms cache", human(norms_resident),
                  "int32 × min(n_docs, LRU budget) — paged by docID range "
                  "(NormsCache)"))
+    rows.append(("driver docs cache (≤)", human(_SE.docs_cache_bytes),
+                 "decoded docs row groups, LRU by bytes (docs_cache_bytes); "
+                 "independent of n_docs"))
     # dictionary grows sublinearly; heap-law exponent ~0.5 on synthetic code —
     # project conservatively LINEAR in docs (upper bound)
     rows.append(("term dictionary (≤)", human(m["terms_table_bytes"] * scale),

@@ -17,6 +17,13 @@ is the table's sort order) and prints one line per table:
              byte-identical; footers are not compared, because parquet-mr
              lists a column chunk's encodings in an order that varies
              between JVM runs
+  OK bytes, parts reordered
+             the same files (by their data bytes) under other part
+             numbers. A narrow write over a scan (doclens over docs)
+             numbers its parts in the scan's split order, and Spark orders
+             splits by file size, largest first, so a change to the docs
+             files' sizes renumbers doclens parts; no reader depends on
+             part order
   OK rows    the rows are identical in order; the files split differently
   DIFF ...   the rows differ
 
@@ -154,11 +161,13 @@ def compare_table(a: str, b: str) -> str:
         return "OK rows" if ra is rb else "DIFF one side has no files"
     if ra.schema != rb.schema:
         return f"DIFF schema {ra.schema} vs {rb.schema}"
+    da = [_data_bytes(os.path.join(a, f)) for f in fa]
+    db = [_data_bytes(os.path.join(b, f)) for f in fb]
     if not ra.equals(rb):
+        if sorted(da) == sorted(db):
+            return f"OK bytes, parts reordered ({ra.num_rows} rows, {len(fa)} files)"
         return f"DIFF rows {ra.num_rows} vs {rb.num_rows}"
-    if len(fa) == len(fb) and all(
-            _data_bytes(os.path.join(a, x)) == _data_bytes(os.path.join(b, y))
-            for x, y in zip(fa, fb)):
+    if da == db:
         return f"OK bytes ({ra.num_rows} rows, {len(fa)} files)"
     return f"OK rows ({ra.num_rows} rows, files {len(fa)} vs {len(fb)})"
 
