@@ -371,17 +371,20 @@ def build_index(
 
     # ---- stage 2: corpus stats (N, avgdl) + doc-length norms ----
     # dl per doc is the BM25 length norm (Lucene-norms analogue). Stored as
-    # its own tiny table sorted by doc_id; the driver query kernel caches it
-    # as one numpy array, the distributed path joins it. One tokenize pass:
-    # N, total tokens and avgdl all come from the doclens read-back, so this
-    # stage never shuffles the exploded pairs.
+    # its own tiny table; the driver query kernel pages it by docID range
+    # (engine.NormsCache), the distributed path joins it. Each file holds
+    # one contiguous docID range, but part numbers follow Spark's split
+    # order (largest docs file first), not docID order: readers prune by
+    # the footers' doc_id min/max. One tokenize pass: N, total tokens and
+    # avgdl ride the doclens write, so this stage never shuffles the
+    # exploded pairs.
     doclens_path = os.path.join(out_dir, "doclens")
     if not stage("stats"):
         t0 = time.monotonic()
         from .tokenizer import doc_length_col
 
-        # the docs parquet is range-sorted by doc_id, so the narrow map
-        # below inherits that order — write without reshuffling. The write
+        # each docs file is one doc_id range, so each doclens file of the
+        # narrow map below is one too — write without reshuffling. The write
         # also observes whether ANY doc holds an alphanumeric run longer
         # than MAX_TERM_BYTES: such runs are DROPPED from the token stream,
         # so a regex literal occurring only inside one exists in no indexed

@@ -202,8 +202,8 @@ class TermPostings:
     the rare term's salt ranges of a df≈N list.
 
     ``lazy`` is read only where the two differ: the whole-term decode memo
-    (prefetched terms only, so it stays ≤ lazy_min_df × 16 B per term),
-    wand's θ bootstrap, and the engine's union-total budget rules.
+    (prefetched terms only, so it stays ≤ lazy_min_df × 16 B per term) and
+    wand's θ bootstrap.
 
     Counters (test-asserted): ``bytes_fetched`` payload bytes actually
     transferred; ``meta_shards_fetched`` shards whose block metadata was
@@ -215,7 +215,7 @@ class TermPostings:
 
     __slots__ = (
         "term", "df", "max_weight", "lazy", "_engine", "_salts", "_smin", "_smax",
-        "_smw", "_sdf", "_sstart", "_sbytes", "_snblocks", "_meta", "_payload", "_dec",
+        "_smw", "_sdf", "_sstart", "_snblocks", "_meta", "_payload", "_dec",
         "bytes_fetched", "total_payload_bytes", "meta_shards_fetched",
     )
 
@@ -249,7 +249,6 @@ class TermPostings:
         self._sdf = np.array([r["df"] for r in shards], dtype=np.int64)
         # posting offset of each shard in the term's docID order
         self._sstart = np.concatenate([[0], np.cumsum(self._sdf)])
-        self._sbytes = np.array([r["payload_bytes"] for r in shards], dtype=np.int64)
         self._snblocks = np.array([r["n_blocks"] for r in shards], dtype=np.int64)
         self.max_weight = float(self._smw.max()) if self._smw.size else 0.0
         self._meta: dict[int, PostingBlocks] = {}
@@ -258,7 +257,7 @@ class TermPostings:
         self._dec: tuple[np.ndarray, np.ndarray] | None = None
         self.bytes_fetched = 0
         self.meta_shards_fetched = 0
-        self.total_payload_bytes = int(self._sbytes.sum())
+        self.total_payload_bytes = int(sum(r["payload_bytes"] for r in shards))
         if not lazy:
             self._keep(shards, range(self.n_shards))
 
@@ -315,10 +314,6 @@ class TermPostings:
 
     def _ensure_payload(self, shard_idx) -> None:
         self._fetch(shard_idx, self._payload, self._engine._row_cols)
-
-    def _shards_for_docs(self, doc_ids: np.ndarray) -> np.ndarray:
-        s = np.searchsorted(self._smax, doc_ids, side="left")
-        return np.unique(s[s < self.n_shards])
 
     # ---- decoding ----
     def _memo(self) -> tuple[np.ndarray, np.ndarray] | None:
@@ -416,22 +411,6 @@ class TermPostings:
         k = int(np.searchsorted(self._sstart[1:], n)) + 1  # shards 0..k-1 cover n docs
         return self._shards_docs(range(min(k, self.n_shards)))[:n]
 
-    # ---- _union_total interface: block granularity ----
-    def block_ranges(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """(first_doc, max_doc, counts) per block, in docID order —
-        metadata only."""
-        self._ensure_meta(np.arange(self.n_shards))
-        m = [self._meta[s] for s in range(self.n_shards)]
-        return (np.concatenate([p.first_doc for p in m]), np.concatenate([p.max_doc for p in m]),
-                np.concatenate([p.counts for p in m]))
-
-    def decode_blocks_docs(self, block_idx: np.ndarray) -> np.ndarray:
-        """docIDs of the given (ascending) term-wide block indices."""
-        bstart = np.concatenate([[0], np.cumsum(self._snblocks)])
-        owner = np.searchsorted(bstart, block_idx, side="right") - 1
-        return self._kept_docs(
-            {int(s): block_idx[owner == s] - bstart[s] for s in np.unique(owner)})
-
     # ---- WAND seeding protocol (two-level: shard skip, then block skip) ----
     def seed_docs(self, bound_if_new: float, theta: float, idf_k: float) -> tuple[np.ndarray, int]:
         """Doc IDs of this term, decoding only blocks whose bound
@@ -479,12 +458,11 @@ class TermPostings:
 class SearchEngine:
     # df budget above which union-shaped work auto-routes to the distributed
     # plan (_search_distributed / _bm25_distributed): the driver never holds
-    # more than ~hot_route_df candidate docIDs. Class attribute so subclasses
-    # that skip __init__ (MultiSegmentEngine) inherit the posture.
+    # more than ~hot_route_df candidate docIDs. It also bounds the postings
+    # _union_total may decode per term before it counts on the cluster.
+    # Class attribute so subclasses that skip __init__ (MultiSegmentEngine)
+    # inherit the posture.
     hot_route_df: int = 5_000_000
-    # payload bytes the single-hot-term union-total probe may pull to the
-    # driver before it switches to the distributed distinct-count
-    union_probe_budget_bytes: int = 32 << 20
     # below this many total postings across a _decoded_for term list, the
     # pre-decode (term, shard) repartition is skipped — the work is too
     # small to straggle and the shuffle stage would be pure fixed latency
@@ -504,6 +482,8 @@ class SearchEngine:
     # Table.nbytes), so a repeated or overlapping page decodes nothing
     docs_cache_bytes: int = 64 << 20
     last_route: str = "kernel"  # diagnostics: "kernel" | "distributed"
+    # sorted deleted docIDs; MultiSegmentEngine sets its tombstones here
+    _deleted: np.ndarray = np.empty(0, np.int64)
     # True ⇒ stored block-max WEIGHTS are stale (baked under a different
     # avgdl than the live one — multi-segment, pre-compact) and every
     # pruning bound must be derived from block max_tf instead, which is
@@ -1264,76 +1244,46 @@ class SearchEngine:
         block-skipping on a live index (VERDICT r4 #1)."""
         return None
 
-    def _union_total_live(self, present: list) -> int:
-        """Hook: exact |∪ postings ∩ live docs| — equals _union_total when
-        nothing is deleted."""
-        return self._union_total(present)
-
     def _union_total(self, present: list) -> int:
-        """Exact |∪ postings| from block METADATA where possible: a block
-        whose [first,max] docID range intersects no other term's blocks holds
-        docs unique to its term (a shared doc would sit in an overlapping
-        block of the other term), so its count adds directly; only blocks
-        overlapping another term's range are decoded and deduped. For salted
-        range-bucketed lists disjoint salt ranges never decode at all.
+        """Exact |∪ postings ∩ live docs|, one salt at a time — the
+        analogue of Roaring ORing containers under one high-16-bit key
+        (SURVEY §1.1): a salt is a docID range of 2^salt_shift docs, so the
+        shards of different terms line up by salt.
 
-        On-demand (hot) terms never decode whole here: with ONE hot term,
-        |∪| = df_hot + |eager_union \\ hot| via a bounded membership probe
-        (inclusion–exclusion); with ≥2 hot terms the exact union count runs
-        as one distributed job (their ranges overlap everywhere, so the
-        metadata algebra would decode them fully on the driver)."""
-        if len(present) == 1:
-            return int(present[0].df)
-        hot = [p for p in present if p.lazy]
-        if len(hot) >= 2:
-            return int(
-                self._decoded_for([p.term for p in present])
-                .select("doc_id").distinct().count()
-            )
-        if len(hot) == 1:
-            h = hot[0]
-            eager = [p for p in present if p is not h]
-            rest = np.unique(np.concatenate([p.all_docs() for p in eager]))
-            # shard-summary range algebra BEFORE any payload fetch: an eager
-            # doc outside every shard's [min,max] range is provably not in
-            # the hot list; only range-containing shards are probe
-            # candidates. Their pending payload bytes are known from the
-            # summaries — over budget, the probe would pull ~the whole df≈N
-            # list onto the driver (ADVICE r3 medium), so run the same
-            # distributed distinct-count the ≥2-hot case uses instead.
-            sidx = np.searchsorted(h._smax, rest, side="left")
-            ok = sidx < h.n_shards
-            ok[ok] &= rest[ok] >= h._smin[sidx[ok]]
-            outside = int((~ok).sum())
-            shards = np.unique(sidx[ok])
-            pending = np.array(
-                [s for s in shards if int(s) not in h._payload], dtype=np.int64
-            )
-            est_bytes = int(h._sbytes[pending].sum()) if pending.size else 0
-            if est_bytes <= self.union_probe_budget_bytes:
-                return int(h.df) + outside + int((h.lookup_tfs(rest[ok]) == 0).sum())
-            return int(
-                self._decoded_for([p.term for p in present])
-                .select("doc_id").distinct().count()
-            )
-        ranges = [p.block_ranges() for p in present]
-        decode_idx: list[np.ndarray] = []
-        total = 0
-        for i, (fi, mi, ci) in enumerate(ranges):
-            overlap = np.zeros(fi.size, dtype=bool)
-            for j, (fj, mj, _cj) in enumerate(ranges):
-                if i == j or fj.size == 0:
+          * a salt whose shards all belong to one term, with no deleted
+            docID in their [min_doc, max_doc], adds their summary df — no
+            fetch, no decode (a lone term is Σ df);
+          * past hot_route_df postings to decode from any one term, the
+            count runs as one distributed distinct count;
+          * else every other salt decodes its shards (``_shards_docs``),
+            adds its distinct live docIDs and drops them: the driver holds
+            one salt's docIDs at a time."""
+        dead = self._deleted
+        by_salt: dict[int, dict] = {}  # salt -> {term: its shards in that salt}
+        hit = {}  # term -> per shard: a deleted docID lies in [min_doc, max_doc]
+        for p in present:
+            hit[p] = np.searchsorted(dead, p._smin) < np.searchsorted(dead, p._smax, side="right")
+            for s, salt in enumerate(p._salts):
+                by_salt.setdefault(salt, {}).setdefault(p, []).append(s)
+        total, pending, need = 0, [], {}
+        for owners in by_salt.values():
+            if len(owners) == 1:
+                ((p, sh),) = owners.items()
+                if not hit[p][sh].any():
+                    total += int(p._sdf[sh].sum())
                     continue
-                # block b of i overlaps some block of j iff the last j-block
-                # starting ≤ mi[b] ends ≥ fi[b]; j's blocks are disjoint+sorted
-                k = np.searchsorted(fj, mi, side="right") - 1
-                ok = k >= 0
-                overlap[ok] |= mj[k[ok]] >= fi[ok]
-            total += int(ci[~overlap].sum())
-            decode_idx.append(np.flatnonzero(overlap))
-        dec = [p.decode_blocks_docs(idx) for p, idx in zip(present, decode_idx) if idx.size]
-        if dec:
-            total += int(np.unique(np.concatenate(dec)).size)
+            pending.append(owners)
+            for p, sh in owners.items():
+                need.setdefault(p, []).extend(sh)
+        if any(int(p._sdf[sh].sum()) > self.hot_route_df for p, sh in need.items()):
+            return int(self._live_filter_df(
+                self._decoded_for([p.term for p in present]).select("doc_id").distinct()
+            ).count())
+        for p, sh in need.items():
+            p._ensure_payload(sh)  # one fetch per on-demand term
+        for owners in pending:
+            docs = np.unique(np.concatenate([p._shards_docs(sh) for p, sh in owners.items()]))
+            total += docs.size - int(np.isin(docs, dead, assume_unique=True).sum())
         return total
 
     def search_bm25_wand(self, q: Query, exact_total: bool = True) -> SearchResult:
@@ -1348,10 +1298,11 @@ class SearchEngine:
         cannot enter the page. total is exactly |candidates| — free.
 
         Contain-only queries seed purely from block maxima; exact_total=True
-        computes the union cardinality from block metadata, decoding only
-        blocks whose ranges overlap another term's (exact, usually cheap).
-        exact_total=False skips it (total = -1) — the latency-optimal mode
-        when callers only need the page."""
+        counts the union one salt at a time (_union_total): a salt held by
+        one term adds its shard summaries' df, only salts shared by terms
+        (or holding a deleted doc) decode. exact_total=False skips it
+        (total = -1) — the latency-optimal mode when callers only need the
+        page."""
         if not q.contain and not q.require:
             return self.search_bm25(q)  # default page / exclude-only quirk path
         from .wand import wand_topk
@@ -1397,7 +1348,7 @@ class SearchEngine:
             # skipping stays rank-safe — deletes only shrink the candidate
             # pool, never raise any bound
             candidate_filter = self._live_docs_filter()
-            total = self._union_total_live(present) if exact_total else -1
+            total = self._union_total(present) if exact_total else -1
         res = wand_topk(
             [(self.idf(p.df), p) for p in present],
             k_eff,

@@ -614,40 +614,6 @@ class MultiSegmentEngine(SearchEngine):
 
         return live
 
-    def _union_total_live(self, present):
-        total = self._union_total(present)
-        if not self._deleted.size:
-            return total
-        import numpy as np
-
-        # Driver probes on an on-demand term fetch the payload of every shard
-        # a tombstone falls in — for a scattered delete set that is the whole
-        # list, the exact blow-up on-demand serving exists to prevent. Budget
-        # the would-be fetch; past it, count |union ∩ tombstones| as ONE
-        # distributed job (decode pruned cluster-side, broadcast-semi-join
-        # the delete set) — no shard payload reaches the driver.
-        est = 0
-        for p in present:
-            if p.lazy:
-                sh = p._shards_for_docs(self._deleted)
-                est += int(p._sbytes[sh].sum())
-        if est > self.union_probe_budget_bytes:
-            dead_df = local_frame(
-                self.spark, [(int(d),) for d in self._deleted], "doc_id long")
-            dead = (self._decoded_for([p.term for p in present])
-                    .select("doc_id").distinct()
-                    .join(F.broadcast(dead_df), "doc_id", "left_semi").count())
-            return total - int(dead)
-        # |union ∩ tombstones| via per-term membership probes of the (small,
-        # budget-bounded) delete set: lookup_tfs block-skips, so this costs
-        # O(|tombstones| log) per term, never a union decode
-        dead_in_union = np.zeros(self._deleted.size, dtype=bool)
-        for p in present:
-            dead_in_union |= p.lookup_tfs(self._deleted) > 0
-            if dead_in_union.all():
-                break
-        return total - int(dead_in_union.sum())
-
     def search_bm25_wand(self, q, exact_total: bool = True):
         """The pruned kernel runs whenever its bounds are safe:
 
@@ -664,7 +630,7 @@ class MultiSegmentEngine(SearchEngine):
         Driver-side tombstones stay ON the pruned kernel: mixed-mode
         candidates come from the (delete-filtered) _bool_kernel, contain-only
         seeding threads _live_docs_filter through wand.absorb, and the exact
-        total subtracts |union ∩ tombstones| (_union_total_live). Only
+        total decodes every salt holding a tombstone (_union_total). Only
         distributed tombstones (_tomb_df — the kernel cannot see the delete
         set) delegate; their clause-ful queries route distributed anyway."""
         if self._tomb_df is not None or (not self._fresh_avgdl and not self._tf_bounds):

@@ -135,6 +135,7 @@ def test_capacity_model_measures_real_index(spark, code_docs, tmp_path_factory):
     assert 0 < m["bits_per_posting_payload"] < 64
     rows1 = dict((r[0], r[1]) for r in project(m, 10**9, 10**6))
     assert "driver norms cache" in rows1 and "lazy summaries @ df=1e+06" in rows1
+    assert "union count (transient)" in rows1
 
 
 def test_capacity_model_serving_budget_at_1e12(spark, code_docs, tmp_path_factory):

@@ -359,9 +359,10 @@ def test_compact_in_place_retry_discards_crashed_partial_build(spark, tmp_path_f
 
 def test_union_total_live_budget_routes_probe_distributed(spark, tmp_path_factory):
     """Scattered tombstones against a LAZY union term must not pull shard
-    payloads to the driver past union_probe_budget_bytes: with budget 0 the
-    |union ∩ tombstones| count runs as one distributed job (driver probes
-    forbidden via monkeypatch) and the exact total is unchanged."""
+    payloads to the driver past hot_route_df: with hot_route_df between the
+    two terms' dfs the WAND route stays on the kernel, while the exact
+    |union ∩ live docs| count runs as one distributed job (its driver
+    decode forbidden via monkeypatch) and the exact total is unchanged."""
     from edgesearch_spark.engine import TermPostings
 
     root = str(tmp_path_factory.mktemp("probedist"))
@@ -369,33 +370,29 @@ def test_union_total_live_budget_routes_probe_distributed(spark, tmp_path_factor
     rows = [(f"d{i:04d}", "score " + f"word{i % 7}") for i in range(300)]
     idx.ingest_batch(spark.createDataFrame(rows, "path string, content string"), 0)
     idx.delete_docs(list(range(0, 300, 3)))  # scattered: hits every shard
+    q = Query.make(contain=["score", "word0"], k=5)  # df 300 and 43
 
-    def run():
+    def run(hot_route_df=None):
         eng = idx.engine()
-        eng.lazy_min_df = 10  # the union term serves lazily
+        eng.lazy_min_df = 10  # the union terms serve lazily
+        if hot_route_df is not None:
+            eng.hot_route_df = hot_route_df
         eng._cache.clear()
-        return eng, eng.search_bm25_wand(Query.make(contain=["score"], k=5))
+        return eng, eng.search_bm25_wand(q)
 
-    eng_a, a = run()  # driver-probe path (default budget)
+    eng_a, a = run()  # driver count (default hot_route_df)
 
-    orig = TermPostings.lookup_tfs
+    orig = TermPostings._shards_docs
 
-    deleted = np.arange(0, 300, 3)
+    def forbidden(self, shards):
+        raise AssertionError("driver union count decoded past hot_route_df")
 
-    def forbidden(self, doc_ids):
-        # scoring probes on candidates stay legal; only the TOMBSTONE
-        # membership probe is past-budget
-        if doc_ids.size == deleted.size and np.array_equal(doc_ids, deleted):
-            raise AssertionError("driver tombstone probe ran past the byte budget")
-        return orig(self, doc_ids)
-
-    type(eng_a).union_probe_budget_bytes = 0
-    TermPostings.lookup_tfs = forbidden
+    TermPostings._shards_docs = forbidden
     try:
-        eng_b, b = run()
+        eng_b, b = run(hot_route_df=100)
     finally:
-        TermPostings.lookup_tfs = orig
-        del type(eng_a).union_probe_budget_bytes
+        TermPostings._shards_docs = orig
+    assert eng_b.last_route == "kernel"
     assert a.total == b.total == 300 - 100
     assert list(a.doc_ids) == list(b.doc_ids)
 

@@ -188,16 +188,16 @@ def test_two_level_meta_bounded_on_require_rare(spark, index_dir):
 
 
 def test_union_total_with_hot_terms_exact(engines):
-    """Exact totals via inclusion-exclusion probe (1 hot) and the
-    distributed distinct-count (≥2 hot) — never a full driver decode."""
+    """Exact totals with on-demand terms, counted one salt at a time on the
+    driver (1 hot + eager, 2 hot) — equal to exhaustive BM25's."""
     eager, kernel, _ = engines
-    # 1 hot + eager: probe path
+    # 1 hot + eager
     q = Query.make(contain=["hot", "rare"], k=5)
     a = eager.search_bm25(q)
     w = kernel.search_bm25_wand(q, exact_total=True)
     assert w.total == a.total == N  # 'hot' covers every doc
     assert list(w.doc_ids) == list(a.doc_ids)
-    # 2 hot: distributed count path
+    # 2 hot
     q2 = Query.make(contain=["hot", "third"], k=5)
     a2 = eager.search_bm25(q2)
     w2 = kernel.search_bm25_wand(q2, exact_total=True)
@@ -206,18 +206,35 @@ def test_union_total_with_hot_terms_exact(engines):
     assert list(w2.scores) == list(a2.scores)
 
 
+def test_union_total_two_hot_terms_runs_no_job(engines):
+    """Two on-demand terms, each under hot_route_df: the exact total is
+    counted salt by salt on the driver — zero Spark jobs once the terms'
+    summaries are in (it used to be a distributed distinct count, 3 jobs),
+    and the page, total and scores equal exhaustive BM25."""
+    eager, kernel, _ = engines
+    q = Query.make(contain=["third", "seventh"], k=10)
+    tp = kernel.fetch_terms(["third", "seventh"])  # the level-1 summary scans
+    assert tp["third"].lazy and tp["seventh"].lazy
+    assert max(p.df for p in tp.values()) <= kernel.hot_route_df
+    w, jobs = jobs_run(kernel.spark, lambda: kernel.search_bm25_wand(q, exact_total=True))
+    assert jobs == 0, jobs
+    assert kernel.last_route == "kernel"
+    _same(eager.search_bm25(q), w)
+
+
 def test_union_total_single_hot_probe_budgeted(spark, index_dir):
-    """ADVICE r3 (medium): the 1-hot exact-total probe must not pull ~every
-    shard of a df≈N term onto the driver. Over the payload budget it runs
-    the same distributed distinct-count as the ≥2-hot case — identical
-    total, bounded bytes_fetched."""
+    """The exact-total count must not pull ~every shard of a df≈N term onto
+    the driver: past hot_route_df postings to decode from one term it runs
+    one distributed distinct count — identical total, bounded
+    bytes_fetched. hot_route_df = df(rare) = 20 keeps the WAND route on the
+    kernel (min df 20), while 'hot' holds 256 postings in rare's two salts."""
     free = SearchEngine(spark, index_dir, lazy_min_df=100, hot_route_df=10**9)
-    tight = SearchEngine(spark, index_dir, lazy_min_df=100, hot_route_df=10**9)
-    tight.union_probe_budget_bytes = 0  # any pending payload ⇒ distributed
+    tight = SearchEngine(spark, index_dir, lazy_min_df=100, hot_route_df=len(RARE))
 
     q = Query.make(contain=["hot", "rare"], k=5)
     a = free.search_bm25_wand(q, exact_total=True)
     b = tight.search_bm25_wand(q, exact_total=True)
+    assert tight.last_route == "kernel"
     assert a.total == b.total == N
     assert list(a.doc_ids) == list(b.doc_ids)
     h = tight.fetch_terms(["hot"])["hot"]

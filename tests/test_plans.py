@@ -354,8 +354,8 @@ def test_regex_literal_maps_are_local_relations(spark, index_dir, tmp_path):
 
 
 def test_tombstone_frames_are_local_relations(spark, tmp_path):
-    """The delete list, the anti-join tombstone set and the distributed
-    |union ∩ tombstones| probe's set are local relations."""
+    """The delete list, the anti-join tombstone set and the tombstones of
+    the distributed |union ∩ live docs| count are local relations."""
     from edgesearch_spark.oracle import Query
     from edgesearch_spark.streaming.incremental import IncrementalIndexer
 
@@ -369,14 +369,16 @@ def test_tombstone_frames_are_local_relations(spark, tmp_path):
     assert_local_relations(frames)
 
     eng = idx.engine()
-    eng.union_probe_budget_bytes = -1  # count the dead union members on the cluster
+    # 'word0' (df 9) keeps the WAND route on the kernel; 'score' (df 60)
+    # puts the union count past hot_route_df, so it runs on the cluster
+    eng.hot_route_df = 30
     live = [d for d in range(60) if d not in dead]
     with literal_frames(spark) as frames:
-        got = sorted(r["doc_id"] for r in eng.search_df(Query.make(contain=["score"])).collect())
-        res = eng.search_bm25_wand(Query.make(contain=["score"], k=5))
+        got = sorted(r["doc_id"] for r in eng.search_df(Query.make(contain=["score", "word0"])).collect())
+        res = eng.search_bm25_wand(Query.make(contain=["score", "word0"], k=5))
     assert got == live and res.total == len(live)
     assert_local_relations(frames)
-    # tmeta, the anti-join tombstones, the probe's dead set
+    # the tombstones anti-joined by search_df and by the distributed count
     assert sorted(f.columns for f in frames).count(["doc_id"]) == 2, [f.columns for f in frames]
 
 

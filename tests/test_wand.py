@@ -11,6 +11,7 @@ from edgesearch_spark.build import IndexConfig, build_index
 from edgesearch_spark.corpus import generate_corpus, generate_corpus_pandas
 from edgesearch_spark.engine import SearchEngine
 from edgesearch_spark.oracle import BruteForceOracle, Query
+from edgesearch_spark.streaming.incremental import IncrementalIndexer
 
 N_DOCS = 500
 
@@ -83,14 +84,67 @@ def test_wand_mixed_mode_rank_identical(engine, oracle):
         assert np.allclose(got.scores, want.scores, atol=1e-9), q
 
 
-def test_union_total_metadata_path(engine, oracle):
-    """_union_total (metadata counts + overlap-only decode) must equal the
-    brute union cardinality for every contain query."""
+SALTED_N = 1024  # 8 salts at salt_shift 7
+SALTED_RARE = list(range(100, 110)) + list(range(140, 150))  # salts 0 and 1
+
+
+@pytest.fixture(scope="module")
+def salted(spark, tmp_path_factory):
+    """'hot' in every doc, 'rare' in salts 0 and 1, 'third' in every third
+    doc: one single-shot index, and the same rows as two segments whose
+    boundary (doc 200) splits salt 1."""
+    cfg = IndexConfig(block_size=16, salt_shift=7)
+    rows = [(i, "hot" + (" rare" if i in SALTED_RARE else "") + (" third" if i % 3 == 0 else ""))
+            for i in range(SALTED_N)]
+    out = str(tmp_path_factory.mktemp("saltidx"))
+    build_index(spark, spark.createDataFrame(rows, "doc_id long, content string"), out, cfg,
+                doc_id_col="doc_id", content_col="content")
+    idx = IncrementalIndexer(spark, str(tmp_path_factory.mktemp("saltsegs")), cfg,
+                             order_cols=("path",), content_col="content")
+    for epoch, (lo, hi) in enumerate(((0, 200), (200, SALTED_N))):
+        batch = [(f"d{i:05d}", text) for i, text in rows[lo:hi]]
+        idx.ingest_batch(spark.createDataFrame(batch, "path string, content string"), epoch)
+    return out, idx
+
+
+def test_union_total_metadata_path(spark, engine, oracle, salted):
+    """_union_total (summary df for a salt one term holds, a decode of the
+    other salts one at a time) must equal the brute union cardinality: for
+    every contain query; over on-demand terms, where the salts one term
+    holds fetch nothing; over segments that split a salt; and with a
+    tombstone inside a salt one term holds."""
     for q in WAND_QUERIES:
         present = [p for p in engine.fetch_terms(list(q.contain)).values() if p is not None]
         got = engine._union_total(present)
         want = int(np.unique(np.concatenate([p.all_docs() for p in present])).size)
         assert got == want, q
+
+    out, idx = salted
+    fresh = SearchEngine(spark, out, lazy_min_df=10)
+    hot, rare = (fresh.fetch_terms(["hot", "rare"])[t] for t in ("hot", "rare"))
+    assert hot.lazy and rare.lazy and hot.n_shards == 8
+    assert fresh._union_total([hot, rare]) == SALTED_N
+    # only hot's shards in rare's two salts were fetched
+    assert sorted(hot._payload) == sorted(hot._meta) == [hot._salts.index(s) for s in rare._salts] == [0, 1]
+
+    def check(eng, sets):
+        eager = type(eng)(eng.spark, eng._segment_dirs, tombstones=eng._deleted.tolist())
+        for terms in sets:
+            want = np.setdiff1d(
+                np.concatenate([p.all_docs() for p in eager.fetch_terms(terms).values()]), eng._deleted)
+            assert eng._union_total(list(eng.fetch_terms(terms).values())) == want.size, terms
+
+    sets = (["hot", "rare"], ["rare", "third"], ["hot", "third"], ["rare"], ["third"])
+    multi = idx.engine()
+    multi.lazy_min_df = 10
+    assert multi.fetch_terms(["hot"])["hot"]._salts.count(1) == 2  # salt 1 split across segments
+    check(multi, sets)
+    idx.delete_docs([600])  # salt 4, which 'hot' alone holds in hot ∪ rare
+    dead = idx.engine()
+    dead.lazy_min_df = 10
+    assert dead._deleted.tolist() == [600]
+    assert dead._union_total(list(dead.fetch_terms(["hot", "rare"]).values())) == SALTED_N - 1
+    check(dead, sets)
 
 
 def test_wand_actually_prunes(engine):

@@ -14,7 +14,8 @@ projects a target deployment (default 10^12 docs — the north rule's scale):
   * term dictionary + bloom sidecar bytes, and what the DRIVER holds of
     the bloom (an LRU of the ranges queries touch);
   * serving-node memory: norms cache (int32/doc), the shard summaries of a
-    df-hot term served on demand (rows = df / 2^salt_shift);
+    df-hot term served on demand (rows = df / 2^salt_shift), and the
+    transient docIDs of an exact union count (one salt per query term);
   * executor-side shuffle volume of a rebuild (pack blobs ≈ payload bytes).
 
 Every projected line prints the measured constant it scales from, so the
@@ -56,6 +57,7 @@ def measure(index_dir: str) -> dict:
         "total_tokens": stats.get("total_tokens", 0),
         "avgdl": stats["avgdl"],
         "salt_shift": stats["salt_shift"],
+        "max_query_terms": stats.get("max_query_terms", 50),
         "total_postings": n_post,
         "postings_per_doc": n_post / n_docs,
         "bits_per_posting_payload": 8 * post["payload_bytes"] / n_post,
@@ -117,6 +119,15 @@ def project(m: dict, target_docs: int, hot_df: int) -> list[tuple[str, str, str]
     shard_rows = hot_df / (1 << m["salt_shift"])
     rows.append((f"lazy summaries @ df={hot_df:.0e}", human(shard_rows * 40),
                  f"{shard_rows:,.0f} shard rows × ~40 B (two-level lazy, level 1)"))
+    # the exact total of a contain-only WAND query (engine._union_total)
+    # decodes one salt at a time: ≤ 2^salt_shift int64 docIDs per query term
+    # at once. Fetched payload stops at hot_route_df postings per term; past
+    # that the count runs on the cluster.
+    q_terms, salt_docs = m["max_query_terms"], 1 << m["salt_shift"]
+    rows.append(("union count (transient)", human(q_terms * salt_docs * 8),
+                 f"{q_terms} query terms × 2^{m['salt_shift']} docIDs × 8 B (one salt at a "
+                 f"time); payload ≤ hot_route_df = {_SE.hot_route_df:,} postings "
+                 f"(~{human(_SE.hot_route_df * m['bits_per_posting_payload'] / 8)}) per term"))
     rows.append(("rebuild shuffle volume", human(target_docs * ppd * 24),
                  "~24 B/posting through the ONE (term,salt) shuffle (pack blobs)"))
     if m.get("bigram_bytes"):
