@@ -126,10 +126,6 @@ class PostingBlocks:
     def n_blocks(self) -> int:
         return int(self.counts.size)
 
-    @property
-    def n_postings(self) -> int:
-        return int(self.counts.sum())
-
 
 def _empty_blocks() -> PostingBlocks:
     return PostingBlocks(

@@ -743,14 +743,9 @@ class SearchEngine:
         return False
 
     # ---- boolean result set (reference semantics incl. quirks) ----
-    def _result_docs(self, q: Query) -> np.ndarray | None:
-        """Sorted docID array, or None ⇒ default-results path."""
-        tp = self._fetch_query_terms(q)
-        if any(tp[t] is None for t in q.require):
-            return np.empty(0, np.int64)  # missing REQUIRE → instant empty
-        return self._bool_kernel(q, tp)
-
     def _bool_kernel(self, q: Query, tp: dict) -> np.ndarray | None:
+        """Sorted docID array, or None ⇒ default-results path. Callers
+        answer a missing REQUIRE term (empty) before calling this."""
         contain = [t for t in q.contain if tp[t] is not None]
         exclude = [t for t in q.exclude if tp[t] is not None]
         if not q.require and not contain and not exclude:
@@ -1373,9 +1368,10 @@ class SearchEngine:
         are read on the driver (``LocalTable.take``): the store is
         docID-sorted parquet in small row groups, so footer min/max stats
         pick the row groups that can hold a page id, and decoded groups
-        stay in an LRU (``docs_cache_bytes``). Neither the read nor
-        collecting the frame runs a Spark job. For ID sets too large to hold on the driver, use
-        ``fetch_docs_df``."""
+        stay in an LRU (``docs_cache_bytes``). The rows reach Spark
+        through ``session.arrow_frame`` in two JVM calls. Neither the read
+        nor collecting the frame runs a Spark job. For ID sets too large
+        to hold on the driver, use ``fetch_docs_df``."""
         tbl = self._local_table("docs").take(
             self._docs_df.columns, {"doc_id": [int(d) for d in doc_ids]})
         return arrow_frame(self.spark, tbl, self._docs_df.schema)

@@ -156,7 +156,6 @@ class LocalTable:
     def _scan(self, columns: list[str], keep: dict, mask) -> pa.Table:
         """``columns`` of the rows ``mask(table)`` selects, decoding only
         the row groups whose bounds pass every ``keep[column](lo, hi)``."""
-        empty = self._empty(columns)
         bounds = {c: self._key_bounds(c) for c in keep}
         read = list(dict.fromkeys([*columns, *keep]))
         parts = []
@@ -166,7 +165,9 @@ class LocalTable:
                     t = self._row_group(f, pf, g, read)
                     parts.append(t.filter(mask(t)).select(columns))
         # segments written from different inputs may differ in nullability
-        return pa.concat_tables(parts, promote_options="default") if parts else empty
+        if not parts:
+            return self._empty(columns)
+        return pa.concat_tables(parts, promote_options="default")
 
     def _row_group(self, f: int, pf: pq.ParquetFile, g: int, read: list[str]) -> pa.Table:
         """Row group ``g`` of file ``f``, ``read`` columns, through the LRU:

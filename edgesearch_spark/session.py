@@ -1,15 +1,29 @@
-"""SparkSession factory with the configs this engine assumes.
+"""SparkSession factory with the configs this engine assumes, and the
+hand-off of driver Arrow tables to Spark.
 
 Local mode for tests/bench; on a real cluster these configs come from
 spark-submit. AQE on (runtime re-plan + skew-join), Arrow on (pandas-UDF
 hot paths), UTC timezone (DuckDB-oracle comparability).
+
+``arrow_frame`` (and ``local_frame`` on top of it) turns a driver-side
+``pyarrow.Table`` into a local relation. With a ``StructType`` schema it
+runs ``createDataFrame``'s Arrow path in 2 JVM calls, where
+``createDataFrame`` makes 21. Per session it caches the bound
+``PythonSQLUtils.readArrowStreamFromFile`` and ``toDataFrame`` members,
+the JVM session, ``arrowMaxRecordsPerBatch`` and ``arrowUseLargeVarTypes``;
+per schema, its JSON and Arrow schema. ``createDataFrame`` runs instead
+when there is no schema, when the schema holds a timestamp or date, when
+I/O encryption is on, or when those members are missing (found out once
+per session).
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
 import tempfile
+import weakref
 import zipfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -131,13 +145,133 @@ def get_spark(
     return spark
 
 
+class _Handoff:
+    """One session's JVM handles for ``arrow_frame``: the two bound
+    ``PythonSQLUtils`` members (looked up once, so no reflection call runs
+    per frame), the JVM session, and the two Arrow settings read from its
+    conf when first used."""
+
+    __slots__ = ("jsession", "read_stream", "to_frame", "chunk_rows", "large_types")
+
+    def __init__(self, spark: SparkSession):
+        from py4j.java_gateway import JavaMember
+
+        self.read_stream, self.to_frame = _sql_utils_members(spark)
+        # a class py4j cannot find resolves to a JavaPackage, not an error
+        if not (isinstance(self.read_stream, JavaMember) and isinstance(self.to_frame, JavaMember)):
+            raise AttributeError("PythonSQLUtils Arrow hand-off members not found")
+        self.jsession = spark._jsparkSession
+        conf = spark._jconf
+        self.chunk_rows = conf.arrowMaxRecordsPerBatch()
+        self.large_types = conf.arrowUseLargeVarTypes()
+
+
+def _sql_utils_members(spark: SparkSession):
+    """The bound JVM members ``createDataFrame``'s Arrow path calls."""
+    utils = spark._jvm.PythonSQLUtils
+    return utils.readArrowStreamFromFile, utils.toDataFrame
+
+
+# SparkSession → its _Handoff, or None once the fast path is known to be
+# unusable in it (internals missing, or I/O encryption on)
+_HANDOFFS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _handoff(spark: SparkSession) -> _Handoff | None:
+    h = _HANDOFFS.get(spark, False)
+    if h is False:
+        from py4j.protocol import Py4JError
+
+        h = None
+        # with I/O encryption PySpark sends the stream over an authenticated
+        # socket rather than write plain data to disk; leave that to it
+        if not spark.sparkContext._encryption_enabled:
+            try:
+                h = _Handoff(spark)
+            except (AttributeError, Py4JError):
+                pass
+        _HANDOFFS[spark] = h
+    return h
+
+
+def _has_time(dt) -> bool:
+    """Whether ``dt`` holds a timestamp or date anywhere: PySpark localizes
+    those to the session time zone on the way in."""
+    from pyspark.sql.types import (ArrayType, DateType, MapType, StructType,
+                                   TimestampNTZType, TimestampType)
+
+    if isinstance(dt, (TimestampType, TimestampNTZType, DateType)):
+        return True
+    if isinstance(dt, StructType):
+        return any(_has_time(f.dataType) for f in dt.fields)
+    if isinstance(dt, ArrayType):
+        return _has_time(dt.elementType)
+    if isinstance(dt, MapType):
+        return _has_time(dt.keyType) or _has_time(dt.valueType)
+    return False
+
+
+@functools.lru_cache(maxsize=64)
+def _schema_plan(schema, large_types: bool):
+    """``(schema JSON, Arrow schema to cast to)`` for a ``StructType``, or
+    None when it needs PySpark's time-zone step."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if _has_time(schema):
+        return None
+    return schema.json(), to_arrow_schema(
+        schema, error_on_duplicated_field_names_in_struct=True,
+        prefers_large_types=large_types)
+
+
 def arrow_frame(spark: SparkSession, table, schema=None) -> DataFrame:
     """A driver-side ``pyarrow.Table`` as a local relation (a
     ``LocalTableScan``: no Spark job), cast to ``schema`` when given. The
     chunks are combined first: PySpark 4.1's ``createDataFrame(pa.Table)``
     silently drops every record batch after an empty one, and a filtered
-    read yields empty chunks."""
-    return spark.createDataFrame(table.combine_chunks(), schema=schema)
+    read yields empty chunks.
+
+    Given a ``StructType``, this is ``createDataFrame``'s Arrow path in two
+    JVM calls: write the batches to a temp file, ``readArrowStreamFromFile``,
+    ``toDataFrame``. Per session it caches the two bound ``PythonSQLUtils``
+    members, the JVM session, ``arrowMaxRecordsPerBatch`` and
+    ``arrowUseLargeVarTypes`` (read once: a later change to either conf is
+    not seen); per schema, its JSON and Arrow schema. ``createDataFrame``
+    itself runs instead when ``schema`` is None, when the schema holds a
+    timestamp or date (it localizes those to the session time zone), when
+    I/O encryption is on, or when the installed PySpark lacks those
+    members."""
+    from pyspark.sql.types import StructType
+
+    table = table.combine_chunks()
+    h = _handoff(spark) if isinstance(schema, StructType) else None
+    plan = _schema_plan(schema, h.large_types) if h is not None else None
+    if plan is None:
+        return spark.createDataFrame(table, schema=schema)
+    from pyspark.sql.pandas.serializers import ArrowStreamSerializer
+
+    schema_json, arrow_schema = plan
+    batches = table.cast(arrow_schema).to_batches(max_chunksize=h.chunk_rows)
+    fd, path = tempfile.mkstemp(dir=spark.sparkContext._temp_dir)
+    try:
+        with os.fdopen(fd, "wb") as fh:
+            ArrowStreamSerializer().dump_stream(batches, fh)
+        jiter = h.read_stream(path)  # reads the whole file before returning
+    finally:
+        os.unlink(path)
+    df = DataFrame(h.to_frame(jiter, schema_json, h.jsession), spark)
+    df._schema = schema
+    return df
+
+
+@functools.lru_cache(maxsize=64)
+def _ddl_schema(ddl: str):
+    """``(StructType, Arrow schema)`` of a DDL column list."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(ddl)
+    return struct, to_arrow_schema(struct)
 
 
 def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
@@ -149,10 +283,8 @@ def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
     converted to exactly its DDL type, so a ``double`` column carries the
     driver's float64 values bit for bit."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
 
-    schema = to_arrow_schema(StructType.fromDDL(ddl))
+    struct, schema = _ddl_schema(ddl)
     cols = list(zip(*rows)) or [()] * len(schema)
     return arrow_frame(spark, pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema))
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema), struct)

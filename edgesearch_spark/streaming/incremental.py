@@ -581,8 +581,10 @@ class MultiSegmentEngine(SearchEngine):
 
     def fetch_docs(self, doc_ids):
         if self._deleted.size:
-            dead = set(self._deleted.tolist())
-            doc_ids = [d for d in doc_ids if int(d) not in dead]
+            import numpy as np
+
+            ids = np.asarray(doc_ids, dtype=np.int64)
+            doc_ids = ids[self._not_deleted_mask(ids)].tolist()
         out = super().fetch_docs(doc_ids)
         if self._tomb_df is not None:
             out = out.join(self._tomb_df, "doc_id", "left_anti")

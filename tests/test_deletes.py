@@ -67,6 +67,13 @@ def test_deletes_filter_all_query_modes(spark, indexed):
     # doc fetch refuses deleted ids
     got = {r["doc_id"] for r in eng.fetch_docs(list(victims) + want[:2]).collect()}
     assert got == set(want[:2])
+    # a page that repeats ids and interleaves live and deleted ones: each
+    # live id comes back once, no deleted id comes back
+    v = sorted(victims)
+    page = [v[0], want[0], v[1], want[0], want[1], v[0], want[2], v[-1]]
+    rows = eng.fetch_docs(page).collect()
+    assert sorted(r["doc_id"] for r in rows) == sorted(want[:3])
+    assert eng.fetch_docs(v).collect() == []
 
 
 def test_default_page_skips_deleted(spark, indexed):

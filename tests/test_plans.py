@@ -105,12 +105,15 @@ def test_relational_paths_have_no_python_eval(spark):
 @contextlib.contextmanager
 def literal_frames(spark):
     """Collects every frame built from driver-side data (anything but an
-    RDD) through ``createDataFrame`` inside the block."""
+    RDD) inside the block: through ``createDataFrame``, or through
+    ``session.arrow_frame``, whose cached hand-off does not call it."""
     from pyspark import RDD
+
+    from edgesearch_spark import session
 
     frames = []
     cls = type(spark)
-    orig = cls.createDataFrame
+    orig, orig_arrow = cls.createDataFrame, session.arrow_frame
 
     def spy(self, data, *a, **kw):
         df = orig(self, data, *a, **kw)
@@ -118,11 +121,16 @@ def literal_frames(spark):
             frames.append(df)
         return df
 
-    cls.createDataFrame = spy
+    def arrow_spy(*a, **kw):
+        df = orig_arrow(*a, **kw)
+        frames.append(df)
+        return df
+
+    cls.createDataFrame, session.arrow_frame = spy, arrow_spy
     try:
         yield frames
     finally:
-        cls.createDataFrame = orig
+        cls.createDataFrame, session.arrow_frame = orig, orig_arrow
 
 
 def assert_local_relations(frames):

@@ -95,8 +95,10 @@ def test_search_df_never_materializes_candidates(spark, docs, tmp_path_factory):
     import pandas as pd
     import pyarrow as pa
 
+    from edgesearch_spark import session
+
     sizes = []
-    orig = type(spark).createDataFrame
+    orig, orig_arrow = type(spark).createDataFrame, session.arrow_frame
 
     def spy(self, data, *a, **kw):
         # every driver-side input form: Python rows, and the Arrow tables
@@ -107,7 +109,12 @@ def test_search_df_never_materializes_candidates(spark, docs, tmp_path_factory):
             sizes.append(len(data))
         return orig(self, data, *a, **kw)
 
-    type(spark).createDataFrame = spy
+    def arrow_spy(spark_, table, *a, **kw):
+        # arrow_frame's cached hand-off does not call createDataFrame
+        sizes.append(table.num_rows)
+        return orig_arrow(spark_, table, *a, **kw)
+
+    type(spark).createDataFrame, session.arrow_frame = spy, arrow_spy
     try:
         cands = eng.search_df(Query.make(require=["spark", "sql"]))
         got = sorted(
@@ -116,7 +123,7 @@ def test_search_df_never_materializes_candidates(spark, docs, tmp_path_factory):
             .filter(phrase_col("content", ["spark", "sql"])).collect()
         )
     finally:
-        type(spark).createDataFrame = orig
+        type(spark).createDataFrame, session.arrow_frame = orig, orig_arrow
     assert got  # the query does match docs
     # only the tiny per-term metadata frame (≤ n_query_terms rows) is built
     assert sizes and all(s <= 2 for s in sizes), sizes
